@@ -1,25 +1,19 @@
 #!/usr/bin/env python3
-"""Platform-ceiling calibration: what scaling efficiency can ANY Spark job
-evidence on this host at a given core pair?
+"""Host speed index legs: two microbenchmarks that are NOT this engine.
 
-Two microbenchmarks that are NOT this engine, pinned exactly like the
-scaling legs (taskset to the TOP n cores, fixed 192 shuffle partitions,
-AQE off, cold JVM per leg):
-- codegen-only: range -> xxhash64 -> filter -> count (register-bound,
-  no shuffle read beyond the final scalar) — the optimistic ceiling.
-- string shuffle: 60M rows -> groupBy(3M string keys).sum — the
-  pessimistic shuffle-bound floor.
+- codegen: range -> xxhash64 -> filter -> count (register-bound, no
+  shuffle read beyond the final scalar).
+- shuffle: 60M rows -> groupBy(3M string keys).sum (shuffle-bound).
 
-Usage: python BENCH/calibrate.py [pairs]   (default "2,8;4,16")
-Prints one JSON line shaped like BENCH/calibration_round3.json.
+Usage: python BENCH/calibrate.py --leg codegen|shuffle N
+Runs one leg at local[N] (192 shuffle partitions, AQE off) after a small
+warm-up and prints one JSON line {"t": <timed seconds>}. bench.py runs both
+legs at local[8] to build the suite record's host_index.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import shutil
-import subprocess
 import sys
 import time
 
@@ -49,52 +43,26 @@ def leg(kind: str, n: int) -> float:
                 F.xxhash64("id").alias("h")
             ).filter(F.col("h") % 7 == 0).count()
             return time.time() - t0
-        else:
-            base = spark.range(0, 10**6, 1, PARTS).select(
-                F.concat(F.lit("k"), (F.col("id") % 50000).cast("string")).alias("k"),
-                F.col("id").alias("v"),
-            )
-            base.groupBy("k").sum("v").count()
-            t0 = time.time()
-            big = spark.range(0, 6 * 10**7, 1, PARTS).select(
-                F.concat(F.lit("k"), (F.col("id") % 3_000_000).cast("string")).alias("k"),
-                F.col("id").alias("v"),
-            )
-            big.groupBy("k").sum("v").count()
-            return time.time() - t0
+        base = spark.range(0, 10**6, 1, PARTS).select(
+            F.concat(F.lit("k"), (F.col("id") % 50000).cast("string")).alias("k"),
+            F.col("id").alias("v"),
+        )
+        base.groupBy("k").sum("v").count()
+        t0 = time.time()
+        big = spark.range(0, 6 * 10**7, 1, PARTS).select(
+            F.concat(F.lit("k"), (F.col("id") % 3_000_000).cast("string")).alias("k"),
+            F.col("id").alias("v"),
+        )
+        big.groupBy("k").sum("v").count()
+        return time.time() - t0
     finally:
         spark.stop()
 
 
 def main():
-    if "--leg" in sys.argv:
-        i = sys.argv.index("--leg")
-        kind, n = sys.argv[i + 1], int(sys.argv[i + 2])
-        print(json.dumps({"t": leg(kind, n)}))
-        return
-    pairs = (sys.argv[1] if len(sys.argv) > 1 else "2,8;4,16")
-    widths = sorted({int(x) for p in pairs.split(";") for x in p.split(",")})
-    out = {"host": "taskset top-n-core pinned legs, 192 parts, cold JVM each"}
-    total = os.cpu_count() or 32
-    for kind, label in (
-        ("codegen", "spark_codegen_only"),
-        ("shuffle", "spark_string_shuffle_60M_rows_3M_keys"),
-    ):
-        sec = {}
-        for n in widths:
-            cmd = [sys.executable, __file__, "--leg", kind, str(n)]
-            if shutil.which("taskset"):
-                cmd = ["taskset", "-c", f"{total - n}-{total - 1}"] + cmd
-            r = subprocess.run(cmd, capture_output=True, text=True, check=True)
-            sec[n] = round(json.loads(r.stdout.strip().splitlines()[-1])["t"], 2)
-        entry = {f"local{n}_s": sec[n] for n in widths}
-        for p in pairs.split(";"):
-            lo, hi = (int(x) for x in p.split(","))
-            entry[f"eff_{lo}_to_{hi}"] = round(
-                (sec[lo] / sec[hi]) / (hi / lo), 2
-            )
-        out[label] = entry
-    print(json.dumps(out))
+    i = sys.argv.index("--leg")
+    kind, n = sys.argv[i + 1], int(sys.argv[i + 2])
+    print(json.dumps({"t": leg(kind, n)}))
 
 
 if __name__ == "__main__":

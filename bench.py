@@ -1,59 +1,31 @@
 #!/usr/bin/env python3
 """Benchmark entrypoint (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-  {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...},
-   "sf": ..., "docs_per_sec": ..., "n_docs": ...}
+perfbench/ (BENCHMARK.json) is the benchmark of record for docs/sec; this
+file keeps the suite record of BENCH_r01-r05.json comparable.
 
-The north metric (BASELINE.json) is documents/sec through the spatial job
-(corpus scan -> extract -> score -> cell encode -> PIP join -> kNN -> tiles);
-`docs_per_sec` reports it. All sinks are noop (no single-file writes, no
-global sorts inside the timed region).
+`python bench.py` runs the four headline queries at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 corpus) on local[$SPARK_GRAFT_CPUS] (default: every
+core) RUNS times, each in a cold subprocess followed by its own host index
+(BENCH/calibrate.py legs at local[8]), and prints ONE JSON line with the
+per-query medians over the runs whose CPU steal stayed at or below
+MAX_RUN_STEAL_PCT, `docs_per_sec` through the spatial job (scan -> extract
+-> score -> cell encode -> PIP -> kNN -> tiles, noop sinks), `host_index`
+and `suite_over_host_index`.
 
-REPRODUCIBILITY PROTOCOL (round-2 verdict item 1): a single cold run on this
-shared host varies up to ~45% with ambient load (observed 21.8-32 s for an
-identical suite), so `python bench.py` itself runs the suite THREE times in
-fresh subprocesses (cold JVM each — the driver's own protocol) and reports
-the PER-QUERY MEDIANS plus the median total. What this file prints is then
-what a re-run reproduces, ambient noise notwithstanding. Set
-SPARK_GRAFT_BENCH_RUNS=1 for the old single-cold-run behavior.
-
---scaling: run the spatial job at two parallelism levels in fresh
-taskset-pinned subprocesses and report throughput at both + efficiency
-(t_lo/t_hi)/(n_hi/n_lo) — the sandbox protocol for the north_rule's N->4N
-criterion (see BENCH/BASELINE.md). Round-3: 192 fixed shuffle partitions
-(fine tasks smooth stragglers; the 96-part default failed 2 of 5 round-2
-samples on straggler noise). Round-5 (round-4 verdict item 1): legs run
-INTERLEAVED in ABBA blocks (lo,hi,hi,lo), each block yielding two
-efficiency samples from TIME-ADJACENT leg pairs — the measured monotone
-per-core host drift (round 4: the 2-core leg sped up 17% across a session,
-mechanically dragging the ratio) lands symmetrically in both pairs of a
-block and cancels in the median. The wide platform-ceiling pair (4,16) is
-reported once alongside as calibration context.
-
-Scaling harvest mode (round-5): on a host that flaps faster than a leg
-(retake3: four aborts, each first leg 5-9% demanded steal behind a clean 5 s
-probe), set SPARK_GRAFT_SCALING_RETRY_PAIRS=k to void only the CURRENT pair
-on a polluted leg and retry it (up to k times across the session), keeping
-every clean pair already measured; SPARK_GRAFT_SCALING_WALL_MIN bounds the
-total session. SPARK_GRAFT_SCALING_PAIR_CEILING=1 additionally stamps each
-pair with the same-moment codegen platform ceiling (two ~30 s calibrate legs
-run immediately before the pair) and records efficiency_over_ceiling — the
-fraction of the platform's own scaling the job achieved at that moment,
-which stays put while the host's absolute ceiling flaps.
-
-Host normalization (round-4 verdict item 2): the suite record additionally
-carries host_index (same-day BENCH/calibrate.py legs at local[8]) and
-suite_over_host_index = suite seconds / composite — the quantity that stays
-put when this VM's absolute speed moves 20% between sessions. Disable with
-SPARK_GRAFT_HOST_INDEX=0.
+`python bench.py --scaling` is the N -> 4N check: the spatial job at
+local[n/4] and local[n] (n = $SPARK_GRAFT_CPUS) in pinned cold subprocesses
+with SCALING_PARTS fixed shuffle partitions, as SCALING_PAIRS lo/hi pairs in
+alternating order (AB, BA, AB) so steady host drift lands on both widths.
+Each pair's efficiency is (t_lo / t_hi) / (n_hi / n_lo); the value is their
+median, and every leg records its CPU steal.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -62,7 +34,15 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+# the tiny corpus that warms codegen and Python workers before a timed pass
+WARM_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+
+RUNS = 3
+MAX_RUN_STEAL_PCT = 5.0
+HOST_INDEX_WIDTH = 8  # local[8]: keeps *_local8_s comparable with r01-r05
+SCALING_PAIRS = 3
+SCALING_PARTS = 192  # fine tasks smooth stragglers at both widths
 
 
 def _noop(df):
@@ -78,15 +58,10 @@ def spatial_job(spark, sf_dir):
         knn_nearest, knn_release, pip_join,
     )
     from wikipedia_wikidata_spark.operators.tiles import tile_importance
-    from wikipedia_wikidata_spark.plans.importance import build_scored
+    from wikipedia_wikidata_spark.plans.importance import build_scored, geo_points
 
     sc, v = build_scored(spark, sf_dir)
-    ep = sc.filter(
-        F.col("wd_page_title").isNotNull() & F.col("lat").isNotNull()
-    ).select(
-        "language", "title", F.col("wd_page_title").alias("wikidata_id"),
-        "lat", "lon", "importance",
-    )
+    ep = geo_points(sc)
     ep = ep.withColumn("cell_r7", make_cell_udf(7)(F.col("lat"), F.col("lon")))
     ep = ep.withColumn("s2", make_morton_udf()(F.col("lat"), F.col("lon")))
     ep.persist()  # materialized by the first consumer; no extra count() job
@@ -118,9 +93,9 @@ def run_suite(master: str, sf_dir: str) -> dict:
 
         # warm codegen/Python-UDF workers on the tiny corpus so the timed
         # region measures the job, not JIT (same protocol as --scaling)
-        if os.path.normpath(sf_dir) != "/root/testdata/sf0.001":
-            _noop(run_importance(spark, "/root/testdata/sf0.001"))
-            spatial_job(spark, "/root/testdata/sf0.001")
+        if os.path.normpath(sf_dir) != os.path.normpath(WARM_SF_DIR):
+            _noop(run_importance(spark, WARM_SF_DIR))
+            spatial_job(spark, WARM_SF_DIR)
 
         queries = {}
         t0 = time.time()
@@ -146,6 +121,24 @@ def run_suite(master: str, sf_dir: str) -> dict:
         spark.stop()
 
 
+def run_spatial(master: str, sf_dir: str) -> dict:
+    """One cold, codegen-warmed pass of the spatial job at SCALING_PARTS."""
+    from wikipedia_wikidata_spark.session import get_spark
+
+    n_docs = _corpus_docs(sf_dir)
+    spark = get_spark("wws-scaling", master=master,
+                      shuffle_partitions=SCALING_PARTS, aqe=False)
+    try:
+        spatial_job(spark, WARM_SF_DIR)
+        t0 = time.time()
+        spatial_job(spark, sf_dir)
+        dt = time.time() - t0
+    finally:
+        spark.stop()
+    return {"t_spatial_sec": round(dt, 2), "docs_per_sec": round(n_docs / dt, 1),
+            "n_docs": n_docs, "master": master}
+
+
 def _corpus_docs(sf_dir: str) -> int:
     from wikipedia_wikidata_spark.sources.synth import ensure_spans_data
 
@@ -157,14 +150,9 @@ def _corpus_docs(sf_dir: str) -> int:
     ).fetchone()[0])
 
 
-def _cpu_counters() -> tuple[int, int] | None:
-    """(steal_ticks, total_ticks) from /proc/stat — hypervisor CPU steal.
-
-    Round-5 finding: this VM's 'flapping' (identical code 19 s -> 218 s
-    across hours) correlates with nonzero steal time, i.e. the hypervisor
-    scheduling other tenants onto our cores. Recording Δsteal/Δtotal per
-    timed leg makes the platform attribution a measured quantity in every
-    artifact instead of an inference from microbenchmark drift."""
+def _cpu_counters() -> tuple[int, int, int] | None:
+    """(steal, idle+iowait, total) ticks from /proc/stat. Steal is time a
+    vCPU was runnable while the hypervisor ran another tenant."""
     try:
         with open("/proc/stat") as f:
             parts = f.readline().split()
@@ -177,11 +165,8 @@ def _cpu_counters() -> tuple[int, int] | None:
 
 
 def _steal_pct(before, after) -> float | None:
-    """Stolen fraction of DEMANDED cpu: Δsteal / (Δtotal − Δidle−iowait).
-    Steal ticks count vCPU-runnable-but-hypervisor-ran-someone-else, so
-    dividing by demanded (busy + stolen) time reads as 'of the CPU this box
-    asked for, how much did the hypervisor give away' — on a mostly-idle
-    32-core box a raw Δsteal/Δtotal hides a large per-core effect."""
+    """Stolen share of DEMANDED cpu: Δsteal / (Δtotal − Δidle−iowait). On a
+    mostly idle box a raw Δsteal/Δtotal would hide a large per-core effect."""
     if not before or not after or after[2] <= before[2]:
         return None
     demanded = (after[2] - before[2]) - (after[1] - before[1])
@@ -190,65 +175,46 @@ def _steal_pct(before, after) -> float | None:
     return round(100.0 * (after[0] - before[0]) / demanded, 2)
 
 
-def _leg_polluted(leg_rec: dict, max_steal_pct: float) -> bool:
-    """True when a completed leg's own steal stamp labels it platform-noise.
+def _pin(cmd: list[str], n: int) -> list[str]:
+    """`cmd` pinned by taskset to the top min(n, nproc) cores: the whole
+    process tree (executor, JVM GC/JIT and Python worker threads) then runs
+    on them, away from the low cores that system daemons favour."""
+    if not shutil.which("taskset"):
+        return cmd
+    total = os.cpu_count() or 1
+    n = max(1, min(n, total))
+    return ["taskset", "-c", f"{total - n}-{total - 1}", *cmd]
 
-    Round-5 finding this encodes: the retake block passed the 0.844
-    calibrate gate at launch and then flapped — six of eight legs ran at
-    6.8–22.8% demanded steal and the whole ~76-minute session was wasted
-    (BENCH/scaling_round5_retake.json). A pre-gate cannot certify the
-    following half hour on a host that flaps sub-minute; the per-leg stamp
-    is the first signal that CAN, so act on it immediately instead of
-    finishing a block the protocol will have to discard anyway.
-    """
-    if max_steal_pct <= 0:
-        return False
-    sp = leg_rec.get("cpu_steal_pct")
-    return sp is not None and sp > max_steal_pct
+
+def _run_json(cmd: list[str], timeout: float | None = None) -> dict:
+    """Run `cmd` and parse the JSON object on its last stdout line."""
+    r = subprocess.run(cmd, capture_output=True, text=True, check=True,
+                       timeout=timeout)
+    return json.loads(r.stdout.strip().splitlines()[-1])
 
 
 def run_bench(master: str, sf_dir: str) -> dict:
-    """Median of SPARK_GRAFT_BENCH_RUNS (default 3) cold suite passes."""
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    """Median of RUNS cold suite passes, each paired with its host index."""
     n_docs = _corpus_docs(sf_dir)  # also pre-generates the corpus, untimed
     samples: list[dict] = []
     indices: list[dict] = []
     steals: list[float | None] = []
-    if n_runs <= 1:
-        samples.append(run_suite(master, sf_dir))
+    # Each suite pass is followed by its own host-index legs: a suite pass
+    # and its calibration share one host state, so their RATIO stays put
+    # when the VM's absolute speed moves between runs.
+    for _ in range(RUNS):
+        c0 = _cpu_counters()
+        samples.append(_run_json(
+            [sys.executable, __file__, "--suite-json", master, sf_dir]))
+        steals.append(_steal_pct(c0, _cpu_counters()))
         hi = _host_index()
         if hi:
             indices.append(hi)
-    else:
-        # PAIR each suite pass with its own same-moment host-index legs
-        # (round-5): on a flapping host (BENCH/BASELINE.md "flap-day"
-        # section — cold runs 69/40/27 s within ten minutes) a single
-        # host_index sampled at one moment normalizes nothing; a
-        # suite-then-calibration pair shares one host state and their
-        # RATIO stays put. The recorded quantity is the median per-pair
-        # ratio — the ABBA move applied to the suite record.
-        for _ in range(n_runs):
-            c0 = _cpu_counters()
-            r = subprocess.run(
-                [sys.executable, __file__, "--suite-json", master, sf_dir],
-                capture_output=True, text=True, check=True,
-            )
-            steals.append(_steal_pct(c0, _cpu_counters()))
-            samples.append(json.loads(r.stdout.strip().splitlines()[-1]))
-            hi = _host_index()
-            if hi:
-                indices.append(hi)
-    # Steal-aware headline (round-5): a cold run whose own /proc/stat stamp
-    # shows the hypervisor took >threshold of demanded CPU measures the
-    # noisy neighbor, not the engine — measured same-session: 111 s at 34%
-    # steal vs 26.8 s at 1.8% on identical code/data. Medians are taken
-    # over the CLEAN runs when any exist; every run's total and stamp stays
-    # in the artifact so the selection is auditable. 0 disables.
-    max_run_steal = float(os.environ.get("SPARK_GRAFT_SUITE_MAX_RUN_STEAL", "5.0"))
+    # A run whose own steal stamp exceeds the threshold measures the noisy
+    # neighbour, not the engine (111 s at 34% steal vs 26.8 s at 1.8% on
+    # identical code and data); every run stays in the record for audit.
     clean_idx = [
-        i for i in range(len(samples))
-        if max_run_steal <= 0 or i >= len(steals) or steals[i] is None
-        or steals[i] <= max_run_steal
+        i for i, sp in enumerate(steals) if sp is None or sp <= MAX_RUN_STEAL_PCT
     ]
     all_polluted = not clean_idx
     if all_polluted:
@@ -259,7 +225,6 @@ def run_bench(master: str, sf_dir: str) -> dict:
         for k in samples[0]
     }
     total = round(sum(queries.values()), 3)
-    t_spatial = queries["spatial_join_tiles"]
     from wikipedia_wikidata_spark.config import sf_of
 
     out = {
@@ -269,7 +234,7 @@ def run_bench(master: str, sf_dir: str) -> dict:
         "queries": queries,
         "sf": sf_of(sf_dir),  # handles spans_* dirs and suffixed names too
         "n_docs": n_docs,
-        "docs_per_sec": round(n_docs / t_spatial, 1),
+        "docs_per_sec": round(n_docs / queries["spatial_join_tiles"], 1),
         "master": master,
         "runs": len(samples),
         "clean_runs": 0 if all_polluted else len(clean_idx),
@@ -282,8 +247,8 @@ def run_bench(master: str, sf_dir: str) -> dict:
             round(sum(s.values()) / h["composite_s"], 3)
             for s, h in zip(samples, indices)
         ]
-        # median per-pair ratio over the same clean subset (flap-robust);
-        # the last index is also kept whole for absolute-seconds context
+        # median per-run ratio over the same clean subset; the last index
+        # is also kept whole for absolute-seconds context
         out["host_index"] = indices[-1]
         out["host_index_per_run"] = [h["composite_s"] for h in indices]
         out["ratios_per_run"] = ratios
@@ -295,331 +260,76 @@ def run_bench(master: str, sf_dir: str) -> dict:
 
 
 def _host_index() -> dict | None:
-    """Same-day host speed index (round-4 verdict item 2): the two
-    BENCH/calibrate.py microbenchmark legs at local[8], pinned like the
-    scaling legs. suite_seconds / composite_s is the drift-robust record —
-    this VM's absolute speed moved ~20% between sessions twice, so an
-    absolute-seconds band cannot converge but the ratio can. Returns None
-    (and the record omits the keys) when calibration can't run."""
-    if os.environ.get("SPARK_GRAFT_HOST_INDEX", "1") == "0":
-        return None
-    import shutil
-
+    """Same-moment host speed index: BENCH/calibrate.py's codegen and
+    shuffle legs at local[8], pinned to the top `pinned_cores` =
+    min(8, nproc) cores. Suite seconds / composite_s stays comparable when
+    the VM's absolute speed moves. None when calibration fails."""
     calib = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH", "calibrate.py"
     )
+    out: dict = {"pinned_cores": min(HOST_INDEX_WIDTH, os.cpu_count() or 1)}
     try:
-        out = {}
-        total_cores = os.cpu_count() or 32
         for kind in ("codegen", "shuffle"):
-            cmd = [sys.executable, calib, "--leg", kind, "8"]
-            if shutil.which("taskset"):
-                cmd = ["taskset", "-c", f"{total_cores - 8}-{total_cores - 1}"] + cmd
-            r = subprocess.run(
-                cmd, capture_output=True, text=True, check=True, timeout=900
-            )
-            out[f"{kind}_local8_s"] = round(
-                json.loads(r.stdout.strip().splitlines()[-1])["t"], 2
-            )
-        out["composite_s"] = round(
-            out["codegen_local8_s"] + out["shuffle_local8_s"], 2
-        )
-        return out
-    except Exception:
+            cmd = [sys.executable, calib, "--leg", kind, str(HOST_INDEX_WIDTH)]
+            t = _run_json(_pin(cmd, HOST_INDEX_WIDTH), timeout=900)["t"]
+            out[f"{kind}_local8_s"] = round(t, 2)
+    except (OSError, subprocess.SubprocessError, ValueError, KeyError):
         return None
-
-
-def _codegen_pair_ceiling(n_lo: int, n_hi: int) -> tuple[float | None, dict | None]:
-    """Same-moment platform scaling ceiling: the BENCH/calibrate.py codegen
-    microbenchmark (register-bound loop, no shuffle/disk/GC) run at both leg
-    widths, pinned like the job legs; ~60 s total. No Spark job can scale
-    better than this pair's ratio at the moment it runs. Measured per PAIR
-    (round-5): the host flaps sub-minute, so a session-start ceiling says
-    nothing about a pair measured 40 minutes later — a ceiling stamped next
-    to each pair turns 'the platform did it' into a per-sample quantity
-    (efficiency_over_ceiling) instead of a day-level inference."""
-    calib = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH", "calibrate.py")
-    import shutil as _sh
-    total_cores = os.cpu_count() or 32
-    sec: dict[int, float] = {}
-    try:
-        for n in (n_lo, n_hi):
-            cmd = [sys.executable, calib, "--leg", "codegen", str(n)]
-            if _sh.which("taskset"):
-                cmd = ["taskset", "-c",
-                       f"{total_cores - n}-{total_cores - 1}"] + cmd
-            r = subprocess.run(cmd, capture_output=True, text=True,
-                               check=True, timeout=900)
-            sec[n] = json.loads(r.stdout.strip().splitlines()[-1])["t"]
-        ceiling = round((sec[n_lo] / sec[n_hi]) / (n_hi / n_lo), 3)
-        return ceiling, {str(n): round(sec[n], 2) for n in sec}
-    except Exception:
-        return None, None
+    out["composite_s"] = round(
+        out["codegen_local8_s"] + out["shuffle_local8_s"], 2
+    )
+    return out
 
 
 def _scaling_leg(n: int, sf_dir: str) -> dict:
-    """One pinned cold subprocess at local[n]; returns its JSON line."""
+    """One pinned cold `--spatial-only` subprocess at local[n], steal-stamped."""
     cmd = [sys.executable, __file__, "--spatial-only", f"local[{n}]", sf_dir]
-    import shutil as _sh
-    if _sh.which("taskset"):
-        # taskset pins the WHOLE process tree (executor threads, JVM GC and
-        # JIT threads, Python UDF workers) to exactly n cores — without it a
-        # local[2] JVM still runs ~32 GC/JIT threads on the idle cores and
-        # the measured efficiency is meaningless. Pin to the TOP n cores:
-        # system daemons and any harness processes favor low-numbered cores,
-        # and a leg pinned to cores 0..n-1 absorbs all of that external load
-        # (observed: a 2-core leg at 380s vs 695s purely from host-side
-        # activity on cores 0-1).
-        total = os.cpu_count() or 32
-        cmd = ["taskset", "-c", f"{total - n}-{total - 1}"] + cmd
     c0 = _cpu_counters()
-    r = subprocess.run(cmd, capture_output=True, text=True, check=True)
-    out = json.loads(r.stdout.strip().splitlines()[-1])
-    sp = _steal_pct(c0, _cpu_counters())
-    if sp is not None:
-        out["cpu_steal_pct"] = sp
+    out = _run_json(_pin(cmd, n))
+    out["cpu_steal_pct"] = _steal_pct(c0, _cpu_counters())
     return out
+
+
+def run_scaling(sf_dir: str) -> dict:
+    """SCALING_PAIRS alternating (local[CPUS/4], local[CPUS]) leg pairs."""
+    n_lo, n_hi = max(1, CPUS // 4), CPUS
+    samples: list[dict] = []
+    legs: list[dict] = []
+    for i in range(SCALING_PAIRS):
+        order = "AB" if i % 2 == 0 else "BA"
+        t = {}
+        for n in ((n_lo, n_hi) if order == "AB" else (n_hi, n_lo)):
+            leg = _scaling_leg(n, sf_dir)
+            legs.append({"n": n, **leg})
+            t[n] = leg["t_spatial_sec"]
+        samples.append({
+            "order": order,
+            f"t_local{n_lo}_sec": t[n_lo],
+            f"t_local{n_hi}_sec": t[n_hi],
+            "efficiency": round((t[n_lo] / t[n_hi]) / (n_hi / n_lo), 3),
+        })
+    return {
+        "metric": "scaling_efficiency", "unit": "ratio", "sf_dir": sf_dir,
+        "parts": SCALING_PARTS,
+        "headline_pair": f"{n_lo},{n_hi}",
+        "value": statistics.median(s["efficiency"] for s in samples),
+        "samples": samples,
+        "legs": legs,
+        "n_docs": legs[0]["n_docs"],
+    }
 
 
 def main():
     if "--scaling" in sys.argv:
-        # N -> 4N protocol: the same spatial job, same input, two thread
-        # counts, IDENTICAL plan (fixed shuffle partitions), codegen warmed
-        # on sf0.001 first so the measured region is the job, not JIT.
-        # Headline pair 2->8 (platform calibration in BENCH/BASELINE.md:
-        # the widest pair where ANY shuffle-bearing Spark job can physically
-        # evidence >=0.8 on this host); legs run in ABBA blocks
-        # (lo,hi,hi,lo) x SPARK_GRAFT_SCALING_BLOCKS, each block yielding
-        # two efficiency samples from time-adjacent pairs, so session-long
-        # monotone host drift cancels pairwise (round-4 verdict item 1).
-        # The wide 4->16 platform-ceiling pair runs once as context.
-        sf_dir = os.environ.get("SPARK_GRAFT_SCALING_SF_DIR", "/root/testdata/sf4")
-        n_lo, n_hi = (int(x) for x in os.environ.get(
-            "SPARK_GRAFT_SCALING_PAIR", "2,8").split(","))
-        blocks = int(os.environ.get("SPARK_GRAFT_SCALING_BLOCKS", "3"))
-        # Calibrate-first gate (round-5): the codegen-only microbenchmark is
-        # the host-day's scaling CEILING — a register-bound loop with no
-        # shuffle, disk or GC. Measured host-days ranged 0.57-0.89 at 2->8
-        # on IDENTICAL code; below ~0.8 the >=0.8 gate is unreachable by ANY
-        # job and an ABBA session is wasted. Refuse to burn hours on such a
-        # day unless explicitly overridden (SPARK_GRAFT_SCALING_MIN_CEILING,
-        # 0 disables).
-        min_ceiling = float(os.environ.get("SPARK_GRAFT_SCALING_MIN_CEILING", "0.8"))
-        ceiling = None
-        if min_ceiling > 0:
-            ceiling, ceiling_legs = _codegen_pair_ceiling(n_lo, n_hi)
-            if ceiling is not None and ceiling < min_ceiling:
-                print(json.dumps({
-                    "metric": "scaling_efficiency", "unit": "ratio",
-                    "skipped": "host-day codegen ceiling below gate",
-                    "codegen_ceiling": ceiling,
-                    "min_ceiling": min_ceiling,
-                    "codegen_legs_s": ceiling_legs,
-                }))
-                return
-        # Abort-on-pollution: a leg whose OWN steal stamp exceeds this
-        # threshold ends the session at once (the artifact self-labels as
-        # aborted and the watcher retries), spending ~one leg instead of
-        # the rest of a block the protocol would discard. 0 disables.
-        max_leg_steal = float(os.environ.get(
-            "SPARK_GRAFT_SCALING_MAX_LEG_STEAL", "5.0"))
-        t0 = time.time()
-        legs: list[dict] = []
-
-        class _Polluted(Exception):
-            pass
-
-        def leg(n: int) -> dict:
-            r = _scaling_leg(n, sf_dir)
-            r["n"] = n
-            r["at_min"] = round((time.time() - t0) / 60.0, 1)
-            legs.append(r)
-            if _leg_polluted(r, max_leg_steal):
-                raise _Polluted
-            return r
-
-        # Discarded warmup legs (round-5 fresh-boot lesson): the codegen
-        # warm pass inside each leg warms JIT, not the OS page cache over
-        # the ~2M-doc sf4 input — a session's very FIRST narrow leg on a
-        # cold host ran 12% slower than the session band and inflated its
-        # pair's efficiency to a not-counted 0.855. One discarded leg at
-        # EACH width before block 1 pre-faults the input once per width so
-        # every counted leg starts page-warm. Stamped warmup=true in the
-        # artifact, excluded from samples, drift and width-trend stats.
-        warmup_legs = int(os.environ.get(
-            "SPARK_GRAFT_SCALING_WARMUP_LEGS", "0"))
-        for _ in range(warmup_legs):
-            for n in (n_lo, n_hi):
-                r = _scaling_leg(n, sf_dir)
-                r["n"] = n
-                r["at_min"] = round((time.time() - t0) / 60.0, 1)
-                r["warmup"] = True
-                if _leg_polluted(r, max_leg_steal):
-                    r["polluted"] = True  # visibility only; discarded anyway
-                legs.append(r)
-
-        samples = []
-
-        def pair(b: int, tag: str, tl: dict, th: dict,
-                 ceil_now: float | None = None) -> None:
-            eff = round(
-                (tl["t_spatial_sec"] / th["t_spatial_sec"]) / (n_hi / n_lo), 3)
-            s = {
-                "block": b + 1, "order": tag,
-                f"t_local{n_lo}_sec": tl["t_spatial_sec"],
-                f"t_local{n_hi}_sec": th["t_spatial_sec"],
-                "efficiency": eff,
-            }
-            if ceil_now is not None:
-                # the platform ceiling measured immediately before this
-                # pair's legs: efficiency_over_ceiling is what fraction of
-                # the same-moment platform scaling the JOB achieved — the
-                # quantity that stays put while the host flaps
-                s["ceiling_same_moment"] = ceil_now
-                s["efficiency_over_ceiling"] = round(eff / ceil_now, 3)
-            samples.append(s)
-
-        # Harvest mode (round-5): on a host that flaps faster than a leg, a
-        # polluted leg should void only the CURRENT pair, not the session —
-        # retake3 burned 4 aborts x (probe wait + one 10-min leg) and kept
-        # nothing. SPARK_GRAFT_SCALING_RETRY_PAIRS > 0 re-runs the voided
-        # pair (polluted legs stay in the artifact, stamped) until the
-        # target pair count is reached, the retry budget is spent, or the
-        # wall budget (SPARK_GRAFT_SCALING_WALL_MIN, 0 = off) expires.
-        # Orders still strictly alternate AB,BA,... by COMPLETED pair count,
-        # so the drift cancellation of the ABBA design is preserved.
-        retry_budget = int(os.environ.get("SPARK_GRAFT_SCALING_RETRY_PAIRS", "0"))
-        wall_min = float(os.environ.get("SPARK_GRAFT_SCALING_WALL_MIN", "0"))
-        per_pair_ceiling = os.environ.get(
-            "SPARK_GRAFT_SCALING_PAIR_CEILING", "0") == "1"
-        target_pairs = blocks * 2
-        retries_spent = 0
-        aborted = None
-        stopped = None
-        while len(samples) < target_pairs:
-            if wall_min > 0 and (time.time() - t0) / 60.0 > wall_min:
-                stopped = "wall budget reached"
-                break
-            idx = len(samples)
-            tag = "AB" if idx % 2 == 0 else "BA"
-            ceil_now = (_codegen_pair_ceiling(n_lo, n_hi)[0]
-                        if per_pair_ceiling else None)
-            try:
-                if tag == "AB":
-                    tl, th = leg(n_lo), leg(n_hi)
-                else:
-                    th, tl = leg(n_hi), leg(n_lo)
-            except _Polluted:
-                legs[-1]["polluted"] = True
-                if retries_spent >= retry_budget:
-                    aborted = {
-                        "aborted": "leg cpu steal above threshold",
-                        "max_leg_steal_pct": max_leg_steal,
-                        "polluted_leg": {k: legs[-1][k] for k in
-                                         ("n", "t_spatial_sec", "at_min",
-                                          "cpu_steal_pct") if k in legs[-1]},
-                    }
-                    break
-                retries_spent += 1
-                continue
-            pair(idx // 2, tag, tl, th, ceil_now)
-        lo_times = [r["t_spatial_sec"] for r in legs
-                    if r["n"] == n_lo and not r.get("polluted")
-                    and not r.get("warmup")]
-        out = {
-            "metric": "scaling_efficiency", "unit": "ratio", "sf_dir": sf_dir,
-            "parts": int(os.environ.get("SPARK_GRAFT_SCALING_PARTS", "192")),
-            "protocol": (
-                f"interleaved ABBA blocks ({n_lo},{n_hi},{n_hi},{n_lo}) x "
-                f"{blocks}; per-pair efficiencies from time-adjacent legs"
-                + ("; polluted pairs retried" if retry_budget else "")
-                + ("; per-pair codegen ceiling" if per_pair_ceiling else "")
-                + (f"; {warmup_legs} discarded warmup leg(s)"
-                   if warmup_legs else "")
-            ),
-            "headline_pair": f"{n_lo},{n_hi}",
-            "value": (round(statistics.median(
-                s["efficiency"] for s in samples), 3) if samples else None),
-            "samples": samples,
-            "legs": [
-                {k: r[k] for k in
-                 ("n", "t_spatial_sec", "docs_per_sec", "at_min",
-                  "cpu_steal_pct", "polluted", "warmup") if k in r}
-                for r in legs
-            ],
-            "codegen_ceiling_same_day": ceiling,
-        }
-        normed = [s["efficiency_over_ceiling"] for s in samples
-                  if "efficiency_over_ceiling" in s]
-        if normed:
-            out["value_over_ceiling"] = round(statistics.median(normed), 3)
-        if len(lo_times) >= 2:
-            out["lo_leg_drift_first_to_last"] = round(
-                lo_times[-1] / lo_times[0], 3)
-        if legs:
-            out["n_docs"] = legs[0]["n_docs"]
-        if retries_spent:
-            out["pairs_retried"] = retries_spent
-        if stopped:
-            out["stopped"] = stopped
-        if aborted:
-            out.update(aborted)
-        wide = os.environ.get("SPARK_GRAFT_SCALING_WIDE", "4,16")
-        if wide and not aborted and not stopped:
-            w_lo, w_hi = (int(x) for x in wide.split(","))
-            try:
-                rl, rh = leg(w_lo), leg(w_hi)
-                out["wide_pair"] = {
-                    "pair": wide,
-                    "efficiency": round(
-                        (rl["t_spatial_sec"] / rh["t_spatial_sec"])
-                        / (w_hi / w_lo), 3),
-                    f"t_local{w_lo}_sec": rl["t_spatial_sec"],
-                    f"t_local{w_hi}_sec": rh["t_spatial_sec"],
-                }
-            except _Polluted:
-                legs[-1]["polluted"] = True
-                out["wide_pair"] = {"pair": wide, "polluted": True}
-        print(json.dumps(out))
-        return
-    if "--spatial-only" in sys.argv:
+        print(json.dumps(run_scaling(SF_DIR)))
+    elif "--spatial-only" in sys.argv:
         i = sys.argv.index("--spatial-only")
-        master, sf_dir = sys.argv[i + 1], sys.argv[i + 2]
-        from wikipedia_wikidata_spark.session import get_spark
-
-        n_docs = _corpus_docs(sf_dir)
-        # fixed partition count for BOTH parallelism levels (identical
-        # plan). Default 192 (round-3): multi-wave fine tasks load-balance
-        # stragglers, which otherwise tax the wide run disproportionately —
-        # at 96 parts, 2 of 5 round-2 samples missed the 0.8 gate on
-        # straggler noise alone; 192 measured 0.891 with margin.
-        parts = int(os.environ.get("SPARK_GRAFT_SCALING_PARTS", "192"))
-        spark = get_spark("wws-scaling", master=master, shuffle_partitions=parts, aqe=False)
-        try:
-            spatial_job(spark, "/root/testdata/sf0.001")  # warm codegen/UDFs
-            t0 = time.time()
-            spatial_job(spark, sf_dir)
-            dt = time.time() - t0
-            print(json.dumps({
-                "t_spatial_sec": round(dt, 2),
-                "docs_per_sec": round(n_docs / dt, 1),
-                "n_docs": int(n_docs),
-                "master": master,
-            }))
-        finally:
-            spark.stop()
-        return
-    if "--suite-json" in sys.argv:
+        print(json.dumps(run_spatial(sys.argv[i + 1], sys.argv[i + 2])))
+    elif "--suite-json" in sys.argv:
         i = sys.argv.index("--suite-json")
-        master, sf_dir = sys.argv[i + 1], sys.argv[i + 2]
-        print(json.dumps(run_suite(master, sf_dir)))
-        return
-    if "--single" in sys.argv:
-        master = sys.argv[sys.argv.index("--single") + 1]
+        print(json.dumps(run_suite(sys.argv[i + 1], sys.argv[i + 2])))
     else:
-        master = f"local[{CPUS}]"
-    print(json.dumps(run_bench(master, SF_DIR)))
+        print(json.dumps(run_bench(f"local[{CPUS}]", SF_DIR)))
 
 
 if __name__ == "__main__":

@@ -1,4 +1,4 @@
-"""Unit tests for bench.py's host-state instrumentation (pure helpers)."""
+"""Unit tests for bench.py's helpers and its suite and scaling records."""
 
 from __future__ import annotations
 
@@ -24,226 +24,8 @@ def test_steal_pct_none_on_no_demand_or_no_elapsed():
     assert bench._steal_pct((0, 0, 0), None) is None
 
 
-def test_leg_polluted_threshold_and_disable():
-    # retake-day legs: 16.52% steal trips the default 5% threshold
-    assert bench._leg_polluted({"cpu_steal_pct": 16.52}, 5.0)
-    # record-day-clean leg passes
-    assert not bench._leg_polluted({"cpu_steal_pct": 0.95}, 5.0)
-    # boundary is strict: exactly-at-threshold passes
-    assert not bench._leg_polluted({"cpu_steal_pct": 5.0}, 5.0)
-    # no stamp (non-Linux /proc/stat) -> never aborts
-    assert not bench._leg_polluted({}, 5.0)
-    # 0 disables the abort entirely, however dirty the leg
-    assert not bench._leg_polluted({"cpu_steal_pct": 44.0}, 0.0)
-
-
-def test_scaling_abort_plumbing(monkeypatch, capsys):
-    """A polluted leg ends the session with a self-labeled artifact.
-
-    Drives bench.main()'s --scaling branch with a fake _scaling_leg whose
-    third leg carries a retake-day steal stamp: the run must stop there
-    (3 legs, not 8+wide), keep the one complete AB sample, and label
-    itself aborted with the offending leg attached.
-    """
-    import json
-
-    calls = []
-
-    def fake_leg(n, sf_dir):
-        calls.append(n)
-        steal = 20.0 if len(calls) == 3 else 0.5
-        t = 100.0 if n == 2 else 30.0
-        return {"t_spatial_sec": t, "docs_per_sec": 1000.0 / t,
-                "n_docs": 1000, "cpu_steal_pct": steal}
-
-    monkeypatch.setattr(bench, "_scaling_leg", fake_leg)
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_MIN_CEILING", "0")  # no gate legs
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_WIDE", "")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_BLOCKS", "2")
-    monkeypatch.setattr(sys, "argv", ["bench.py", "--scaling"])
-    bench.main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert calls == [2, 8, 8]  # stopped at the polluted third leg
-    assert out["aborted"] == "leg cpu steal above threshold"
-    assert out["polluted_leg"]["cpu_steal_pct"] == 20.0
-    assert out["polluted_leg"]["n"] == 8
-    # the one complete time-adjacent pair survives as a sample
-    assert len(out["samples"]) == 1
-    assert out["samples"][0]["efficiency"] == round((100.0 / 30.0) / 4, 3)
-    assert out["value"] == out["samples"][0]["efficiency"]
-    assert "wide_pair" not in out
-
-
-def test_scaling_clean_run_has_no_abort_keys(monkeypatch, capsys):
-    import json
-
-    def fake_leg(n, sf_dir):
-        t = 100.0 if n == 2 else 30.0
-        return {"t_spatial_sec": t, "docs_per_sec": 1000.0 / t,
-                "n_docs": 1000, "cpu_steal_pct": 0.4}
-
-    monkeypatch.setattr(bench, "_scaling_leg", fake_leg)
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_MIN_CEILING", "0")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_WIDE", "")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_BLOCKS", "1")
-    monkeypatch.setattr(sys, "argv", ["bench.py", "--scaling"])
-    bench.main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert "aborted" not in out and "polluted_leg" not in out
-    assert len(out["samples"]) == 2 and out["value"] is not None
-
-
-def test_scaling_harvest_retries_polluted_pairs(monkeypatch, capsys):
-    """RETRY_PAIRS>0: a polluted leg voids only its pair; the session keeps
-    harvesting until the target pair count is reached. Orders must still
-    alternate AB,BA by COMPLETED pairs (drift cancellation), polluted legs
-    stay in the artifact stamped, and the retry count is recorded."""
-    import json
-
-    calls = []
-
-    def fake_leg(n, sf_dir):
-        calls.append(n)
-        # 3rd overall leg (first leg of the BA pair, n=8) is polluted once
-        steal = 20.0 if len(calls) == 3 else 0.5
-        t = 100.0 if n == 2 else 30.0
-        return {"t_spatial_sec": t, "docs_per_sec": 1000.0 / t,
-                "n_docs": 1000, "cpu_steal_pct": steal}
-
-    monkeypatch.setattr(bench, "_scaling_leg", fake_leg)
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_MIN_CEILING", "0")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_WIDE", "")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_BLOCKS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_RETRY_PAIRS", "2")
-    monkeypatch.setattr(sys, "argv", ["bench.py", "--scaling"])
-    bench.main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    # AB(2,8) clean; BA starts 8 -> polluted -> retried as BA(8,2) clean
-    assert calls == [2, 8, 8, 8, 2]
-    assert "aborted" not in out
-    assert out["pairs_retried"] == 1
-    assert len(out["samples"]) == 2
-    assert [s["order"] for s in out["samples"]] == ["AB", "BA"]
-    assert out["value"] == round((100.0 / 30.0) / 4, 3)
-    polluted = [l for l in out["legs"] if l.get("polluted")]
-    assert len(polluted) == 1 and polluted[0]["cpu_steal_pct"] == 20.0
-    # drift ratio uses CLEAN lo legs only
-    assert out["lo_leg_drift_first_to_last"] == 1.0
-
-
-def test_scaling_harvest_exhausted_budget_keeps_pairs(monkeypatch, capsys):
-    """When the retry budget runs out the artifact self-labels aborted but
-    keeps every clean pair already harvested."""
-    import json
-
-    calls = []
-
-    def fake_leg(n, sf_dir):
-        calls.append(n)
-        steal = 20.0 if len(calls) >= 3 else 0.5
-        t = 100.0 if n == 2 else 30.0
-        return {"t_spatial_sec": t, "docs_per_sec": 1000.0 / t,
-                "n_docs": 1000, "cpu_steal_pct": steal}
-
-    monkeypatch.setattr(bench, "_scaling_leg", fake_leg)
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_MIN_CEILING", "0")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_WIDE", "")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_BLOCKS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_RETRY_PAIRS", "1")
-    monkeypatch.setattr(sys, "argv", ["bench.py", "--scaling"])
-    bench.main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    # AB clean, BA polluted (retry 1 spent), BA polluted again -> aborted
-    assert calls == [2, 8, 8, 8]
-    assert out["aborted"] == "leg cpu steal above threshold"
-    assert out["pairs_retried"] == 1
-    assert len(out["samples"]) == 1 and out["samples"][0]["order"] == "AB"
-
-
-def test_scaling_pair_ceiling_stamps_samples(monkeypatch, capsys):
-    """PAIR_CEILING=1: each sample carries the same-moment codegen ceiling
-    and its efficiency normalized by it; the artifact medians them."""
-    import json
-
-    def fake_leg(n, sf_dir):
-        t = 100.0 if n == 2 else 30.0
-        return {"t_spatial_sec": t, "docs_per_sec": 1000.0 / t,
-                "n_docs": 1000, "cpu_steal_pct": 0.4}
-
-    ceilings = iter([0.9, 0.85])
-    monkeypatch.setattr(bench, "_scaling_leg", fake_leg)
-    monkeypatch.setattr(bench, "_codegen_pair_ceiling",
-                        lambda lo, hi: (next(ceilings), {"2": 30.0, "8": 8.0}))
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_MIN_CEILING", "0")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_WIDE", "")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_BLOCKS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_PAIR_CEILING", "1")
-    monkeypatch.setattr(sys, "argv", ["bench.py", "--scaling"])
-    bench.main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    eff = round((100.0 / 30.0) / 4, 3)
-    assert [s["ceiling_same_moment"] for s in out["samples"]] == [0.9, 0.85]
-    assert out["samples"][0]["efficiency_over_ceiling"] == round(eff / 0.9, 3)
-    assert out["value_over_ceiling"] == round(statistics_median(
-        [round(eff / 0.9, 3), round(eff / 0.85, 3)]), 3)
-
-
-def statistics_median(xs):
-    import statistics
-
-    return statistics.median(xs)
-
-
-def test_scaling_warmup_legs_discarded(monkeypatch, capsys):
-    """WARMUP_LEGS=1: one discarded leg per width runs before block 1
-    (page-cache warm, fresh-boot lesson), is stamped warmup=true in the
-    artifact, and is excluded from samples, the drift ratio, and the
-    analyzer's width-trend stats — a deliberately slow warmup leg must
-    never inflate a counted pair."""
-    import json
-
-    calls = []
-
-    def fake_leg(n, sf_dir):
-        calls.append(n)
-        # first leg at each width (the warmups) is 40% slower: cold cache
-        slow = 1.4 if calls.count(n) == 1 else 1.0
-        t = (100.0 if n == 2 else 30.0) * slow
-        return {"t_spatial_sec": t, "docs_per_sec": 1000.0 / t,
-                "n_docs": 1000, "cpu_steal_pct": 0.4}
-
-    monkeypatch.setattr(bench, "_scaling_leg", fake_leg)
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_MIN_CEILING", "0")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_WIDE", "")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_BLOCKS", "1")
-    monkeypatch.setenv("SPARK_GRAFT_SCALING_WARMUP_LEGS", "1")
-    monkeypatch.setattr(sys, "argv", ["bench.py", "--scaling"])
-    bench.main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    # warmup pair (2,8) then the ABBA block's AB(2,8) + BA(8,2)
-    assert calls == [2, 8, 2, 8, 8, 2]
-    warmups = [l for l in out["legs"] if l.get("warmup")]
-    assert [l["n"] for l in warmups] == [2, 8]
-    assert warmups[0]["t_spatial_sec"] == 140.0  # slow leg kept, labeled
-    # counted samples use only the fast post-warmup legs
-    assert len(out["samples"]) == 2
-    assert all(s["efficiency"] == round((100.0 / 30.0) / 4, 3)
-               for s in out["samples"])
-    # drift ratio over clean NON-warmup lo legs only (100, 100 -> 1.0)
-    assert out["lo_leg_drift_first_to_last"] == 1.0
-    assert "1 discarded warmup leg(s)" in out["protocol"]
-    # analyzer excludes warmup legs from the width trend
-    sys.path.insert(0, "/root/repo/BENCH")
-    import analyze_scaling
-
-    trend = analyze_scaling.analyze(out)
-    assert trend["lo_leg"]["legs"] == 2
-    assert trend["lo_leg"]["t_first_s"] == 100.0
-    assert trend["hi_leg"]["legs"] == 2
-
-
 def _fake_suite_env(monkeypatch, suite_runs, steal_stamps, composite=16.0):
-    """Wire run_bench's multi-run branch to canned suite passes + stamps."""
+    """Wire run_bench to canned suite passes + stamps."""
     import json
 
     runs = iter(suite_runs)
@@ -308,67 +90,38 @@ def test_cpu_counters_shape():
     assert c2[2] >= c[2]
 
 
-def test_analyze_scaling_reproduces_retake2_record():
-    """BENCH/analyze_scaling.py must derive, from the raw retake2 artifact,
-    exactly the numbers the BENCH/BASELINE.md narrative records for it:
-    median 0.72, lo-leg drift 1.179, hi-leg drift 0.889, and the
-    narrow/wide divergence those two imply — artifact -> claim without
-    trusting prose."""
-    import importlib.util
+def test_pin_fits_a_host_smaller_than_the_request(monkeypatch):
+    """local[8] host-index legs on a 4-core host pin to all 4 cores (a
+    `total-8` start gave taskset the invalid range -4-3)."""
+    monkeypatch.setattr(bench.os, "cpu_count", lambda: 4)
+    monkeypatch.setattr(bench.shutil, "which", lambda name: "/usr/bin/taskset")
+    assert bench._pin(["cmd"], 8) == ["taskset", "-c", "0-3", "cmd"]
+    assert bench._pin(["cmd"], 1) == ["taskset", "-c", "3-3", "cmd"]
+
+
+def test_scaling_runs_three_alternating_pairs(monkeypatch, capsys):
+    """--scaling on 4 cores: the (1, 4) pair in AB, BA, AB order, one
+    efficiency per pair and their median as the value."""
     import json
 
-    spec = importlib.util.spec_from_file_location(
-        "analyze_scaling", "/root/repo/BENCH/analyze_scaling.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    with open("/root/repo/BENCH/scaling_round5_retake2.json") as f:
-        rec = json.load(f)
-    a = mod.analyze(rec)
-    assert a["median_efficiency"] == 0.72
-    assert a["pair_series"] == [0.618, 0.682, 0.751, 0.689, 0.783, 0.82]
-    assert a["best_pair"] == 0.82 and a["pairs_at_or_above_0.8"] == 1
-    assert a["lo_leg"]["drift_first_to_last"] == 1.179
-    assert a["hi_leg"]["drift_first_to_last"] == 0.889
-    assert a["divergence_lo_over_hi_drift"] == 1.326
-    # opposite-sign slopes ARE the retake2 divergence mode
-    assert a["lo_leg"]["slope_pct_per_hour"] > 0 > a["hi_leg"]["slope_pct_per_hour"]
+    calls = []
+    t_hi = iter([30.0, 25.0, 20.0])
 
+    def fake_leg(n, sf_dir):
+        calls.append(n)
+        t = 100.0 if n == 1 else next(t_hi)
+        return {"t_spatial_sec": t, "docs_per_sec": 1000.0 / t,
+                "n_docs": 1000, "cpu_steal_pct": 0.4}
 
-def test_analyze_scaling_harvest_fields():
-    """Harvest-protocol artifacts: polluted legs are excluded from trends,
-    ceiling-normalized efficiencies surface, and retry/abort labels pass
-    through."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "analyze_scaling", "/root/repo/BENCH/analyze_scaling.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    rec = {
-        "headline_pair": "2,8",
-        "value": 0.75,
-        "value_over_ceiling": 0.9,
-        "pairs_retried": 1,
-        "samples": [
-            {"block": 1, "order": "AB", "efficiency": 0.7,
-             "ceiling_same_moment": 0.875, "efficiency_over_ceiling": 0.8},
-            {"block": 1, "order": "BA", "efficiency": 0.8,
-             "ceiling_same_moment": 0.8, "efficiency_over_ceiling": 1.0},
-        ],
-        "legs": [
-            {"n": 2, "t_spatial_sec": 100.0, "at_min": 0.0, "cpu_steal_pct": 0.5},
-            {"n": 8, "t_spatial_sec": 30.0, "at_min": 5.0, "cpu_steal_pct": 0.5},
-            {"n": 8, "t_spatial_sec": 31.0, "at_min": 10.0, "cpu_steal_pct": 9.0,
-             "polluted": True},
-            {"n": 8, "t_spatial_sec": 29.0, "at_min": 15.0, "cpu_steal_pct": 0.5},
-            {"n": 2, "t_spatial_sec": 110.0, "at_min": 20.0, "cpu_steal_pct": 0.5},
-        ],
-    }
-    a = mod.analyze(rec)
-    assert a["median_eff_over_ceiling"] == 0.9
-    assert a["ceiling_series"] == [0.875, 0.8]
-    assert a["pairs_retried"] == 1 and a["polluted_legs"] == 1
-    # the polluted 31.0 s hi leg must not enter the trend
-    assert a["hi_leg"]["legs"] == 2
-    assert a["hi_leg"]["t_first_s"] == 30.0 and a["hi_leg"]["t_last_s"] == 29.0
-    assert a["lo_leg"]["drift_first_to_last"] == 1.1
+    monkeypatch.setattr(bench, "_scaling_leg", fake_leg)
+    monkeypatch.setattr(bench, "CPUS", 4)
+    monkeypatch.setattr(sys, "argv", ["bench.py", "--scaling"])
+    bench.main()
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert calls == [1, 4, 4, 1, 1, 4]
+    assert out["headline_pair"] == "1,4"
+    assert [s["order"] for s in out["samples"]] == ["AB", "BA", "AB"]
+    effs = [round((100.0 / t) / 4, 3) for t in (30.0, 25.0, 20.0)]
+    assert [s["efficiency"] for s in out["samples"]] == effs
+    assert out["value"] == effs[1]
+    assert [leg["cpu_steal_pct"] for leg in out["legs"]] == [0.4] * 6

@@ -322,6 +322,17 @@ def test_hits_hand_case(spark):
     }
 
 
+def test_hits_rejects_zero_iters(spark):
+    """iters=0 would leave no hub vector to return: fail loudly at entry."""
+    from wikipedia_wikidata_spark.operators.graph import hits
+
+    edges = spark.createDataFrame(
+        [("en", 1, 3)], "language string, src bigint, dst bigint"
+    )
+    with pytest.raises(ValueError, match="iters must be >= 1"):
+        hits(edges, iters=0)
+
+
 def test_hits_l1_mass_conserved(spark):
     """On the real resolved graph both score vectors sum to ~SCALE per
     language (floor loss < n_nodes)."""

@@ -66,7 +66,11 @@ def word_freq(docs: DataFrame) -> DataFrame:
     """(word, freq) over lowercased pure [a-z]+ words of MIN..MAX length —
     the corpus reduction every BPE iteration runs against. One
     map-side-combined shuffle; the filter bounds the symbol alphabet and
-    the per-word array sizes."""
+    the per-word array sizes.
+
+    Tokenization contract (the DuckDB oracle mirrors it): text splits on
+    single spaces only, so a token joined by a tab, newline or
+    punctuation fails the [a-z]+ filter and is dropped, not split."""
     w = F.explode(
         F.filter(F.split(F.lower(F.col("text")), " "), lambda x: F.length(x) > 0)
     ).alias("word")

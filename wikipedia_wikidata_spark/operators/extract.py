@@ -76,9 +76,9 @@ def spans_flat(docs: DataFrame) -> DataFrame:
 # in-session analog of the staged pipeline's spans_flat checkpoint
 # (plans/pipeline.py) and of the reference's "any work done here cuts down
 # time/space in the database" pushdown (steps/wikipedia_sql2csv.sh:36-40).
-# Keyed by (applicationId, corpus dir) so the scaling bench's fresh
-# subprocesses each pay the write inside their own timed region (no
-# cross-process cache asymmetry between the N and 4N runs).
+# Keyed by (applicationId, corpus dir) so a fresh SparkContext never reads
+# an earlier context's checkpoint: perfbench opens one per timed pass, and
+# each pass must pay the write inside its own timed region.
 _FLAT_CACHE: dict[tuple[str, str], str] = {}
 
 

@@ -422,6 +422,8 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     scalar-max pattern — no collect in the data path); nodes/edges are
     localCheckpointed once like pagerank (production: catalog snapshots).
     """
+    if iters < 1:
+        raise ValueError("iters must be >= 1")
     edges = edges.localCheckpoint()
     nodes = (
         edges.select("language", F.col("src").alias("node"))

@@ -508,7 +508,12 @@ def grid_density_clusters(
     not the point graph. Point-pair DBSCAN is O(n^2); this is O(points)
     + CC over a vastly smaller graph. Mega-cell skew is impossible by
     construction here — every cell contributes exactly 8 offset rows
-    regardless of its point count."""
+    regardless of its point count.
+
+    Input contract (the DuckDB oracle mirrors both): the grid does not
+    wrap at the ±180° seam, so cells on either side of it are never
+    neighbours; and coordinates outside [-90, 90] × [-180, 180] are
+    clamped into the border cells by xy_cols rather than rejected."""
     from .graph import connected_components
 
     from ..functions.cells import CELL_RES_BITS

@@ -358,11 +358,12 @@ def build_scored(
     return spark.read.parquet(path), v
 
 
-def entity_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+def geo_points(scored: DataFrame) -> DataFrame:
     """Geo-tagged scored articles — the point set for the spatial extension
-    (north_star: 'entity points' joined to place polygons / kNN / tiles)."""
-    sc, _ = build_scored(spark, sf_dir)
-    return sc.filter(
+    (north_star: 'entity points' joined to place polygons / kNN / tiles).
+    The one definition of the projection: every point consumer, in-session
+    or in the staged pipeline, builds its points here."""
+    return scored.filter(
         F.col("wd_page_title").isNotNull() & F.col("lat").isNotNull()
     ).select(
         "language",
@@ -372,6 +373,12 @@ def entity_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lon",
         "importance",
     )
+
+
+def entity_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """geo_points over the session's scored checkpoint."""
+    sc, _ = build_scored(spark, sf_dir)
+    return geo_points(sc)
 
 
 def run_importance(

@@ -139,15 +139,7 @@ def run_pipeline(
 
     stage("importance", lambda: imp.wikimedia_importance(scored, v), ["language"])
 
-    def build_points():
-        return scored.filter(
-            F.col("wd_page_title").isNotNull() & F.col("lat").isNotNull()
-        ).select(
-            "language", "title",
-            F.col("wd_page_title").alias("wikidata_id"), "lat", "lon", "importance",
-        )
-
-    stage("entity_points", build_points)
+    stage("entity_points", lambda: imp.geo_points(scored))
     pts = cat.read(spark, "entity_points")
 
     # shard-granular resumable stage (north_star: a killed job resumes

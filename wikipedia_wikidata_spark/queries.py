@@ -254,9 +254,7 @@ def q_knn_nearest_place(spark, sf_dir):
 
     _release_knn_handles()
     sc, v = imp.build_scored(spark, sf_dir)
-    ep = sc.filter(
-        F.col("wd_page_title").isNotNull() & F.col("lat").isNotNull()
-    ).select("language", "title", "lat", "lon")
+    ep = imp.geo_points(sc).select("language", "title", "lat", "lon")
     places = v["wikidata_places"].filter(F.col("lat").isNotNull()).select(
         "item", "lat", "lon"
     )
