@@ -51,22 +51,19 @@ def _noop(df):
 
 def spatial_job(spark, sf_dir):
     """The north-star job: interleaved corpus -> spatial join + tile assign."""
-    from pyspark.sql import functions as F
-
-    from wikipedia_wikidata_spark.functions.cells import make_cell_udf, make_morton_udf
     from wikipedia_wikidata_spark.operators.spatial import (
         knn_nearest, knn_release, pip_join,
     )
     from wikipedia_wikidata_spark.operators.tiles import tile_importance
-    from wikipedia_wikidata_spark.plans.importance import build_scored, geo_points
+    from wikipedia_wikidata_spark.plans.importance import (
+        build_scored, geo_places, geo_points,
+    )
 
     sc, v = build_scored(spark, sf_dir)
     ep = geo_points(sc)
-    ep = ep.withColumn("cell_r7", make_cell_udf(7)(F.col("lat"), F.col("lon")))
-    ep = ep.withColumn("s2", make_morton_udf()(F.col("lat"), F.col("lon")))
     ep.persist()  # materialized by the first consumer; no extra count() job
     _noop(pip_join(ep, v["polygons"].select("item", "verts"), res=5))
-    places = v["wikidata_places"].filter(F.col("lat").isNotNull()).select("item", "lat", "lon")
+    places = geo_places(v["wikidata_places"])
     places.persist()
     # kNN runs the SHIPPED default level ladder (round-1 verdict: the timed
     # job must match the operator default, not a bench-only [13,0] shortcut)

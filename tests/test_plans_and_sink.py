@@ -1,5 +1,6 @@
 """Physical-plan quality checks (the 100-TB design criteria) + TSV sink."""
 
+import os
 import re
 
 from pyspark.sql import functions as F
@@ -60,6 +61,37 @@ def test_importance_serving_plan_reads_scored_checkpoint(spark):
     p = _plan(run_importance(spark, SF_DIR_SMALL))
     assert "ArrowEvalPython" not in p, p
     assert "wws_scored_" in p, p
+
+
+def test_scored_session_checkpoint_is_one_catalog_table_per_key(spark):
+    """build_scored commits its checkpoint once per SparkContext and key as
+    a session-catalog table: a second call reads the committed version, and
+    a different language set gets a table of its own."""
+    from urllib.parse import urlparse
+
+    from wikipedia_wikidata_spark.plans.importance import build_scored
+    from wikipedia_wikidata_spark.sources.catalog import session_catalog
+
+    cat = session_catalog(spark)
+
+    def table_of(df) -> str:
+        (t,) = {
+            os.path.relpath(urlparse(f).path, cat.root).split(os.sep)[0]
+            for f in df.inputFiles()
+        }
+        return t
+
+    first, _ = build_scored(spark, SF_DIR_SMALL)
+    again, _ = build_scored(spark, SF_DIR_SMALL)
+    t = table_of(first)
+    assert t.startswith("wws_scored_") and table_of(again) == t
+    assert [m["version"] for m in cat.snapshots(t)] == [1]
+    assert cat.manifest(t)["rows"] == again.count()
+
+    other, _ = build_scored(spark, SF_DIR_SMALL, ["en", "de"])
+    t2 = table_of(other)
+    assert t2.startswith("wws_scored_") and t2 != t
+    assert [m["version"] for m in cat.snapshots(t2)] == [1]
 
 
 def test_whole_stage_codegen_in_extraction(spark):

@@ -118,6 +118,28 @@ def test_catalog_latest_complete_selection(spark, tmp_path_factory):
     assert cat.latest_complete("t")["version"] == 4
 
 
+def test_catalog_lineage_keys_files_by_partition_path(spark, tmp_path_factory):
+    """Lineage comes from the parquet footers and is keyed by the path
+    relative to the version dir: a partitioned write reuses part-file names
+    across partition dirs, so basename keys would collide."""
+    cat = Catalog(str(tmp_path_factory.mktemp("lineagecat")))
+    df = spark.range(300).repartition(3).select(
+        "id", (F.col("id") % 4).alias("k")
+    )
+    m = cat.write(spark, df, "t", "fp1", "r1", partition_by=["k"])
+    files = [p["file"] for p in m["partitions"]]
+    assert len(files) == len(set(files)) == m["n_partitions"] > 4
+    vdir = os.path.join(cat.path("t"), "v00001")
+    per_k: dict[str, int] = {}
+    for p in m["partitions"]:
+        part, rest = p["file"].split("/", 1)
+        assert part in {f"k={k}" for k in range(4)} and "/" not in rest, p
+        assert os.path.isfile(os.path.join(vdir, p["file"])), p
+        per_k[part] = per_k.get(part, 0) + p["rows"]
+    assert per_k == {f"k={k}": 75 for k in range(4)}
+    assert sum(p["rows"] for p in m["partitions"]) == m["rows"] == 300
+
+
 def test_json_props_declared_schema(spark, ddb):
     """Semi-structured extraction: from_json with a DECLARED schema over the
     events.props JSON column, aggregated per event type; DuckDB json oracle."""

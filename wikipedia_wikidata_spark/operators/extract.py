@@ -12,10 +12,7 @@ Each extractor cites the reference filter it models.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -25,6 +22,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from ..config import LANGUAGES, SEP
+from ..sources.catalog import session_table
 
 
 @pandas_udf(DoubleType())
@@ -76,31 +74,19 @@ def spans_flat(docs: DataFrame) -> DataFrame:
 # in-session analog of the staged pipeline's spans_flat checkpoint
 # (plans/pipeline.py) and of the reference's "any work done here cuts down
 # time/space in the database" pushdown (steps/wikipedia_sql2csv.sh:36-40).
-# Keyed by (applicationId, corpus dir) so a fresh SparkContext never reads
-# an earlier context's checkpoint: perfbench opens one per timed pass, and
-# each pass must pay the write inside its own timed region.
-_FLAT_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _cleanup_flat_cache() -> None:
-    for path in _FLAT_CACHE.values():
-        shutil.rmtree(path, ignore_errors=True)
-
-
-atexit.register(_cleanup_flat_cache)
-
-
+# It is a session_table keyed by (applicationId, corpus dir), so a fresh
+# SparkContext never reads an earlier context's checkpoint: perfbench opens
+# one per timed pass, and each pass must pay the write inside its own timed
+# region.
 def shared_spans_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """spans_flat backed by a once-per-session kind-partitioned checkpoint."""
     from ..sources.synth import ensure_spans_data
 
     d = ensure_spans_data(sf_dir)
-    key = (spark.sparkContext.applicationId, os.path.abspath(d))
-    path = _FLAT_CACHE.get(key)
-    if path is None or not os.path.exists(path):
-        path = tempfile.mkdtemp(prefix="wws_spans_flat_")
+
+    def build() -> DataFrame:
         docs = spark.read.parquet(f"{d}/documents.parquet")
-        (
+        return (
             spans_flat(docs)
             # the relational views consume only (language, kind, text):
             # prose spans (half the corpus bytes) and the doc_id/media_ref/
@@ -115,12 +101,11 @@ def shared_spans_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(
                 24, F.col("kind"), F.pmod(F.xxhash64("text"), F.lit(8))
             )
-            .write.mode("overwrite")
-            .partitionBy("kind")
-            .parquet(path)
         )
-        _FLAT_CACHE[key] = path
-    sp = spark.read.parquet(path)
+
+    sp = session_table(
+        spark, "spans_flat", os.path.abspath(d), build, partition_by=["kind"]
+    )
     return sp.withColumn("f", F.split("text", SEP, 3))
 
 

@@ -16,7 +16,7 @@ Design (SURVEY.md §4 "custom work"):
   degrading to coarser levels for sparse regions; a fixed lazy DAG, no driver
   loops. Equals the brute-force oracle by construction.
 - Skew (mega-cells, FIXTURES.md §6): optional salting of hot cells +
-  AQE skew-join (session.py) — see salt_hot_cells().
+  AQE skew-join (session.py) — see pip_join(salt=...).
 """
 
 from __future__ import annotations
@@ -43,26 +43,13 @@ def polygons_with_bbox(polygons: DataFrame) -> DataFrame:
     )
 
 
-RAY_CAST_SQL = """
-(size(filter(sequence(0, size({verts}) - 1), i ->
-    (element_at({verts}, i + 1).lat > {plat})
-      != (element_at({verts}, (i + 1) % size({verts}) + 1).lat > {plat})
-    AND {plon} < (element_at({verts}, (i + 1) % size({verts}) + 1).lon
-                  - element_at({verts}, i + 1).lon)
-                 * ({plat} - element_at({verts}, i + 1).lat)
-                 / (element_at({verts}, (i + 1) % size({verts}) + 1).lat
-                    - element_at({verts}, i + 1).lat)
-                 + element_at({verts}, i + 1).lon
-)) % 2) = 1
-"""
-
-# Edge-list form of the same ray cast: edges are prepared ONCE per polygon
+# Edge-list ray cast: edges are prepared ONCE per polygon
 # (the "prepared geometry" of the north_star) so the 10^7-pair hot loop does
 # no per-row sequence/filter array allocation and no element_at indexing —
 # higher-order lambdas are interpreted (not codegen'd), so per-element work
-# dominates; this form measured ~2x faster at sf1. The arithmetic is
-# token-identical to RAY_CAST_SQL / the DuckDB oracle, so results stay
-# bit-equal.
+# dominates; this form measured ~2x faster at sf1 than a per-row
+# sequence/element_at form. The arithmetic is token-identical to the DuckDB
+# oracle's duckdb_ray_cast_sql, so results stay bit-equal.
 RAY_CAST_EDGES_SQL = """
 (aggregate({edges}, 0,
   (acc, e) -> acc + IF((e.y1 > {plat}) != (e.y2 > {plat})
@@ -101,7 +88,6 @@ def duckdb_ray_cast_sql(verts: str, plat: str, plon: str) -> str:
 
 
 def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
-             point_cols: tuple[str, str] = ("lat", "lon"),
              salt: int | None = None, hot_threshold: int | None = None) -> DataFrame:
     """Cell-bucketed point-in-polygon join.
 
@@ -120,7 +106,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
     from ..config import CELL_RES_BITS, MEGA_CELL_THRESHOLD
 
     bits = CELL_RES_BITS[res]
-    lat_c, lon_c = F.col(point_cols[0]), F.col(point_cols[1])
+    lat_c, lon_c = F.col("lat"), F.col("lon")
     px, py = xy_cols(lat_c, lon_c, bits)
     pts = points.withColumn("_px", px).withColumn("_py", py)
 
@@ -205,9 +191,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
         (lat_c >= F.col("min_lat")) & (lat_c <= F.col("max_lat"))
         & (lon_c >= F.col("min_lon")) & (lon_c <= F.col("max_lon"))
     )
-    inside = RAY_CAST_EDGES_SQL.format(
-        edges="edges", plat=point_cols[0], plon=point_cols[1]
-    )
+    inside = RAY_CAST_EDGES_SQL.format(edges="edges", plat="lat", plon="lon")
     out = cand.filter(bbox_hit).filter(F.expr(inside)).drop(
         "_px", "_py", "_cx", "_cy", "edges",
         "min_lat", "max_lat", "min_lon", "max_lon",
@@ -218,7 +202,6 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
 def suggest_pip_salt(
     points: DataFrame,
     res: int = 5,
-    point_cols: tuple[str, str] = ("lat", "lon"),
     target_rows_per_key: int | None = None,
 ) -> tuple[int, dict]:
     """Measure-then-salt (north_rule 'skew handled explicitly'): per-cell
@@ -234,7 +217,7 @@ def suggest_pip_salt(
     from .skew import skew_stats
 
     bits = CELL_RES_BITS[res]
-    px, py = xy_cols(F.col(point_cols[0]), F.col(point_cols[1]), bits)
+    px, py = xy_cols(F.col("lat"), F.col("lon"), bits)
     keyed = points.select(px.alias("_px"), py.alias("_py"))
     target = target_rows_per_key or MEGA_CELL_THRESHOLD
     stats = skew_stats(keyed, ["_px", "_py"], target_rows_per_key=target)
@@ -254,13 +237,7 @@ KNN_ENTRY_MAX_TARGET = 16
 KNN_MID_MAX_TARGET = 1024
 
 
-def suggest_knn_ladder(
-    places: DataFrame,
-    point_cols: tuple[str, str] = ("lat", "lon"),
-    candidates: tuple[int, ...] = KNN_LADDER_CANDIDATES,
-    entry_target: int = KNN_ENTRY_MAX_TARGET,
-    mid_target: int = KNN_MID_MAX_TARGET,
-) -> tuple[list[int], dict]:
+def suggest_knn_ladder(places: DataFrame) -> tuple[list[int], dict]:
     """Measure-then-ladder (round-4 verdict item 5, the suggest_pip_salt
     pattern): derive knn_nearest's level ladder from the MEASURED
     places-per-cell histogram instead of the hardcoded default.
@@ -270,16 +247,18 @@ def suggest_knn_ladder(
     at level b-1 is exactly x>>1/y>>1 of level b for this grid), so the
     whole sweep shuffles at most n_places rows once and then ever-shrinking
     histograms. Entry level = the COARSEST candidate whose hottest cell
-    holds <= entry_target places (dense corpora push it finer, sparse
-    corpora coarser); mid level = the coarsest level below entry with
-    max <= mid_target (dropped when entry is already that coarse). The
+    holds <= KNN_ENTRY_MAX_TARGET places (dense corpora push it finer,
+    sparse corpora coarser); mid level = the coarsest level below entry
+    with max <= KNN_MID_MAX_TARGET (dropped when entry is already that
+    coarse). The
     ladder is a pure function of the places snapshot, so a checkpoint
     resume under the same fingerprint re-derives the identical plan.
     Any ladder yields the SAME results (each level's guard proves its
     accepted minima are true nearest) — this tunes cost, not semantics.
     """
+    candidates = KNN_LADDER_CANDIDATES
     finest = max(candidates)
-    px, py = xy_cols(F.col(point_cols[0]), F.col(point_cols[1]), finest)
+    px, py = xy_cols(F.col("lat"), F.col("lon"), finest)
     hist = (
         places.select(px.alias("_x"), py.alias("_y"))
         .groupBy("_x", "_y")
@@ -313,39 +292,21 @@ def suggest_knn_ladder(
             c.unpersist()
     entry = next(
         (b for b in sorted(candidates)
-         if stats[b]["max_per_cell"] <= entry_target),
+         if stats[b]["max_per_cell"] <= KNN_ENTRY_MAX_TARGET),
         finest,
     )
     mid = next(
         (b for b in sorted(candidates)
-         if b < entry and stats[b]["max_per_cell"] <= mid_target),
+         if b < entry and stats[b]["max_per_cell"] <= KNN_MID_MAX_TARGET),
         None,
     )
     ladder = [entry, mid, 0] if mid else [entry, 0]
     return ladder, {
         "ladder": ladder,
-        "entry_target": entry_target,
-        "mid_target": mid_target,
+        "entry_target": KNN_ENTRY_MAX_TARGET,
+        "mid_target": KNN_MID_MAX_TARGET,
         "levels": stats,
     }
-
-
-def salt_hot_cells(df: DataFrame, cell_col: str, threshold: int, n_salt: int,
-                   id_col: str) -> DataFrame:
-    """Explicit skew handling: rows in cells above ``threshold`` get a salt
-    column derived from a row id; the other side of a join must explode its
-    rows for hot cells across all salts. AQE skew-join covers the rest."""
-    counts = df.groupBy(cell_col).agg(F.count(F.lit(1)).alias("_n"))
-    hot = counts.filter(F.col("_n") > threshold).select(cell_col, F.lit(True).alias("_hot"))
-    return (
-        df.join(F.broadcast(hot), cell_col, "left")
-        .withColumn(
-            "_salt",
-            F.when(F.col("_hot").isNotNull(), F.pmod(F.hash(F.col(id_col)), F.lit(n_salt)))
-            .otherwise(F.lit(0)),
-        )
-        .drop("_hot")
-    )
 
 
 def knn_release(df: DataFrame) -> None:

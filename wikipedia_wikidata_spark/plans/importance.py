@@ -19,6 +19,8 @@ Output schema (README.md:54-62): (language, type, title, importance, wikidata_id
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,6 +30,7 @@ from pyspark.sql.types import DoubleType
 
 from ..config import IMPORTANCE_FLOOR, LANGUAGES, spans_dir_for
 from ..operators.extract import extract_views_shared
+from ..sources.catalog import session_table
 
 
 @pandas_udf(DoubleType())
@@ -307,55 +310,27 @@ def build_scored_lazy(
     return scored_articles(af, wp), v
 
 
-# Session-scoped parquet checkpoint of the scored table, keyed by
-# (applicationId, corpus dir, language set) — same machinery as
-# operators/extract's spans_flat checkpoint and for the same reason:
-# wikimedia_importance is a DIAMOND DAG (articles_out, from_redirects and
-# the anti-join all reference `scored`), and Catalyst performs no cross-
-# reference CSE, so the lazy tree evaluated the 10-join scored subtree
-# THREE times per run (plus twice more for the scalar-max aggregate) —
-# measured 3-5x the end-to-end importance wall time at sf0.1. One write +
-# three columnar scans replaces that; every downstream consumer (the wmi
-# program, entity_points, the spatial job, the driver's scored/uniqueness/
-# top_languages queries) shares the same materialization. At 100 TB this is
-# the staged-pipeline boundary plans/pipeline.py already commits durably;
-# here it is the in-session analog.
-_SCORED_CACHE: dict[tuple[str, str, tuple], str] = {}
-
-
-def _cleanup_scored_cache() -> None:
-    import shutil
-
-    for path in _SCORED_CACHE.values():
-        shutil.rmtree(path, ignore_errors=True)
-
-
-import atexit as _atexit
-
-_atexit.register(_cleanup_scored_cache)
-
-
+# Session checkpoint of the scored table, keyed by (corpus dir, language
+# set) — the same session_table as operators/extract's spans_flat checkpoint
+# and for the same reason: wikimedia_importance is a DIAMOND DAG
+# (articles_out, from_redirects and the anti-join all reference `scored`),
+# and Catalyst performs no cross-reference CSE, so the lazy tree evaluated
+# the 10-join scored subtree THREE times per run (plus twice more for the
+# scalar-max aggregate) — measured 3-5x the end-to-end importance wall time
+# at sf0.1. One write + three columnar scans replaces that; every downstream
+# consumer (the wmi program, entity_points, the spatial job, the driver's
+# scored/uniqueness/top_languages queries) shares the same materialization.
+# At 100 TB this is the staged-pipeline boundary plans/pipeline.py already
+# commits durably; here it is the in-session analog.
 def build_scored(
     spark: SparkSession, sf_dir: str, languages: list[str] | None = None
 ) -> tuple[DataFrame, dict[str, DataFrame]]:
     """(scored, views) with `scored` backed by a once-per-session parquet
     checkpoint — the multi-consumer form every real run should use."""
-    import os
-    import tempfile
-
     languages = languages or LANGUAGES
     sc, v = build_scored_lazy(spark, sf_dir, languages)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(spans_dir_for(sf_dir)),
-        tuple(languages),
-    )
-    path = _SCORED_CACHE.get(key)
-    if path is None or not os.path.exists(path):
-        path = tempfile.mkdtemp(prefix="wws_scored_")
-        sc.write.mode("overwrite").parquet(path)
-        _SCORED_CACHE[key] = path
-    return spark.read.parquet(path), v
+    key = f"{os.path.abspath(spans_dir_for(sf_dir))}:{','.join(languages)}"
+    return session_table(spark, "scored", key, lambda: sc), v
 
 
 def geo_points(scored: DataFrame) -> DataFrame:
@@ -373,6 +348,12 @@ def geo_points(scored: DataFrame) -> DataFrame:
         "lon",
         "importance",
     )
+
+
+def geo_places(places: DataFrame) -> DataFrame:
+    """Places with coordinates — the kNN target set. The one definition of
+    the projection, shared by the in-session and staged spatial jobs."""
+    return places.filter(F.col("lat").isNotNull()).select("item", "lat", "lon")
 
 
 def entity_points(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -82,18 +82,11 @@ def run_pipeline(
 
     def stage(name: str, build, partition_by=None, cluster_by=None,
               extra=None):
-        if cat.is_complete(name, fp):
-            m = cat.manifest(name)
-            m["skipped"] = True
-            report[name] = m
-            return
-        m = cat.write(
+        report[name] = cat.ensure(name, fp, lambda: cat.write(
             spark, build(), name, fp, run_id, partition_by,
             extra=extra() if callable(extra) else extra,
             cluster_by=cluster_by,
-        )
-        m["skipped"] = False
-        report[name] = m
+        ))
 
     docs = ex.load_documents(spark, sf_dir)
     stage("spans_flat", lambda: ex.spans_flat(docs).drop("f"), ["kind"])
@@ -151,11 +144,7 @@ def run_pipeline(
     # pipeline consumes its own skew diagnostics instead of a hand guess.
     # Both are pure functions of the committed entity_points snapshot, so a
     # resume under the same fingerprint re-derives the identical plan.
-    if cat.is_complete("spatial_assign", fp):
-        m = cat.manifest("spatial_assign")
-        m["skipped"] = True
-        report["spatial_assign"] = m
-    else:
+    def build_spatial() -> dict:
         n_shards = spatial_shards_for(report["entity_points"]["rows"])
         salt, skstats = suggest_pip_salt(pts, res=5)
 
@@ -170,7 +159,7 @@ def run_pipeline(
                 "language", "title", "wikidata_id", F.col("item").alias("place_item")
             )
 
-        m = cat.write_sharded(
+        return cat.write_sharded(
             spark, spatial_shard, "spatial_assign", fp, run_id, n_shards,
             extra={
                 "pip_salt": salt,
@@ -180,12 +169,10 @@ def run_pipeline(
                 },
             },
         )
-        m["skipped"] = False
-        report["spatial_assign"] = m
 
-    geo_places = cat.read(spark, "wikidata_places").filter(
-        F.col("lat").isNotNull()
-    ).select("item", "lat", "lon")
+    report["spatial_assign"] = cat.ensure("spatial_assign", fp, build_spatial)
+
+    knn_places = imp.geo_places(cat.read(spark, "wikidata_places"))
     built_knn: list[DataFrame] = []
     knn_extra: dict = {}
 
@@ -196,9 +183,9 @@ def run_pipeline(
         # under the same fingerprint re-derives the identical plan; the
         # manifest records what was derived. Any ladder returns identical
         # results (per-level guards prove exactness); this tunes cost.
-        ladder, kstats = suggest_knn_ladder(geo_places)
+        ladder, kstats = suggest_knn_ladder(knn_places)
         knn_extra["knn_ladder"] = kstats
-        built_knn.append(knn_nearest(pts, geo_places, levels=ladder))
+        built_knn.append(knn_nearest(pts, knn_places, levels=ladder))
         return built_knn[0]
 
     stage("knn", build_knn, extra=lambda: knn_extra)

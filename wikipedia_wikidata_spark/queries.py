@@ -17,6 +17,7 @@ from . import oracle
 from .config import LANGUAGES, spans_dir_for
 from .operators.extract import extract_views_shared, load_documents
 from .plans import importance as imp
+from .sources.catalog import tmpdir
 
 
 def _views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -255,10 +256,7 @@ def q_knn_nearest_place(spark, sf_dir):
     _release_knn_handles()
     sc, v = imp.build_scored(spark, sf_dir)
     ep = imp.geo_points(sc).select("language", "title", "lat", "lon")
-    places = v["wikidata_places"].filter(F.col("lat").isNotNull()).select(
-        "item", "lat", "lon"
-    )
-    out = knn_nearest(ep, places)
+    out = knn_nearest(ep, imp.geo_places(v["wikidata_places"]))
     _KNN_HANDLE.append(out)
     return out.select(
         "language", "title", "nearest_item",
@@ -327,17 +325,6 @@ MYSQLDUMP_FIXTURE = "\n".join([
 ])
 
 
-def _tmpdir(prefix: str) -> str:
-    """mkdtemp that is removed at interpreter exit (driver-session hygiene)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
-
-
 def q_mysqldump_scan(spark, sf_dir):
     """S3: the reference's mysqldump INSERT grammar (quotes, doubled-quote
     and backslash escapes, NULL, multi-tuple statements, table filter) via
@@ -347,7 +334,7 @@ def q_mysqldump_scan(spark, sf_dir):
 
     from .sources.mysqldump import read_mysqldump
 
-    d = _tmpdir("wws_dump_")
+    d = tmpdir("wws_dump_")
     p = os.path.join(d, "page.sql")
     with open(p, "w") as f:
         f.write(MYSQLDUMP_FIXTURE)
@@ -388,7 +375,7 @@ def q_streaming_tumbling(spark, sf_dir):
 
     # the file stream source wants a directory; expose the single driver
     # parquet file through a temp dir symlink (removed at exit)
-    d = _tmpdir("wws_stream_")
+    d = tmpdir("wws_stream_")
     os.symlink(
         os.path.join(sf_dir, "events.parquet"), os.path.join(d, "events.parquet")
     )

@@ -474,15 +474,15 @@ def q_events_enrich(spark, sf_dir):
     q_streaming_tumbling)."""
     import os
 
-    from .queries import _tmpdir
+    from .sources.catalog import tmpdir
     from .streaming.events import run_stream_enrich
 
     _ensure_utc(spark)
-    d = _tmpdir("wws_enrich_in_")
+    d = tmpdir("wws_enrich_in_")
     os.symlink(
         os.path.join(sf_dir, "events.parquet"), os.path.join(d, "events.parquet")
     )
-    out = _tmpdir("wws_enrich_out_")
+    out = tmpdir("wws_enrich_out_")
     dim = spark.createDataFrame(
         ENRICH_DIM, "event_type string, type_weight double"
     )
@@ -735,11 +735,11 @@ def q_events_attribution(spark, sf_dir):
     import os
     import uuid
 
-    from .queries import _tmpdir
+    from .sources.catalog import tmpdir
     from .streaming.events import run_attribution_available_now
 
     _ensure_utc(spark)
-    d = _tmpdir("wws_attrib_in_")
+    d = tmpdir("wws_attrib_in_")
     os.symlink(
         os.path.join(sf_dir, "events.parquet"), os.path.join(d, "events.parquet")
     )
@@ -785,16 +785,16 @@ def q_events_merge_upsert(spark, sf_dir):
     import os
     import uuid
 
-    from .queries import _tmpdir
+    from .sources.catalog import tmpdir
     from .streaming.events import run_stream_merge_to_catalog
 
     _ensure_utc(spark)
-    d = _tmpdir("wws_evmerge_in_")
+    d = tmpdir("wws_evmerge_in_")
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     ev.repartition(4).write.mode("overwrite").parquet(d)
     name = "ev_totals_" + uuid.uuid4().hex[:8]
     return run_stream_merge_to_catalog(
-        spark, d, _tmpdir("wws_evmerge_cat_"), name, _tmpdir("wws_evmerge_ck_")
+        spark, d, tmpdir("wws_evmerge_cat_"), name, tmpdir("wws_evmerge_ck_")
     )
 
 
@@ -838,8 +838,7 @@ def q_snapshot_cdc(spark, sf_dir):
     derived by deterministic doc_id filters (deletes: id%19==7; updates:
     id%17==2 get ' [rev2]' appended; inserts: id%11==3 and id%5==0),
     committed as real time-travel versions, then diffed by key."""
-    from .queries import _tmpdir
-    from .sources.catalog import Catalog
+    from .sources.catalog import Catalog, tmpdir
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     m = F.col("doc_id")
@@ -856,7 +855,7 @@ def q_snapshot_cdc(spark, sf_dir):
         )
         .unionByName(docs.filter((m % 11 == 3) & (m % 5 == 0)))
     )
-    cat = Catalog(_tmpdir("wws_cdc_"))
+    cat = Catalog(tmpdir("wws_cdc_"))
     cat.write(spark, v1, "docs", "cdc:v1", "r1")
     cat.write(spark, v2, "docs", "cdc:v2", "r2")
     return cat.snapshot_diff(spark, "docs", ["doc_id"], 1, 2)

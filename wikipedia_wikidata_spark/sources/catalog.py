@@ -10,17 +10,30 @@ north_rule's "resumable from checkpoint with per-partition lineage +
 metrics". Commits are atomic (write-to-tmp + rename, then pointer swap); a
 killed job leaves no half-visible snapshot, and earlier snapshots stay
 readable (``read(..., version=k)`` = Iceberg ``VERSION AS OF``).
+
+The per-file lineage comes from each data file's parquet footer, keyed by
+its path relative to the version dir (``kind=page/part-…``): no Spark job
+re-reads a commit to count it, and partitioned layouts that reuse part-file
+names across partition dirs keep one entry per file.
+
+``session_table`` puts the engine's in-session checkpoints (the shared
+spans_flat and scored tables) through the same commit path, on one temporary
+catalog root per SparkContext.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import json
 import os
 import re
 import shutil
+import tempfile
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,6 +64,14 @@ class Catalog:
     def is_complete(self, name: str, fingerprint: str) -> bool:
         m = self.manifest(name)
         return bool(m) and m.get("fingerprint") == fingerprint and m.get("status") == "committed"
+
+    def ensure(self, name: str, fingerprint: str, commit) -> dict:
+        """The one reuse-or-build rule: the current manifest when ``name``
+        is already committed under ``fingerprint``, else ``commit()``'s
+        manifest. ``skipped`` says which."""
+        if self.is_complete(name, fingerprint):
+            return {**self.manifest(name), "skipped": True}
+        return {**commit(), "skipped": False}
 
     def _current(self, name: str) -> dict | None:
         try:
@@ -165,7 +186,7 @@ class Catalog:
         if cluster_by:
             extra = {**(extra or {}), "cluster_by": list(cluster_by)}
         return self._commit_dir(
-            spark, tmp, name, version, fingerprint, run_id, t0, extra=extra
+            tmp, name, version, fingerprint, run_id, t0, extra=extra
         )
 
     def _gc_orphaned_tmp(self, root: str) -> None:
@@ -206,7 +227,6 @@ class Catalog:
 
     def _commit_dir(
         self,
-        spark: SparkSession,
         tmp: str,
         name: str,
         version: int,
@@ -219,14 +239,19 @@ class Catalog:
         written tmp data dir (shared by write and write_sharded)."""
         root = self.path(name)
         vdir = os.path.join(root, f"v{version:05d}")
-        # lineage: per-written-file row counts (partition granularity)
-        back = spark.read.parquet(tmp)
-        lineage = [
-            {"file": os.path.basename(r["file"]), "rows": r["rows"]}
-            for r in back.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ]
+        # lineage: per-written-file row counts (partition granularity) from
+        # the parquet footers; the data files are what a Spark reader sees
+        lineage = []
+        for dirpath, dirs, files in os.walk(tmp):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for fn in files:
+                if fn.startswith(("_", ".")):
+                    continue
+                p = os.path.join(dirpath, fn)
+                lineage.append({
+                    "file": os.path.relpath(p, tmp),
+                    "rows": pq.read_metadata(p).num_rows,
+                })
         rows = sum(p["rows"] for p in lineage)
         manifest = {
             "stage": name,
@@ -338,7 +363,7 @@ class Catalog:
                         os.path.join(dst_dir, f"s{k:05d}-{fn}"),
                     )
         m = self._commit_dir(
-            spark, vtmp, name, version, fingerprint, run_id, t0,
+            vtmp, name, version, fingerprint, run_id, t0,
             extra={
                 "n_shards": n_shards,
                 "resumed_shards": len(resumed),
@@ -441,7 +466,7 @@ class Catalog:
                     os.path.join(cur_dir, d), os.path.join(vtmp, d)
                 )
         return self._commit_dir(
-            spark, vtmp, name, version, fingerprint, run_id, t0,
+            vtmp, name, version, fingerprint, run_id, t0,
             extra={
                 "merge_touched_partitions": sorted(map(str, touched)),
                 "merge_key": key_cols,
@@ -576,3 +601,43 @@ class Catalog:
             .filter(F.col("change").isNotNull())
             .select("change", *key_cols, *out_vals)
         )
+
+
+def tmpdir(prefix: str) -> str:
+    """mkdtemp that is removed at interpreter exit (driver-session hygiene)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+# One temporary catalog root per SparkContext (applicationId -> Catalog).
+_SESSION_CATALOGS: dict[str, Catalog] = {}
+
+
+def session_catalog(spark: SparkSession) -> Catalog:
+    """The catalog that holds this SparkContext's session checkpoints."""
+    app = spark.sparkContext.applicationId
+    if app not in _SESSION_CATALOGS:
+        _SESSION_CATALOGS[app] = Catalog(tmpdir("wws_session_"))
+    return _SESSION_CATALOGS[app]
+
+
+def session_table(
+    spark: SparkSession,
+    name: str,
+    key: str,
+    build,
+    partition_by: list[str] | None = None,
+) -> DataFrame:
+    """An in-session checkpoint: ``build()`` committed once per SparkContext
+    and ``key`` as a catalog table (manifest, per-file lineage), then read
+    back by every consumer. The applicationId is part of the key, so a fresh
+    SparkContext rewrites the table instead of reading an earlier context's
+    copy."""
+    cat = session_catalog(spark)
+    app = spark.sparkContext.applicationId
+    fp = f"{app}:{key}"
+    table = f"wws_{name}_{hashlib.sha1(fp.encode()).hexdigest()[:12]}"
+    cat.ensure(table, fp, lambda: cat.write(
+        spark, build(), table, fp, app, partition_by))
+    return cat.read(spark, table)
