@@ -1,4 +1,5 @@
 import math
+import uuid
 
 import duckdb
 import numpy as np
@@ -16,6 +17,19 @@ def spark():
     s = get_spark("wws-tests", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), ids of the Spark jobs fn submitted)``, counted through a
+    fresh job group."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -47,6 +47,9 @@ def test_pipeline_resume(spark, tmp_path_factory):
     r2 = run_pipeline(spark, SF_DIR_SMALL, out)
     # upstream stages resumed (skipped), downstream recomputed
     assert r2["spans_flat"]["skipped"] and r2["article_full"]["skipped"]
+    # every manifest carries the data schema its reads take
+    assert all("schema" in m for m in r2.values()), [
+        s for s, m in r2.items() if "schema" not in m]
     assert r2["scored"]["skipped"]
     assert not r2["importance"]["skipped"]
     # resumed stages kept the first run's id; recomputed got the new one

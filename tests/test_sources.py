@@ -140,6 +140,66 @@ def test_catalog_lineage_keys_files_by_partition_path(spark, tmp_path_factory):
     assert sum(p["rows"] for p in m["partitions"]) == m["rows"] == 300
 
 
+def test_catalog_read_takes_schema_from_manifest(spark, tmp_path_factory):
+    """Every commit path records the footer data schema in its manifest, so
+    a read types the table like parquet inference does, partition columns
+    included, and submits no Spark job."""
+    from .conftest import spark_jobs
+
+    cat = Catalog(str(tmp_path_factory.mktemp("schemacat")))
+    df = spark.range(40).select(
+        "id",
+        (F.col("id") % 3).cast("int").alias("k"),
+        F.concat(F.lit("s"), (F.col("id") % 2).cast("string")).alias("s"),
+        F.array("id", "id").alias("arr"),
+        F.struct(F.col("id").alias("a"), F.lit("x").alias("b")).alias("st"),
+        F.create_map(F.lit("m"), F.col("id")).alias("mp"),
+    )
+
+    def check(name, m):
+        assert "schema" in m, name
+        vdir = os.path.join(cat.path(name), f"v{m['version']:05d}")
+        schema, jobs = spark_jobs(spark, lambda: cat.read(spark, name).schema)
+        assert schema == spark.read.parquet(vdir).schema, name
+        assert jobs == [], (name, jobs)
+
+    check("plain", cat.write(spark, df, "plain", "fp", "r"))
+    check("by_str", cat.write(spark, df, "by_str", "fp", "r",
+                              partition_by=["s"]))
+    by_int = cat.write(spark, df, "by_int", "fp", "r", partition_by=["k"])
+    assert "k" not in {f["name"] for f in by_int["schema"]["fields"]}
+    check("by_int", by_int)
+    check("sharded", cat.write_sharded(
+        spark, lambda i: df.filter(F.col("id") % 2 == i), "sharded", "fp",
+        "r", 2))
+    # keys out of column order: the rewritten partition keeps the table's
+    updates = df.filter(F.col("k") == 1).withColumn("id", F.col("id") + 100)
+    check("by_int", cat.merge(spark, updates, "by_int", ["k", "s", "id"],
+                              "fp2", "r2", partition_by="k"))
+    check("plain", cat.compact(spark, "plain", 2, "fp2", "r2"))
+
+    # a manifest without the key (committed before it existed) still reads
+    vdir = os.path.join(cat.path("plain"), "v00002")
+    for mp in (cat._manifest_path("plain"),
+               os.path.join(vdir, "_manifest.json")):
+        with open(mp) as f:
+            m = json.load(f)
+        del m["schema"]
+        with open(mp, "w") as f:
+            json.dump(m, f)
+    assert cat.read(spark, "plain").schema == spark.read.parquet(vdir).schema
+    assert cat.read(spark, "plain").count() == 40
+
+    # each version reads with its own manifest's schema
+    cat.write(spark, spark.range(3).select(F.col("id").alias("x")), "tt",
+              "fp1", "r1")
+    cat.write(spark, spark.range(3).select(F.col("id").cast("string")
+                                           .alias("y")), "tt", "fp2", "r2")
+    assert sorted(r.x for r in cat.read(spark, "tt", version=1).collect()) \
+        == [0, 1, 2]
+    assert cat.read(spark, "tt").schema.simpleString() == "struct<y:string>"
+
+
 def test_json_props_declared_schema(spark, ddb):
     """Semi-structured extraction: from_json with a DECLARED schema over the
     events.props JSON column, aggregated per event type; DuckDB json oracle."""

@@ -242,54 +242,43 @@ def suggest_knn_ladder(places: DataFrame) -> tuple[list[int], dict]:
     pattern): derive knn_nearest's level ladder from the MEASURED
     places-per-cell histogram instead of the hardcoded default.
 
-    One map-side-combined groupBy builds the histogram at the finest
-    candidate level; coarser levels coarsen that histogram itself (cell x/y
-    at level b-1 is exactly x>>1/y>>1 of level b for this grid), so the
-    whole sweep shuffles at most n_places rows once and then ever-shrinking
-    histograms. Entry level = the COARSEST candidate whose hottest cell
+    One pass, one Spark action: a map-side-combined groupBy builds the
+    histogram at the finest candidate level; each histogram cell is then
+    exploded over every candidate's shift ``finest - b`` (cell x/y at level
+    b is exactly x>>shift/y>>shift of the finest level for this grid), a
+    groupBy on (shift, x>>shift, y>>shift) sums the counts into every
+    level's histogram at once, and a last groupBy on shift collects one
+    (max, cell count) row per level. Levels with no cells (empty places)
+    read as zero. Entry level = the COARSEST candidate whose hottest cell
     holds <= KNN_ENTRY_MAX_TARGET places (dense corpora push it finer,
     sparse corpora coarser); mid level = the coarsest level below entry
     with max <= KNN_MID_MAX_TARGET (dropped when entry is already that
-    coarse). The
-    ladder is a pure function of the places snapshot, so a checkpoint
-    resume under the same fingerprint re-derives the identical plan.
-    Any ladder yields the SAME results (each level's guard proves its
+    coarse). The ladder is a pure function of the places snapshot, so a
+    checkpoint resume under the same fingerprint re-derives the identical
+    plan. Any ladder yields the SAME results (each level's guard proves its
     accepted minima are true nearest) — this tunes cost, not semantics.
     """
     candidates = KNN_LADDER_CANDIDATES
     finest = max(candidates)
     px, py = xy_cols(F.col("lat"), F.col("lon"), finest)
-    hist = (
-        places.select(px.alias("_x"), py.alias("_y"))
-        .groupBy("_x", "_y")
+    shifts = F.array(*[F.lit(finest - b) for b in candidates])
+    rows = (
+        places.groupBy(px.alias("_x"), py.alias("_y"))
         .agg(F.count(F.lit(1)).alias("_n"))
-        .persist()
+        .select(F.explode(shifts).alias("_s"), "_x", "_y", "_n")
+        .groupBy("_s", F.expr("shiftright(_x, _s)"),
+                 F.expr("shiftright(_y, _s)"))
+        .agg(F.sum("_n").alias("_n"))
+        .groupBy("_s")
+        .agg(F.max("_n").alias("mx"), F.count(F.lit(1)).alias("nc"))
+        .collect()
     )
+    per_shift = {r["_s"]: r for r in rows}
     stats: dict[int, dict] = {}
-    cached = [hist]
-    cur, cur_level = hist, finest
-    try:
-        for b in sorted(candidates, reverse=True):
-            if b < cur_level:
-                shift = cur_level - b
-                cur = (
-                    cur.groupBy(
-                        F.shiftright("_x", shift).alias("_x"),
-                        F.shiftright("_y", shift).alias("_y"),
-                    )
-                    .agg(F.sum("_n").alias("_n"))
-                    .persist()
-                )
-                cached.append(cur)
-                cur_level = b
-            row = cur.agg(
-                F.max("_n").alias("mx"), F.count(F.lit(1)).alias("nc")
-            ).collect()[0]
-            stats[b] = {"max_per_cell": int(row["mx"] or 0),
-                        "n_cells": int(row["nc"])}
-    finally:
-        for c in cached:
-            c.unpersist()
+    for b in sorted(candidates, reverse=True):
+        r = per_shift.get(finest - b)
+        stats[b] = {"max_per_cell": int(r["mx"]) if r else 0,
+                    "n_cells": int(r["nc"]) if r else 0}
     entry = next(
         (b for b in sorted(candidates)
          if stats[b]["max_per_cell"] <= KNN_ENTRY_MAX_TARGET),

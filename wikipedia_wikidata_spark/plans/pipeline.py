@@ -18,6 +18,7 @@ done once instead of per filter program).
 
 from __future__ import annotations
 
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -144,9 +145,13 @@ def run_pipeline(
     # pipeline consumes its own skew diagnostics instead of a hand guess.
     # Both are pure functions of the committed entity_points snapshot, so a
     # resume under the same fingerprint re-derives the identical plan.
+    # Deriving runs before the commit starts its wall_ms clock, so the
+    # manifest extras record its own derive_ms (here and for the kNN ladder).
     def build_spatial() -> dict:
         n_shards = spatial_shards_for(report["entity_points"]["rows"])
+        t0 = time.time()
         salt, skstats = suggest_pip_salt(pts, res=5)
+        derive_ms = int((time.time() - t0) * 1000)
 
         def spatial_shard(k: int) -> DataFrame:
             sub = pts.filter(
@@ -166,7 +171,7 @@ def run_pipeline(
                 "pip_cell_skew": {
                     k: skstats[k]
                     for k in ("n_keys", "max_count", "p99", "skew_ratio")
-                },
+                } | {"derive_ms": derive_ms},
             },
         )
 
@@ -183,8 +188,10 @@ def run_pipeline(
         # under the same fingerprint re-derives the identical plan; the
         # manifest records what was derived. Any ladder returns identical
         # results (per-level guards prove exactness); this tunes cost.
+        t0 = time.time()
         ladder, kstats = suggest_knn_ladder(knn_places)
-        knn_extra["knn_ladder"] = kstats
+        derive_ms = int((time.time() - t0) * 1000)
+        knn_extra["knn_ladder"] = kstats | {"derive_ms": derive_ms}
         built_knn.append(knn_nearest(pts, knn_places, levels=ladder))
         return built_knn[0]
 

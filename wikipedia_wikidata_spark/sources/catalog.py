@@ -14,7 +14,9 @@ readable (``read(..., version=k)`` = Iceberg ``VERSION AS OF``).
 The per-file lineage comes from each data file's parquet footer, keyed by
 its path relative to the version dir (``kind=page/part-…``): no Spark job
 re-reads a commit to count it, and partitioned layouts that reuse part-file
-names across partition dirs keep one entry per file.
+names across partition dirs keep one entry per file. The footers also give
+the manifest its ``schema``, which ``read`` hands to Spark, so no Spark job
+infers it either (Iceberg keeps the table schema in its metadata likewise).
 
 ``session_table`` puts the engine's in-session checkpoints (the shared
 spans_flat and scored tables) through the same commit path, on one temporary
@@ -36,6 +38,31 @@ import uuid
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+# Footer key under which Spark's parquet writer stores the data schema.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(t):
+    """Spark's ``asNullable`` on a schema's JSON form: a file-source read
+    makes every field, array element and map value nullable."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {**t, "fields": [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])}
+            for f in t["fields"]
+        ]}
+    if t["type"] == "array":
+        return {**t, "containsNull": True,
+                "elementType": _as_nullable(t["elementType"])}
+    if t["type"] == "map":
+        return {**t, "valueContainsNull": True,
+                "keyType": _as_nullable(t["keyType"]),
+                "valueType": _as_nullable(t["valueType"])}
+    return t
 
 
 # Orphaned-commit tmp dirs older than this are reclaimed by the next write;
@@ -135,7 +162,17 @@ class Catalog:
             if cur is None:  # pre-versioning layout: data at table root
                 return spark.read.parquet(self.path(name))
             version = cur["version"]
-        return spark.read.parquet(os.path.join(self.path(name), f"v{version:05d}"))
+        vdir = os.path.join(self.path(name), f"v{version:05d}")
+        try:
+            with open(os.path.join(vdir, "_manifest.json")) as f:
+                schema = json.load(f).get("schema")
+        except (OSError, json.JSONDecodeError):
+            schema = None
+        if schema is None:  # older manifest, no data file, foreign files
+            return spark.read.parquet(vdir)
+        # the recorded data schema spares the footer-inference job; Spark
+        # still types the partition columns from the dir names
+        return spark.read.schema(StructType.fromJson(schema)).parquet(vdir)
 
     def write(
         self,
@@ -242,16 +279,19 @@ class Catalog:
         # lineage: per-written-file row counts (partition granularity) from
         # the parquet footers; the data files are what a Spark reader sees
         lineage = []
+        schemas = set()
         for dirpath, dirs, files in os.walk(tmp):
             dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
             for fn in files:
                 if fn.startswith(("_", ".")):
                     continue
                 p = os.path.join(dirpath, fn)
+                meta = pq.read_metadata(p)
                 lineage.append({
                     "file": os.path.relpath(p, tmp),
-                    "rows": pq.read_metadata(p).num_rows,
+                    "rows": meta.num_rows,
                 })
+                schemas.add((meta.metadata or {}).get(SPARK_SCHEMA_KEY))
         rows = sum(p["rows"] for p in lineage)
         manifest = {
             "stage": name,
@@ -264,6 +304,12 @@ class Catalog:
             "wall_ms": int((time.time() - t0) * 1000),
             "partitions": sorted(lineage, key=lambda p: p["file"]),
         }
+        # the data schema (partition columns excluded) Spark wrote into every
+        # footer, as a read types it, recorded only when all files agree on
+        # it, so read() needs no inference job
+        found = [_as_nullable(json.loads(r)) if r else None for r in schemas]
+        if found and found[0] is not None and all(f == found[0] for f in found):
+            manifest["schema"] = found[0]
         if extra:
             manifest.update(extra)
         with open(os.path.join(tmp, "_manifest.json"), "w") as f:
@@ -446,11 +492,14 @@ class Catalog:
         assert cur_v is not None, "merge() needs an existing versioned table"
         version = cur_v + 1
         vtmp = os.path.join(root, f"v{version:05d}") + ".tmp-" + uuid.uuid4().hex[:8]
-        # recompute ONLY the touched partitions
+        # recompute ONLY the touched partitions, in the table's column order
+        # (the using-join puts the keys first), so the rewritten files and
+        # the carried-over ones share one footer schema
         merged = (
             cur.filter(F.col(partition_by).isin(touched))
             .join(updates.select(*key_cols).distinct(), key_cols, "left_anti")
             .unionByName(updates)
+            .select(*cur.columns)
         )
         merged.write.mode("overwrite").partitionBy(partition_by).parquet(vtmp)
         # carry every untouched partition dir over as plain file copies
