@@ -2,12 +2,17 @@
 
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
+import wikipedia_wikidata_spark.plans.pipeline as pipeline
 from wikipedia_wikidata_spark.plans.pipeline import run_pipeline
 from wikipedia_wikidata_spark.sources.catalog import Catalog
 
-from .conftest import SF_DIR_SMALL
+from .conftest import SF_DIR_SMALL, spark_jobs
+
+# every stage a kill after 'scored' loses, in report order
+AFTER_SCORED = ["importance", "entity_points", "spatial_assign", "knn", "tiles"]
 
 
 def test_catalog_time_travel(spark, tmp_path_factory):
@@ -42,7 +47,7 @@ def test_pipeline_resume(spark, tmp_path_factory):
 
     # simulate a kill after 'scored': drop everything downstream of it
     cat = Catalog(out)
-    for st in ["importance", "entity_points", "spatial_assign", "knn", "tiles"]:
+    for st in AFTER_SCORED:
         cat.drop(st)
     r2 = run_pipeline(spark, SF_DIR_SMALL, out)
     # upstream stages resumed (skipped), downstream recomputed
@@ -90,6 +95,75 @@ def test_pipeline_resume(spark, tmp_path_factory):
     assert not r3["tiles"]["skipped"] and r3["tiles"]["rows"] > 0
     assert r3["scored"]["skipped"]
     assert not os.path.exists(orphan)
+
+
+@pytest.fixture(scope="module")
+def full_pipeline(spark, tmp_path_factory):
+    """One full pipeline run: (catalog root, report)."""
+    out = str(tmp_path_factory.mktemp("pipe_full"))
+    return out, run_pipeline(spark, SF_DIR_SMALL, out)
+
+
+def _killed_after_scored(full_pipeline, tmp_path_factory) -> str:
+    """A copy of the full run's catalog with every stage after 'scored'
+    dropped."""
+    out = str(tmp_path_factory.mktemp("pipe_kill") / "cat")
+    shutil.copytree(full_pipeline[0], out)
+    cat = Catalog(out)
+    for st in AFTER_SCORED:
+        cat.drop(st)
+    return out
+
+
+def test_pipeline_resume_runs_under_the_callers_job_group(
+    spark, full_pipeline, tmp_path_factory
+):
+    """The concurrent stage threads inherit the caller's job group, and the
+    report keeps the stage order."""
+    out = _killed_after_scored(full_pipeline, tmp_path_factory)
+    ungrouped = spark.sparkContext.statusTracker().getJobIdsForGroup
+    before = set(ungrouped())
+    report, jobs = spark_jobs(spark, lambda: run_pipeline(spark, SF_DIR_SMALL, out))
+    assert jobs
+    # no job of the resume ran outside the group (a set difference, not
+    # equality: the status store may evict old jobs meanwhile)
+    assert set(ungrouped()) - before == set()
+    assert [k for k, m in report.items() if not m["skipped"]] == AFTER_SCORED
+    assert list(report) == [
+        "spans_flat", "view_page", "view_linktarget", "view_redirect",
+        "view_pagelink", "view_wd_page", "view_geo_tags", "view_places",
+        "view_polygons", "view_langlinks", "view_sitelinks", "article_full",
+        "wikidata_places", "scored", *AFTER_SCORED,
+    ]
+
+
+@pytest.mark.parametrize("module, builder, failed", [
+    (pipeline, "tile_importance", "tiles"),
+    (pipeline.imp, "wikimedia_importance", "importance"),
+], ids=["tiles", "importance"])
+def test_pipeline_failed_branch_acts_like_a_kill(
+    spark, full_pipeline, tmp_path_factory, monkeypatch, module, builder, failed
+):
+    """A failing branch re-raises after its siblings commit; the next run
+    rebuilds only the failed stage, to the same rows."""
+    out = _killed_after_scored(full_pipeline, tmp_path_factory)
+
+    def fail(*args):
+        raise RuntimeError(f"{failed} failed")
+
+    monkeypatch.setattr(module, builder, fail)
+    with pytest.raises(RuntimeError, match=f"{failed} failed"):
+        run_pipeline(spark, SF_DIR_SMALL, out)
+    cat = Catalog(out)
+    fp = full_pipeline[1]["scored"]["fingerprint"]
+    for st in AFTER_SCORED:
+        assert cat.is_complete(st, fp) == (st != failed), st
+
+    monkeypatch.undo()
+    report = run_pipeline(spark, SF_DIR_SMALL, out)
+    assert [k for k, m in report.items() if not m["skipped"]] == [failed]
+    assert sorted(cat.read(spark, failed).collect()) == sorted(
+        Catalog(full_pipeline[0]).read(spark, failed).collect())
 
 
 def test_pipeline_selects_salt_on_hot_cell_corpus(spark, tmp_path_factory, monkeypatch):

@@ -181,6 +181,42 @@ def test_tile_cell_cover_zoom_finer_than_cells(spark):
             ), (z, tx, xs)
 
 
+def test_tile_importance_matches_numpy_mercator(spark):
+    """The JVM mercator expression puts every point in the tile that the
+    old numpy projection gave, at every zoom of the pyramid, on a seeded
+    latitude sweep plus the clamp edges, the poles and the equator."""
+    from wikipedia_wikidata_spark.config import TILE_ZOOMS
+    from wikipedia_wikidata_spark.operators.tiles import (
+        MERC_LAT_MAX, tile_importance,
+    )
+
+    rng = np.random.default_rng(7)
+    edges = [MERC_LAT_MAX, -MERC_LAT_MAX, 90.0, -90.0, 0.0]
+    lat = np.concatenate([rng.uniform(-90.0, 90.0, 20_000), edges])
+    lon = rng.uniform(-180.0, 180.0, len(lat))
+    idx = np.arange(len(lat), dtype="float64")
+    pts = spark.createDataFrame(
+        pd.DataFrame({"lat": lat, "lon": lon, "importance": idx})
+    )
+    got = {
+        (r.zoom, r.tile_x, r.tile_y): (r.n_entities, r.importance_sum)
+        for r in tile_importance(pts).collect()
+    }
+
+    la = np.clip(lat, -MERC_LAT_MAX, MERC_LAT_MAX)
+    rad = la * np.pi / 180.0
+    y = (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / np.pi) / 2.0
+    want: dict = {}
+    for z in TILE_ZOOMS:
+        n = 2.0 ** z
+        tx = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(int)
+        ty = np.clip(np.floor(y * n), 0, n - 1).astype(int)
+        for x_, y_, i in zip(tx, ty, idx):
+            c, s = want.get((z, x_, y_), (0, 0.0))
+            want[(z, x_, y_)] = (c + 1, s + i)
+    assert got == want
+
+
 def test_span_sequence_invariant(spark):
     """input_hint: after transformation, per-doc (kind,text,media_ref,offset)
     sequence must equal the input exactly."""

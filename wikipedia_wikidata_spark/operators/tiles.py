@@ -1,75 +1,54 @@
 """Raster-tile aggregation of importance scores (A9 / north_star).
 
-Web-mercator slippy tiles. The mercator y-projection is computed by a
-vectorized Arrow pandas UDF (numpy, batch) — the tile index floor/clamp stays
-in JVM Column expressions. The DuckDB oracle uses the identical formula
-(ln/tan/cos with the same association order), so tile assignments match
-bit-for-bit except for sub-ulp libm noise exactly at tile boundaries
-(probability ~1e-16 per row; synthetic lattice coords avoid boundaries).
+Web-mercator slippy tiles. The mercator y-projection is a JVM expression
+built from ``mercator_y_norm_sql``, the same formula text the DuckDB oracle
+runs (ln/tan/cos with the same association order), and the tile index
+floor/clamp stays in Column expressions, so no Python runs in tiles. Tile
+assignments match the oracle bit-for-bit except for sub-ulp libm noise
+exactly at tile boundaries (probability ~1e-16 per row; synthetic lattice
+coords avoid boundaries).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 from ..config import TILE_ZOOMS
 
 MERC_LAT_MAX = 85.05112878
 
 
-@pandas_udf(DoubleType())
-def mercator_y_norm(lat: pd.Series) -> pd.Series:
-    """Normalized mercator y in [0,1): (1 - ln(tan(r) + 1/cos(r))/pi)/2."""
-    la = np.clip(lat.to_numpy(dtype="float64"), -MERC_LAT_MAX, MERC_LAT_MAX)
-    rad = la * np.pi / 180.0
-    y = (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / np.pi) / 2.0
-    return pd.Series(y)
-
-
 def mercator_y_norm_sql(lat_expr: str) -> str:
+    """Normalized mercator y in [0,1): (1 - ln(tan(r) + 1/cos(r))/pi)/2, as
+    SQL text that Spark and DuckDB both parse."""
     e = f"least(greatest({lat_expr}, {-MERC_LAT_MAX}), {MERC_LAT_MAX}) * pi() / 180.0"
     return f"(1.0 - ln(tan({e}) + 1.0 / cos({e})) / pi()) / 2.0"
 
 
-def _tile_xy_cols(zoom_col: str = "zoom", merc_col: str = "_merc"):
-    """(tile_x, tile_y) Columns from lon + a precomputed mercator-y column."""
-    n = F.pow(F.lit(2.0), F.col(zoom_col)).cast("double")
+def _tile_xy_cols():
+    """(tile_x, tile_y) Columns from lon, zoom and the mercator-y ``_merc``."""
+    n = F.pow(F.lit(2.0), F.col("zoom")).cast("double")
     xn = (F.col("lon") + F.lit(180.0)) / F.lit(360.0)
     tx = F.least(F.greatest(F.floor(xn * n), F.lit(0)), (n - 1).cast("long")).cast("long")
     ty = F.least(
-        F.greatest(F.floor(F.col(merc_col) * n), F.lit(0)), (n - 1).cast("long")
+        F.greatest(F.floor(F.col("_merc") * n), F.lit(0)), (n - 1).cast("long")
     ).cast("long")
     return tx, ty
-
-
-def with_tile(df: DataFrame, zoom_col: str = "zoom") -> DataFrame:
-    """Add tile_x/tile_y given lat/lon and a zoom column."""
-    tx, ty = _tile_xy_cols(zoom_col)
-    return (
-        df.withColumn("_merc", mercator_y_norm(F.col("lat")))
-        .withColumn("tile_x", tx)
-        .withColumn("tile_y", ty)
-        .drop("_merc")
-    )
 
 
 def tile_importance(points: DataFrame, zooms: list[int] | None = None) -> DataFrame:
     """Per-(zoom, tile) entity count + importance sum (log-scale column too).
 
-    points: (..., lat, lon, importance). The mercator Python/Arrow UDF is
-    zoom-independent, so it runs ONCE PER POINT — before the zoom explode;
-    computing it after the explode paid len(zooms) redundant Arrow round
-    trips per point in the timed north-star job. One explode over the zoom
-    pyramid; the groupBy is a single shuffle keyed (zoom, tile_x, tile_y).
+    points: (..., lat, lon, importance). The mercator projection is
+    zoom-independent, so it runs ONCE PER POINT, before the zoom explode.
+    One explode over the zoom pyramid; the groupBy is a single shuffle
+    keyed (zoom, tile_x, tile_y).
     """
     zooms = zooms or TILE_ZOOMS
     z = (
-        points.withColumn("_merc", mercator_y_norm(F.col("lat")))
+        points.withColumn("_merc", F.expr(mercator_y_norm_sql("lat")))
         .withColumn("zoom", F.explode(F.array(*[F.lit(int(s)) for s in zooms])))
     )
     tx, ty = _tile_xy_cols()
@@ -219,7 +198,7 @@ def cell_vector(cells: DataFrame, res: int, cell_col: str = "cell_id") -> DataFr
 
 
 def tile_sql(zoom_expr: str, lat_expr: str, lon_expr: str) -> tuple[str, str]:
-    """DuckDB (tile_x, tile_y) expressions mirroring with_tile()."""
+    """DuckDB (tile_x, tile_y) expressions mirroring tile_importance()."""
     n = f"CAST(pow(2.0, {zoom_expr}) AS DOUBLE)"
     tx = (
         f"CAST(least(greatest(floor(({lon_expr} + 180.0) / 360.0 * {n}), 0), "

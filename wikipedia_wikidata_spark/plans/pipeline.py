@@ -6,9 +6,18 @@ a killed run resumes by skipping every stage whose manifest fingerprint
 matches (the reference can only skip downloads, steps/wikipedia_download.sh:22-25
 — everything else recomputes).
 
-Stage order:
-  spans_flat -> relational views -> article_full -> scored -> importance
-  -> entity_points -> spatial_assign (PIP) -> knn -> tiles
+Stage DAG (``a | b`` = a and b run concurrently, on their own threads):
+
+  spans_flat -> relational views -> article_full -> wikidata_places -> scored
+  -> ( importance
+     | entity_points -> ( spatial_assign (PIP) | knn | tiles ) )
+
+Past ``scored`` the stages depend on each other only through committed
+snapshots, so independent ones run side by side: Spark runs jobs submitted
+from separate threads at the same time, and a resume's cold-JVM driver work
+(analysis, planning, codegen) overlaps instead of queueing. Every stage still
+commits on its own; a failed branch acts like a kill (its siblings commit,
+and the next run rebuilds only what is missing).
 
 spans_flat is written partitioned by span kind: every downstream extractor
 then prunes to its kind's partition at the parquet-scan level (the reference's
@@ -20,9 +29,11 @@ from __future__ import annotations
 
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..config import LANGUAGES, spans_dir_for
 from ..operators import extract as ex
@@ -59,6 +70,21 @@ def spatial_shards_for(n_points: int) -> int:
     )
 
 
+def _fan_out(spark: SparkSession, *branches) -> None:
+    """Run ``branches`` concurrently, one thread each, under the caller's
+    job group and local properties; wait for all of them, then re-raise the
+    first failure in branch order."""
+    # one wrap per branch: a wrap clones the caller's local properties once,
+    # and threads sharing a clone would overwrite each other's SQL
+    # execution id in it
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(b)) for b in branches
+        ]
+    for f in futures:
+        f.result()
+
+
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -73,7 +99,7 @@ def run_pipeline(
     # logic version, corpus generator version, corpus location, and the
     # language configuration — otherwise a resume against the same out_root
     # silently serves stages built under a different configuration
-    from ..sources.synth import GENERATOR_VERSION
+    from ..sources.synth import GENERATOR_VERSION, ensure_spans_data
 
     fp = (
         f"v{PIPELINE_VERSION}:g{GENERATOR_VERSION}:{spans_dir_for(sf_dir)}"
@@ -81,16 +107,21 @@ def run_pipeline(
     )
     report: dict[str, dict] = {}
 
+    def ensure(name: str, commit) -> None:
+        report[name] = cat.ensure(name, fp, commit)
+
     def stage(name: str, build, partition_by=None, cluster_by=None,
               extra=None):
-        report[name] = cat.ensure(name, fp, lambda: cat.write(
+        ensure(name, lambda: cat.write(
             spark, build(), name, fp, run_id, partition_by,
             extra=extra() if callable(extra) else extra,
             cluster_by=cluster_by,
         ))
 
-    docs = ex.load_documents(spark, sf_dir)
-    stage("spans_flat", lambda: ex.spans_flat(docs).drop("f"), ["kind"])
+    # the corpus and the place-type levels are read only by the stages
+    # built from them, so a resume past them submits no read job
+    stage("spans_flat", lambda: ex.spans_flat(
+        ex.load_documents(spark, sf_dir)).drop("f"), ["kind"])
 
     sp = cat.read(spark, "spans_flat").withColumn(
         "f", F.split("text", "\x1f", 3)
@@ -107,7 +138,6 @@ def run_pipeline(
     stage("view_sitelinks", lambda: ex.sitelinks_view(sp, languages))
 
     v = {n: cat.read(spark, f"view_{n}") for n in VIEW_NAMES}
-    levels = spark.read.parquet(f"{spans_dir_for(sf_dir)}/place_type_levels.parquet")
 
     def build_af():
         plc = imp.pagelink_counts(v)
@@ -120,8 +150,12 @@ def run_pipeline(
     # cold run the places subtree used to be evaluated twice (once inside
     # scored, once for its own stage), and resume could pair a 'scored'
     # built from a different places computation than the committed one
-    stage("wikidata_places", lambda: imp.wikidata_places(
-        v, levels, imp.geo_earth_wikidata(v)))
+    def build_places():
+        levels = spark.read.parquet(
+            f"{ensure_spans_data(sf_dir)}/place_type_levels.parquet")
+        return imp.wikidata_places(v, levels, imp.geo_earth_wikidata(v))
+
+    stage("wikidata_places", build_places)
     places = cat.read(spark, "wikidata_places")
 
     def build_scored():
@@ -130,11 +164,6 @@ def run_pipeline(
 
     stage("scored", build_scored)
     scored = cat.read(spark, "scored")
-
-    stage("importance", lambda: imp.wikimedia_importance(scored, v), ["language"])
-
-    stage("entity_points", lambda: imp.geo_points(scored))
-    pts = cat.read(spark, "entity_points")
 
     # shard-granular resumable stage (north_star: a killed job resumes
     # without recomputing completed cells): points are split by a stable
@@ -147,7 +176,7 @@ def run_pipeline(
     # resume under the same fingerprint re-derives the identical plan.
     # Deriving runs before the commit starts its wall_ms clock, so the
     # manifest extras record its own derive_ms (here and for the kNN ladder).
-    def build_spatial() -> dict:
+    def build_spatial(pts: DataFrame) -> dict:
         n_shards = spatial_shards_for(report["entity_points"]["rows"])
         t0 = time.time()
         salt, skstats = suggest_pip_salt(pts, res=5)
@@ -175,38 +204,59 @@ def run_pipeline(
             },
         )
 
-    report["spatial_assign"] = cat.ensure("spatial_assign", fp, build_spatial)
+    def knn(pts: DataFrame) -> None:
+        knn_places = imp.geo_places(places)
+        built_knn: list[DataFrame] = []
+        knn_extra: dict = {}
 
-    knn_places = imp.geo_places(cat.read(spark, "wikidata_places"))
-    built_knn: list[DataFrame] = []
-    knn_extra: dict = {}
+        def build_knn() -> DataFrame:
+            # ladder derived from the MEASURED places-per-cell histogram
+            # (suggest_knn_ladder, round-4 verdict item 5) — like the PIP
+            # salt, a pure function of the committed places snapshot, so a
+            # resume under the same fingerprint re-derives the identical
+            # plan; the manifest records what was derived. Any ladder
+            # returns identical results (per-level guards prove exactness);
+            # this tunes cost.
+            t0 = time.time()
+            ladder, kstats = suggest_knn_ladder(knn_places)
+            derive_ms = int((time.time() - t0) * 1000)
+            knn_extra["knn_ladder"] = kstats | {"derive_ms": derive_ms}
+            built_knn.append(knn_nearest(pts, knn_places, levels=ladder))
+            return built_knn[0]
 
-    def build_knn() -> DataFrame:
-        # ladder derived from the MEASURED places-per-cell histogram
-        # (suggest_knn_ladder, round-4 verdict item 5) — like the PIP salt,
-        # a pure function of the committed places snapshot, so a resume
-        # under the same fingerprint re-derives the identical plan; the
-        # manifest records what was derived. Any ladder returns identical
-        # results (per-level guards prove exactness); this tunes cost.
-        t0 = time.time()
-        ladder, kstats = suggest_knn_ladder(knn_places)
-        derive_ms = int((time.time() - t0) * 1000)
-        knn_extra["knn_ladder"] = kstats | {"derive_ms": derive_ms}
-        built_knn.append(knn_nearest(pts, knn_places, levels=ladder))
-        return built_knn[0]
+        stage("knn", build_knn, extra=lambda: knn_extra)
+        if built_knn:  # release the one cache knn_nearest returns (skip-safe)
+            knn_release(built_knn[0])
 
-    stage("knn", build_knn, extra=lambda: knn_extra)
-    if built_knn:  # release the one cache knn_nearest returns (skip-safe)
-        knn_release(built_knn[0])
-    # zoom dirs for partition pruning + tile range clustering inside each
-    # dir: a viewport query (tile range at one zoom) prunes to one partition
-    # dir AND skips files whose footer tile range misses the viewport
-    # (catalog cluster_by = the Iceberg SORTED BY analog). zoom LEADS the
-    # range keys so each shuffle task holds a zoom-contiguous slice —
-    # partitionBy(zoom) then emits ~one file per task instead of
-    # tasks x zooms small files.
-    stage(
-        "tiles", lambda: tile_importance(pts), ["zoom"],
-        cluster_by=["zoom", "tile_x", "tile_y"],
+    def spatial() -> None:
+        stage("entity_points", lambda: imp.geo_points(scored))
+        pts = cat.read(spark, "entity_points")
+        # zoom dirs for partition pruning + tile range clustering inside each
+        # dir: a viewport query (tile range at one zoom) prunes to one
+        # partition dir AND skips files whose footer tile range misses the
+        # viewport (catalog cluster_by = the Iceberg SORTED BY analog). zoom
+        # LEADS the range keys so each shuffle task holds a zoom-contiguous
+        # slice — partitionBy(zoom) then emits ~one file per task instead of
+        # tasks x zooms small files.
+        _fan_out(
+            spark,
+            lambda: ensure("spatial_assign", lambda: build_spatial(pts)),
+            lambda: knn(pts),
+            lambda: stage(
+                "tiles", lambda: tile_importance(pts), ["zoom"],
+                cluster_by=["zoom", "tile_x", "tile_y"],
+            ),
+        )
+
+    _fan_out(
+        spark,
+        lambda: stage(
+            "importance", lambda: imp.wikimedia_importance(scored, v),
+            ["language"],
+        ),
+        spatial,
     )
+    # branches finish in any order; the report keeps the stage order
+    for name in ("importance", "entity_points", "spatial_assign", "knn", "tiles"):
+        report[name] = report.pop(name)
     return report
