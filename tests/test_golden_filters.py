@@ -4,6 +4,7 @@ over DataFrames. Inputs are inlined verbatim-equivalent rows (same values),
 NOT read from the reference tree, so the repo is self-contained.
 """
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -14,7 +15,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from wikipedia_wikidata_spark.operators.extract import round5
+from wikipedia_wikidata_spark.operators.extract import round5_col
 
 
 def test_pagelinks_count_golden(spark):
@@ -95,7 +96,8 @@ def test_geo_tags_golden(spark):
     )
     got = (
         df.filter((F.col("globe") == "earth") & (F.col("gt_primary") == "1"))
-        .select("gt_page_id", round5("lat").alias("lat"), round5("lon").alias("lon"))
+        .select("gt_page_id", round5_col("lat").alias("lat"),
+                round5_col("lon").alias("lon"))
         .orderBy("gt_page_id")
         .collect()
     )
@@ -111,3 +113,19 @@ def test_geo_tags_golden(spark):
     # byte-match the reference's text formatting: repr drops trailing zeros
     as_text = [f"{r.gt_page_id},{repr(r.lat)},{repr(r.lon)}" for r in got]
     assert as_text[-1] == "5034,55.9214,-3.53665"
+
+
+def test_round5_col_equals_numpy_round(spark):
+    """round5_col is numpy.round(x, 5) bit for bit: a seeded sweep over the
+    coordinate range plus exact half-way ties (half-even either way)."""
+    rng = np.random.default_rng(5)
+    ties = (rng.integers(-18_000_000, 18_000_000, 5000) + 0.5) / 1e5
+    x = np.concatenate([rng.uniform(-180.0, 180.0, 20000), ties, [0.0, -0.0]])
+    got = (
+        spark.createDataFrame(pd.DataFrame({"i": np.arange(len(x)), "x": x}))
+        .select("i", round5_col("x").alias("r"))
+        .toPandas()
+        .sort_values("i")["r"]
+        .to_numpy()
+    )
+    assert np.array_equal(got, np.round(x, 5))

@@ -196,7 +196,8 @@ def test_pipeline_selects_salt_on_hot_cell_corpus(spark, tmp_path_factory, monke
         + [(float(i), float(i)) for i in range(1, 11)],
         "lat double, lon double",
     )
-    salt, stats = suggest_pip_salt(pts, res=5, target_rows_per_key=10)
+    monkeypatch.setattr(cfg, "MEGA_CELL_THRESHOLD", 10)
+    salt, stats = suggest_pip_salt(pts, res=5)
     assert salt == 5 and stats["max_count"] == 50
 
 

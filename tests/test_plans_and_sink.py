@@ -121,7 +121,8 @@ def test_scale_paths_have_no_cartesian_plans(spark):
     # legitimately contribute its 1-row scalar-max broadcast cross join,
     # which is not what this test inspects
     pts = v["geo_tags"].select(
-        "gt_page_id",
+        F.lit("en").alias("language"),
+        F.col("gt_page_id").alias("title"),
         F.col("gt_lat").alias("lat"),
         F.col("gt_lon").alias("lon"),
     )
@@ -131,14 +132,7 @@ def test_scale_paths_have_no_cartesian_plans(spark):
         "ann": _plan(ann_lsh_topk(emb, n_planes=4)),
         "pip": _plan(pip_join(pts, v["polygons"].select("item", "verts"), res=5)),
         "knn": _plan(
-            knn_nearest(
-                pts,
-                pts.select(
-                    F.col("gt_page_id").alias("item"), "lat", "lon"
-                ),
-                point_keys=["gt_page_id"],
-                materialize=False,
-            )
+            knn_nearest(pts, pts.select(F.col("title").alias("item"), "lat", "lon"))
         ),
         "minhash": _plan(minhash_candidates(augment_docs(docs))),
     }

@@ -3,17 +3,16 @@ DuckDB oracle), plus the span-sequence invariant and cell-codec properties."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from wikipedia_wikidata_spark.config import CELL_RES_BITS
 from wikipedia_wikidata_spark.functions.cells import cell_id, cell_xy, morton
 from wikipedia_wikidata_spark.operators.extract import load_documents, extract_views
-from wikipedia_wikidata_spark.operators.spatial import (
-    knn_nearest, knn_release, pip_join,
-)
+from wikipedia_wikidata_spark.operators.spatial import knn_nearest, pip_join
 from wikipedia_wikidata_spark.plans.importance import build_scored, entity_points
 
-from .conftest import SF_DIR_SMALL
+from .conftest import SF_DIR_SMALL, spark_jobs
 
 
 def _ray_cast_np(vy, vx, py, px):
@@ -50,23 +49,28 @@ def test_pip_matches_numpy_brute_force(spark):
     assert len(exp) > 0, "synthetic data must exercise PIP hits"
 
 
-def test_pip_salting_preserves_results(spark):
+def test_pip_salting_preserves_results(spark, monkeypatch):
     """Mega-cell salting must not change the join result, only the keys."""
+    import wikipedia_wikidata_spark.config as cfg
+
     ep = entity_points(spark, SF_DIR_SMALL).select("language", "title", "lat", "lon")
     polys = extract_views(load_documents(spark, SF_DIR_SMALL))["polygons"]
     base = {
         tuple(r) for r in pip_join(ep, polys.select("item", "verts"), res=5)
         .select("language", "title", "item").collect()
     }
+    monkeypatch.setattr(cfg, "MEGA_CELL_THRESHOLD", 5)
     salted = {
         tuple(r) for r in pip_join(
-            ep, polys.select("item", "verts"), res=5, salt=4, hot_threshold=5
+            ep, polys.select("item", "verts"), res=5, salt=4
         ).select("language", "title", "item").collect()
     }
     assert base == salted and len(base) > 0
 
 
-def test_knn_matches_numpy_brute_force(spark):
+def _knn_fixture(spark):
+    """The sf0.001 entity points and places, plus hand-placed ones that
+    level 13 cannot resolve: every sf0.001 point sits on its own place."""
     sc, v = build_scored(spark, SF_DIR_SMALL)
     ep = sc.filter(
         F.col("wd_page_title").isNotNull() & F.col("lat").isNotNull()
@@ -74,17 +78,59 @@ def test_knn_matches_numpy_brute_force(spark):
     places = v["wikidata_places"].filter(F.col("lat").isNotNull()).select(
         "item", "lat", "lon"
     )
-    knn = knn_nearest(ep, places)
+    # "guarded" sits at the south-west corner of a level-13 cell in the
+    # mid-Atlantic. Its only neighborhood place is one cell east, beyond
+    # the guard; the true nearest is two cells north, outside the 3x3.
+    h, w = 180.0 / (1 << 13), 360.0 / (1 << 13)
+    lat, lon = -90.0 + 4551 * h + 0.001, -180.0 + 3413 * w + 0.001
+    ep = ep.unionByName(spark.createDataFrame(
+        [("zz", "lonely", -60.0, -150.0), ("zz", "guarded", lat, lon)],
+        ep.schema,
+    ))
+    places = places.unionByName(spark.createDataFrame(
+        [("Q_east", lat, lon + 0.08), ("Q_north", lat + 0.045, lon)],
+        places.schema,
+    ))
+    return ep, places
+
+
+def _unresolved_kinds(pts, pls, b):
+    """Numpy count of the points level ``b`` leaves unresolved, by kind:
+    (no place in the 3x3 cells, neighborhood minimum beyond the guard)."""
+    n = 1 << b
+    px, py = cell_xy(pts.lat.to_numpy(), pts.lon.to_numpy(), b)
+    gx, gy = cell_xy(pls.lat.to_numpy(), pls.lon.to_numpy(), b)
+    near = (np.isin((gx[None, :] - px[:, None]) % n, (0, 1, n - 1))
+            & (np.abs(gy[None, :] - py[:, None]) <= 1))
+    d2 = ((pts.lat.to_numpy()[:, None] - pls.lat.to_numpy()[None, :]) ** 2
+          + (pts.lon.to_numpy()[:, None] - pls.lon.to_numpy()[None, :]) ** 2)
+    nearest = np.where(near, d2, np.inf).min(axis=1)
+    empty = ~near.any(axis=1)
+    return int(empty.sum()), int((~empty & (nearest > (180.0 / n) ** 2)).sum())
+
+
+@pytest.mark.parametrize(
+    "levels", [[13, 8, 0], [13, 10, 7, 4, 0], [0]],
+    ids=lambda ladder: "-".join(map(str, ladder)),
+)
+def test_knn_matches_numpy_brute_force(spark, levels):
+    ep, places = _knn_fixture(spark)
     got = {
-        (r.language, r.title): (r.nearest_item, r.dist2) for r in knn.collect()
+        (r.language, r.title): (r.nearest_item, r.dist2)
+        for r in knn_nearest(ep, places, levels=levels).collect()
     }
-    knn_release(knn)
-    pts = ep.collect()
-    pls = places.collect()
+    pts = ep.toPandas()
+    pls = places.toPandas()
     assert len(pls) > 3
-    for p in pts:
+    # level 13 leaves both kinds of point for the coarser levels: one with
+    # no place in its neighborhood (an all-NULL candidate row) and one
+    # whose neighborhood minimum is beyond the guard
+    no_place, beyond_guard = _unresolved_kinds(pts, pls, 13)
+    assert no_place > 0 and beyond_guard > 0, (no_place, beyond_guard)
+    for p in pts.itertuples():
         cands = sorted(
-            ((p.lat - g.lat) ** 2 + (p.lon - g.lon) ** 2, g.item) for g in pls
+            ((p.lat - g.lat) ** 2 + (p.lon - g.lon) ** 2, g.item)
+            for g in pls.itertuples()
         )
         d2, item = cands[0]
         gi, gd = got[(p.language, p.title)]
@@ -94,31 +140,19 @@ def test_knn_matches_numpy_brute_force(spark):
 
 
 def test_knn_does_not_leak_persisted_rdds(spark):
-    """Round-1 verdict #5: repeated knn_nearest calls must not accumulate
-    per-level caches; after knn_release the session is back to baseline."""
-    sc, v = build_scored(spark, SF_DIR_SMALL)
-    ep = sc.filter(
-        F.col("wd_page_title").isNotNull() & F.col("lat").isNotNull()
-    ).select("language", "title", "lat", "lon")
-    places = v["wikidata_places"].filter(F.col("lat").isNotNull()).select(
-        "item", "lat", "lon"
-    )
+    """knn_nearest submits no Spark job when called, and consuming its
+    result three times leaves no persisted RDD behind."""
+    ep, places = _knn_fixture(spark)
 
     def n_persisted():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
     base = n_persisted()
-    peaks = []
+    out, jobs = spark_jobs(spark, lambda: knn_nearest(ep, places))
+    assert jobs == []
     for _ in range(3):
-        out = knn_nearest(ep, places)
-        out.count()
-        peaks.append(n_persisted())
-        knn_release(out)
-    # bounded: at most the one documented result cache while held, and back
-    # to (at most) baseline after release — async ContextCleaner may shrink
-    # the count below base, so <= not ==.
-    assert max(peaks) <= base + 1
-    assert n_persisted() <= base
+        out.collect()
+        assert n_persisted() <= base
 
 
 def test_cell_codec_properties():
@@ -272,10 +306,8 @@ def test_knn_ladder_derived_from_place_density(spark):
     ep = spark.createDataFrame(pts)
     for places_pd, ladder in ((dense, d_ladder), (sparse, s_ladder)):
         places = spark.createDataFrame(places_pd)
-        knn = knn_nearest(ep, places, levels=ladder)
         got = {(r.language, r.title): (r.nearest_item, r.dist2)
-               for r in knn.collect()}
-        knn_release(knn)
+               for r in knn_nearest(ep, places, levels=ladder).collect()}
         assert len(got) == len(pts)
         for _, p in pts.iterrows():
             d2, item = min(

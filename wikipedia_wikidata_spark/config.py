@@ -80,7 +80,6 @@ TILE_ZOOMS: list[int] = [4, 6, 8, 10]
 # Skew handling: cells with more than this many points get salted in the
 # spatial join (north_rule: "partitioning / shuffle / skew handled explicitly").
 MEGA_CELL_THRESHOLD = 20_000
-MEGA_CELL_SALT = 8
 
 
 def spans_dir_for(sf_dir: str) -> str:

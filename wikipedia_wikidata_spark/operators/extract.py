@@ -3,9 +3,9 @@
 Re-expresses the reference's seven ``bin/filter_*.py`` stream filters (P1-P8 in
 SURVEY.md §2.2) as declarative DataFrame expressions over
 ``explode(spans)`` — Catalyst pushes the ``kind`` predicates and prunes
-columns; nothing here is per-row Python. The one pandas UDF (``round5``)
-exists for the reference's Python ``round(x, 5)`` half-even semantics
-(bin/filter_wikidata_geo_tags.py:50-51) and is Arrow-vectorized.
+columns; nothing here is per-row Python. ``round5_col`` models the
+reference's Python ``round(x, 5)`` half-even semantics
+(bin/filter_wikidata_geo_tags.py:50-51) as a JVM expression.
 
 Each extractor cites the reference filter it models.
 """
@@ -14,28 +14,18 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 from ..config import LANGUAGES, SEP
 from ..sources.catalog import session_table
 
 
-@pandas_udf(DoubleType())
-def round5(x: pd.Series) -> pd.Series:
-    """Vectorized half-even round to 5 decimals (numpy); models the
-    reference's Python round() in bin/filter_wikidata_geo_tags.py:50-51."""
-    return pd.Series(np.round(x.to_numpy(dtype="float64"), 5))
-
-
 def round5_col(col: str) -> Column:
-    """JVM twin of round5: rint(x*1e5)/1e5 is numpy.round's exact algorithm
-    (same IEEE ops, half-even), but stays in whole-stage codegen — the
-    pandas UDF put a Python exchange in the middle of the importance chain."""
+    """Half-even round to 5 decimals, the reference's Python round() in
+    bin/filter_wikidata_geo_tags.py:50-51: rint(x*1e5)/1e5 is numpy.round's
+    exact algorithm (same IEEE ops, half-even), and stays in whole-stage
+    codegen — no Python exchange in the middle of the importance chain."""
     return F.expr(f"rint({col} * 100000.0) / 100000.0")
 
 
@@ -192,7 +182,7 @@ def wd_page_view(sp: DataFrame) -> DataFrame:
 
 def geo_tags_view(sp: DataFrame) -> DataFrame:
     """P4+F5: bin/filter_wikidata_geo_tags.py:28-53 — earth, primary, not
-    (0,0), in-bounds; round to 5 decimals (half-even, Arrow-vectorized).
+    (0,0), in-bounds; round to 5 decimals (half-even, round5_col).
 
     Payload: gt_page_id\\x1fglobe\\x1fprimary\\x1flat\\x1flon.
     """

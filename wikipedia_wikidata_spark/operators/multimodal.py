@@ -18,18 +18,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, FloatType, IntegerType, StringType, StructField,
+    ArrayType, FloatType, IntegerType, StringType, StructField,
     StructType,
 )
 
 FEATURE_DIM = 8
-
-MEDIA_SCHEMA = StructType([
-    StructField("doc_id", StringType()),
-    StructField("media_ref", StringType()),
-    StructField("caption", StringType()),
-    StructField("payload", BinaryType()),
-])
 
 FEATURES_SCHEMA = StructType([
     StructField("doc_id", StringType()),

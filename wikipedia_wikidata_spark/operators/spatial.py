@@ -13,8 +13,9 @@ Design (SURVEY.md §4 "custom work"):
   two engines agree bit-for-bit.
 - kNN = multi-level grid search: resolve each point at the finest level where
   a 3x3 cell neighborhood provably contains its nearest place (guard radius),
-  degrading to coarser levels for sparse regions; a fixed lazy DAG, no driver
-  loops. Equals the brute-force oracle by construction.
+  degrading to coarser levels for sparse regions. The result is one lazy
+  DataFrame: no driver loop, no Spark job at call time, no cache to release.
+  Equals the brute-force oracle by construction.
 - Skew (mega-cells, FIXTURES.md §6): optional salting of hot cells +
   AQE skew-join (session.py) — see pip_join(salt=...).
 """
@@ -88,7 +89,7 @@ def duckdb_ray_cast_sql(verts: str, plat: str, plon: str) -> str:
 
 
 def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
-             salt: int | None = None, hot_threshold: int | None = None) -> DataFrame:
+             salt: int | None = None) -> DataFrame:
     """Cell-bucketed point-in-polygon join.
 
     points:   any DataFrame with lat/lon columns.
@@ -96,8 +97,8 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
     Returns points columns + matching polygon ``item`` (inner; one row per
     (point, containing polygon) pair).
 
-    salt/hot_threshold: explicit mega-cell skew handling (north_rule). Cells
-    holding more than ``hot_threshold`` points get their point rows salted
+    salt: explicit mega-cell skew handling (north_rule). Cells holding more
+    than config.MEGA_CELL_THRESHOLD points get their point rows salted
     into ``salt`` sub-keys and the polygon side replicated across the salts,
     so one urban cell spreads over ``salt`` shuffle keys instead of pinning a
     single task. (AQE skew-join splits oversized *partitions*; salting splits
@@ -133,11 +134,10 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
     n_parts = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     cov = cov.repartition(n_parts)
     if salt:
-        hot_threshold = hot_threshold or MEGA_CELL_THRESHOLD
         hot = (
             pts.groupBy("_px", "_py")
             .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > hot_threshold)
+            .filter(F.col("_n") > MEGA_CELL_THRESHOLD)
             .select(
                 F.col("_px").alias("_hx"), F.col("_py").alias("_hy"),
                 F.lit(True).alias("_hot"),
@@ -199,28 +199,25 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
     return out.drop("_salt") if salt else out
 
 
-def suggest_pip_salt(
-    points: DataFrame,
-    res: int = 5,
-    target_rows_per_key: int | None = None,
-) -> tuple[int, dict]:
+def suggest_pip_salt(points: DataFrame, res: int = 5) -> tuple[int, dict]:
     """Measure-then-salt (north_rule 'skew handled explicitly'): per-cell
     point histogram at the PIP join's resolution -> the salt factor that
-    spreads the hottest cell down to ``target_rows_per_key`` (default
-    MEGA_CELL_THRESHOLD, the same threshold pip_join salts at). Returns
-    (salt, skew_stats dict); salt == 1 means no salting needed. One
-    map-side-combined groupBy over the points — a scalar diagnostic job the
-    pipeline runs once before the spatial stage, so the shipped salt comes
-    from OBSERVED data, not a guess (operators/skew.py is the generic
-    measurement; this binds it to pip_join's key space)."""
+    spreads the hottest cell down to config.MEGA_CELL_THRESHOLD (the same
+    threshold pip_join salts at). Returns (salt, skew_stats dict); salt == 1
+    means no salting needed. One map-side-combined groupBy over the points
+    — a scalar diagnostic job the pipeline runs once before the spatial
+    stage, so the shipped salt comes from OBSERVED data, not a guess
+    (operators/skew.py is the generic measurement; this binds it to
+    pip_join's key space)."""
     from ..config import CELL_RES_BITS, MEGA_CELL_THRESHOLD
     from .skew import skew_stats
 
     bits = CELL_RES_BITS[res]
     px, py = xy_cols(F.col("lat"), F.col("lon"), bits)
     keyed = points.select(px.alias("_px"), py.alias("_py"))
-    target = target_rows_per_key or MEGA_CELL_THRESHOLD
-    stats = skew_stats(keyed, ["_px", "_py"], target_rows_per_key=target)
+    stats = skew_stats(
+        keyed, ["_px", "_py"], target_rows_per_key=MEGA_CELL_THRESHOLD
+    )
     return stats["suggested_salt"], stats
 
 
@@ -299,23 +296,27 @@ def suggest_knn_ladder(places: DataFrame) -> tuple[list[int], dict]:
 
 
 def knn_release(df: DataFrame) -> None:
-    """Unpersist a knn_nearest result (the one cache it returns)."""
+    """Unpersist ``df``. knn_nearest results are lazy and hold no cache, so
+    on them this does nothing."""
     df.unpersist()
 
 
 def knn_nearest(points: DataFrame, places: DataFrame,
-                levels: list[int] | None = None,
-                point_keys: list[str] | None = None,
-                materialize: bool = True) -> DataFrame:
-    """Top-1 nearest place per point (J15) as a fixed multi-level lazy DAG.
+                levels: list[int] | None = None) -> DataFrame:
+    """Top-1 nearest place per point (J15) as one lazy chain of levels.
 
-    points: (*point_keys, lat, lon); places: (item, lat, lon).
+    points: (language, title, lat, lon, ...); places: (item, lat, lon).
     At grid level ``b`` a point's 3x3 cell neighborhood is searched (places
     exploded to their 9 neighbor cells); a hit is accepted iff
     dist^2 <= (180/2^b)^2 — any place outside the neighborhood is at least one
     full cell (180/2^b degrees) away, so the found minimum is the true
     nearest. Unresolved points cascade to the next coarser level; level 0 is
     one global cell (brute force for the stragglers). Ties broken by item.
+
+    The result is an ordinary DataFrame: nothing runs until it is consumed
+    and nothing is cached. Each level reads the previous level's per-point
+    minimum once (never the points again), so each level adds one sub-plan
+    and exchange reuse runs every shuffle once.
     """
     # start fine so dense (urban mega-cell) regions resolve with small
     # neighborhoods; sparse regions cascade coarser. Level 0 = brute force
@@ -323,21 +324,21 @@ def knn_nearest(points: DataFrame, places: DataFrame,
     # candidate-pair count ~64x (measured 71s -> 12s at sf1): with urban
     # clustering a level-10 3x3 neighborhood pairs nearly every city point
     # with every city place.
-    # Three levels, not five: every level is a fixed ~4-shuffle sub-DAG, so
-    # ladder length is a per-JOB constant cost (measured 8.7s for
-    # [13,10,7,4,0] vs 2.1s for [13,8,0] on identical output at sf0.1).
+    # Three levels, not five: every level is a fixed ~3-shuffle sub-DAG, so
+    # ladder length is a per-job constant cost (measured 5.8s for
+    # [13,10,7,4,0] vs 2.8s for [13,8,0] on identical output at sf0.1,
+    # AQE off, local[4]).
     # Level 13's guard (180/8192 deg ~ 2.4km) resolves the dense mass;
     # level 8's guard (0.70 deg ~ 78km) resolves everything within 78km of
     # any place, so the global level-0 stage sees only >78km-isolated
     # points — a vanishing set at any realistic place density. Denser or
     # sparser worlds tune the ladder via the parameter.
     levels = levels or [13, 8, 0]
-    point_keys = point_keys or ["language", "title"]
     assert levels[-1] == 0, "last level must be global"
+    keys = ["language", "title"]
 
     results = []
-    cached = []
-    remaining = points.select(*point_keys, "lat", "lon")
+    remaining = points.select(*keys, "lat", "lon")
     for b in levels:
         n = 1 << b
         px, py = xy_cols(F.col("lat"), F.col("lon"), b)
@@ -365,7 +366,14 @@ def knn_nearest(points: DataFrame, places: DataFrame,
             # cell; at real levels the 9 neighbor rows are distinct by
             # construction and the dedup would be a pointless wide shuffle
             pl = pl.dropDuplicates(["g_item", "_gx", "_gy"])
-        cand = pts.join(pl, (pts["_cx"] == pl["_gx"]) & (pts["_cy"] == pl["_gy"]))
+        # above level 0 a point with no place in its neighborhood keeps one
+        # all-NULL candidate: its minimum has a NULL _d2, is not accepted,
+        # and carries the point (lat/lon ride in the payload) to the next
+        # level. Level 0 is inner, so empty places give no rows.
+        cand = pts.join(
+            pl, (pts["_cx"] == pl["_gx"]) & (pts["_cy"] == pl["_gy"]),
+            "left" if b > 0 else "inner",
+        )
         # explicit multiplication (not pow) so the DuckDB oracle's identical
         # expression is bit-equal
         dlat = F.col("lat") - F.col("g_lat")
@@ -384,56 +392,30 @@ def knn_nearest(points: DataFrame, places: DataFrame,
             F.col("_d2"), F.col("g_item"), F.col("lat"), F.col("lon")
         )
         best = (
-            cand.groupBy(*point_keys)
+            cand.groupBy(*keys)
             .agg(F.min(payload).alias("_b"))
             .select(
-                *point_keys,
+                *keys,
                 F.col("_b.lat").alias("lat"),
                 F.col("_b.lon").alias("lon"),
                 F.col("_b._d2").alias("_d2"),
                 F.col("_b.g_item").alias("g_item"),
             )
         )
-        # persist per level: without it the cascading remaining/accepted
-        # lineage recomputes every earlier level (exponential blowup).
-        # Lazy mode (materialize=False) is plan-inspection only and must not
-        # register caches nobody can release.
-        if materialize:
-            best = best.persist()
-            cached.append(best)
-        if b > 0:
-            guard = (180.0 / n) ** 2
-            accepted = best.filter(F.col("_d2") <= F.lit(guard))
-        else:
-            accepted = best
+        hit = F.col("_d2") <= F.lit((180.0 / n) ** 2) if b > 0 else F.lit(True)
         results.append(
-            accepted.select(
-                *point_keys, "lat", "lon",
+            best.filter(hit).select(
+                *keys, "lat", "lon",
                 F.col("g_item").alias("nearest_item"),
                 F.col("_d2").alias("dist2"),
             )
         )
-        if b > 0:
-            remaining = pts.join(
-                accepted.select(*point_keys), point_keys, "left_anti"
-            ).select(*point_keys, "lat", "lon")
+        remaining = best.filter(~F.coalesce(hit, F.lit(False))).select(
+            *keys, "lat", "lon"
+        )
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
-    if not materialize:
-        # PLAN-INSPECTION ONLY: nothing is persisted in this mode, so
-        # executing the returned DataFrame recomputes every earlier level
-        # per level (exponential) — use the default for real runs.
-        return out
-    # Materialize the union ONCE while the per-level caches are hot, then
-    # drop them: without this every knn_nearest call leaked len(levels)
-    # persisted DataFrames for the life of the session (round-1 verdict).
-    # The result itself is the single remaining cache; callers release it
-    # with knn_release() when done.
-    out = out.persist()
-    out.count()
-    for c in cached:
-        c.unpersist()
     return out
 
 

@@ -11,7 +11,7 @@ Float-valued outputs are quantized with floor(x*1e6 + 0.5) *in both engines*
 
 from __future__ import annotations
 
-from .config import LANGUAGES, PLACE_TYPE_LEVELS
+from .config import LANGUAGES
 
 SPANS_SF001 = "/root/repo/data/spans_sf0.01/documents.parquet"
 LEVELS_SF001 = "/root/repo/data/spans_sf0.01/place_type_levels.parquet"
@@ -303,10 +303,6 @@ def _spatial_oracles() -> dict[str, str]:
     ray = duckdb_ray_cast_sql("g.verts", "p.lat", "p.lon")
     tx, ty = tile_sql("z.zoom", "p.lat", "p.lon")
     return {
-        "entity_points": q(
-            f"SELECT language, title, wikidata_id, lat, lon, {E6} AS importance_e6"
-            " FROM entity_points"
-        ),
         "cell_encode": q(
             f"SELECT language, title, {cells}, {morton_sql('lat', 'lon')} AS s2_morton"
             " FROM entity_points"
@@ -430,8 +426,6 @@ FROM (SELECT DISTINCT {cell_sql('lat', 'lon', res)} AS cell_id FROM entity_point
 
 ORACLES: dict[str, str] = {
     "extract_page": q("SELECT language, page_id, page_title FROM page"),
-    "extract_linktarget": q("SELECT language, lt_id, lt_title FROM linktarget"),
-    "extract_redirect": q("SELECT language, rd_from, rd_title FROM redirect"),
     "extract_pagelink": q("SELECT language, pl_from, pl_target_id FROM pagelink"),
     "extract_langlinks": q("SELECT language, ll_from, ll_lang, ll_title FROM langlinks"),
     "extract_wd_page": q("SELECT page_id, page_title FROM wd_page"),
@@ -626,10 +620,6 @@ JOIN page pg ON pg.language = r.language AND pg.page_id = r.node"""
 
 
 ORACLES["pagerank_links"] = _pagerank_oracle()
-
-
-def sanity_check_levels() -> None:
-    assert len(PLACE_TYPE_LEVELS) >= 5
 
 
 def _spatial_cluster_oracle(res: int = 6, min_pts: int = 2) -> str:

@@ -38,7 +38,7 @@ from pyspark.util import inheritable_thread_target
 from ..config import LANGUAGES, spans_dir_for
 from ..operators import extract as ex
 from ..operators.spatial import (
-    knn_nearest, knn_release, pip_join, suggest_knn_ladder, suggest_pip_salt,
+    knn_nearest, pip_join, suggest_knn_ladder, suggest_pip_salt,
 )
 from ..operators.tiles import tile_importance
 from ..sources.catalog import Catalog
@@ -206,7 +206,6 @@ def run_pipeline(
 
     def knn(pts: DataFrame) -> None:
         knn_places = imp.geo_places(places)
-        built_knn: list[DataFrame] = []
         knn_extra: dict = {}
 
         def build_knn() -> DataFrame:
@@ -221,12 +220,9 @@ def run_pipeline(
             ladder, kstats = suggest_knn_ladder(knn_places)
             derive_ms = int((time.time() - t0) * 1000)
             knn_extra["knn_ladder"] = kstats | {"derive_ms": derive_ms}
-            built_knn.append(knn_nearest(pts, knn_places, levels=ladder))
-            return built_knn[0]
+            return knn_nearest(pts, knn_places, levels=ladder)
 
         stage("knn", build_knn, extra=lambda: knn_extra)
-        if built_knn:  # release the one cache knn_nearest returns (skip-safe)
-            knn_release(built_knn[0])
 
     def spatial() -> None:
         stage("entity_points", lambda: imp.geo_points(scored))

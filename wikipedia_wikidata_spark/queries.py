@@ -34,14 +34,6 @@ def q_extract_page(spark, sf_dir):
     return _views(spark, sf_dir)["page"]
 
 
-def q_extract_linktarget(spark, sf_dir):
-    return _views(spark, sf_dir)["linktarget"]
-
-
-def q_extract_redirect(spark, sf_dir):
-    return _views(spark, sf_dir)["redirect"]
-
-
 def q_extract_pagelink(spark, sf_dir):
     return _views(spark, sf_dir)["pagelink"]
 
@@ -198,13 +190,6 @@ def q_importance_pipeline(spark, sf_dir):
 
 # ---------------------------------------------------------------- spatial
 
-def q_entity_points(spark, sf_dir):
-    ep = imp.entity_points(spark, sf_dir)
-    return ep.select(
-        "language", "title", "wikidata_id", "lat", "lon", _e6("importance", "importance_e6")
-    )
-
-
 def q_cell_encode(spark, sf_dir):
     from .functions.cells import make_cell_udf, make_morton_udf
 
@@ -227,38 +212,12 @@ def q_spatial_join_pip(spark, sf_dir):
     )
 
 
-# q_knn_nearest_place must return a live (cached) DataFrame for the driver to
-# collect, so it cannot release its own handle; each invocation releases the
-# PREVIOUS one instead, bounding the session to a single cached kNN result.
-# An atexit hook releases the LAST one (a driver that never re-invokes would
-# otherwise leak it for the life of the session).
-_KNN_HANDLE: list = []
-
-
-def _release_knn_handles() -> None:
-    from .operators.spatial import knn_release
-
-    while _KNN_HANDLE:
-        try:
-            knn_release(_KNN_HANDLE.pop())
-        except Exception:
-            pass
-
-
-import atexit as _atexit
-
-_atexit.register(_release_knn_handles)
-
-
 def q_knn_nearest_place(spark, sf_dir):
     from .operators.spatial import knn_nearest
 
-    _release_knn_handles()
     sc, v = imp.build_scored(spark, sf_dir)
     ep = imp.geo_points(sc).select("language", "title", "lat", "lon")
-    out = knn_nearest(ep, imp.geo_places(v["wikidata_places"]))
-    _KNN_HANDLE.append(out)
-    return out.select(
+    return knn_nearest(ep, imp.geo_places(v["wikidata_places"])).select(
         "language", "title", "nearest_item",
         F.floor(F.col("dist2") * 1000000000.0 + 0.5).cast("bigint").alias("dist2_e9"),
     )

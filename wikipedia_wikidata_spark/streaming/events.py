@@ -258,9 +258,6 @@ def run_sliding_available_now(
     return spark.table(name)
 
 
-ATTRIB_OUT_SCHEMA = (
-    "view_id long, purchase_id long, user_id long, delay_us long"
-)
 ATTRIB_WINDOW_S = 6 * 3600
 
 
@@ -351,11 +348,6 @@ def run_attribution_available_now(
     )
     q.awaitTermination()
     return spark.table(name)
-
-
-MERGE_SINK_OUT_SCHEMA = (
-    "day string, event_type string, n_events long, value_sum_e6 long"
-)
 
 
 def run_stream_merge_to_catalog(
