@@ -154,7 +154,7 @@ def run_leg(salted: bool) -> dict:
             s["stageId"] for s in _rest(app_id, "/stages?status=complete")
         }
         t0 = time.time()
-        out = pip_join(pts, polys, res=5, salt=salt if salted else None)
+        out = pip_join(pts, polys, res=5, salt=salt if salted else 1)
         n_pairs = out.count()
         wall = time.time() - t0
         # per-task duration quantiles of the TIMED job's stages only (the

@@ -3,6 +3,10 @@
 import gzip
 import json
 import os
+import shutil
+import subprocess
+import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -633,3 +637,37 @@ def test_tile_viewport_serves_from_pruned_files(spark, tmp_path_factory):
         r for r in ranges if r[0] <= vp["x_max"] and r[1] >= vp["x_min"]
     ]
     assert 0 < len(overlapping) < len(ranges), (ranges,)
+
+
+def test_corpus_dir_follows_the_imported_checkout(tmp_path):
+    """The generated corpus lives in the data/ dir beside the imported
+    package, so a second checkout never reads or writes the first one's
+    corpus: every path that names it (spans_dir_for, synth's numeric-sf
+    branch, the oracle's sf0.01 paths) resolves under the copy. No Spark."""
+    import wikipedia_wikidata_spark as pkg
+
+    src = Path(pkg.__file__).resolve().parent
+    copy = tmp_path / "checkout"
+    shutil.copytree(src, copy / src.name,
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    code = (
+        "import json\n"
+        "import wikipedia_wikidata_spark as p\n"
+        "from wikipedia_wikidata_spark import config, oracle\n"
+        "from wikipedia_wikidata_spark.sources import synth\n"
+        "print(json.dumps([p.__file__, config.spans_dir_for('/x/sf0.01'),"
+        " synth.spans_dir_path(0.004)[0], oracle.SPANS_SF001,"
+        " oracle.LEVELS_SF001]))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=copy, env=env,
+        capture_output=True, text=True, timeout=120, check=True,
+    )
+    pkg_file, sf001, sf0004, spans, levels = json.loads(out.stdout)
+    assert Path(pkg_file).resolve().is_relative_to(copy.resolve())
+    data = (copy / "data").resolve()
+    assert Path(sf001) == data / "spans_sf0.01"
+    assert Path(sf0004) == data / "spans_sf0.004"
+    assert Path(spans) == data / "spans_sf0.01" / "documents.parquet"
+    assert Path(levels) == data / "spans_sf0.01" / "place_type_levels.parquet"

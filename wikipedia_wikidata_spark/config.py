@@ -8,6 +8,14 @@ CI uses a 2-language subset the same way, ``.github/workflows/ci.yml``).
 
 from __future__ import annotations
 
+import os
+
+# The generated-corpus cache: the data/ dir beside the imported package, so
+# each checkout reads and writes its own corpus (sources/synth.py).
+DATA_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "data"
+)
+
 # Languages included in the default sandbox build (the reference's CI uses a
 # 2-language subset the same way, .github/workflows/ci.yml). The production
 # configuration is LANGUAGES_FULL.
@@ -83,23 +91,19 @@ MEGA_CELL_THRESHOLD = 20_000
 
 
 def spans_dir_for(sf_dir: str) -> str:
-    """Map a driver sf dir (/root/testdata/sf0.01) to our synthesized
-    interleaved-documents dir (/root/repo/data/spans_sf0.01). A path that IS
+    """Map a scale-factor dir (.../sf0.01) to our synthesized
+    interleaved-documents dir (DATA_DIR/spans_sf0.01). A path that IS
     already a spans corpus dir (basename 'spans_*', e.g. a non-default
     language configuration from ensure_spans_data) maps to itself."""
-    import os
-
     tag = os.path.basename(os.path.normpath(sf_dir))
     if tag.startswith("spans_"):
         return os.path.normpath(sf_dir)
     if not tag.startswith("sf"):
         tag = "sf0.01"
-    return f"/root/repo/data/spans_{tag}"
+    return f"{DATA_DIR}/spans_{tag}"
 
 
 def sf_of(sf_dir: str) -> float:
-    import os
-
     tag = os.path.basename(os.path.normpath(sf_dir))
     if tag.startswith("spans_"):
         tag = tag[len("spans_"):]

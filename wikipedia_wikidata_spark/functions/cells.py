@@ -55,11 +55,15 @@ def _part1by1(v: np.ndarray) -> np.ndarray:
     return v
 
 
-def morton(lat: np.ndarray, lon: np.ndarray, bits: int = MORTON_BITS) -> np.ndarray:
-    # _part1by1/_spread_sql spread 16-bit inputs; a wider grid would silently
-    # alias distant cells (bit 16 masked off), so fail loudly instead
-    assert bits <= 16, f"morton supports bits <= 16, got {bits}"
-    x, y = cell_xy(np.asarray(lat, dtype=np.float64), np.asarray(lon, dtype=np.float64), bits)
+# _part1by1/_spread_sql spread 16-bit inputs; a wider grid would silently
+# alias distant cells (bit 16 masked off), so fail loudly instead
+assert MORTON_BITS <= 16, f"morton supports bits <= 16, got {MORTON_BITS}"
+
+
+def morton(lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
+    x, y = cell_xy(
+        np.asarray(lat, dtype=np.float64), np.asarray(lon, dtype=np.float64), MORTON_BITS
+    )
     return (_part1by1(y) << 1) | _part1by1(x)
 
 
@@ -74,10 +78,10 @@ def make_cell_udf(res: int):
     return _udf
 
 
-def make_morton_udf(bits: int = MORTON_BITS):
+def make_morton_udf():
     @pandas_udf(LongType())
     def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(morton(lat.to_numpy(dtype="float64"), lon.to_numpy(dtype="float64"), bits))
+        return pd.Series(morton(lat.to_numpy(dtype="float64"), lon.to_numpy(dtype="float64")))
 
     return _udf
 
@@ -134,8 +138,7 @@ def _spread_sql(e: str) -> str:
     return s
 
 
-def morton_sql(lat_expr: str, lon_expr: str, bits: int = MORTON_BITS) -> str:
-    assert bits <= 16, f"morton supports bits <= 16, got {bits}"
-    x = x_sql(lon_expr, bits)
-    y = y_sql(lat_expr, bits)
+def morton_sql(lat_expr: str, lon_expr: str) -> str:
+    x = x_sql(lon_expr, MORTON_BITS)
+    y = y_sql(lat_expr, MORTON_BITS)
     return f"(({_spread_sql(y)} << 1) | {_spread_sql(x)})"

@@ -37,7 +37,7 @@ alongside packing/dedup/quality.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -143,17 +143,14 @@ def _learn(docs: DataFrame, n_merges: int) -> tuple[list[tuple], DataFrame]:
     return merges, wf
 
 
-def bpe_merges(
-    docs: DataFrame, n_merges: int = N_MERGES, spark: SparkSession | None = None
-) -> DataFrame:
+def bpe_merges(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
     """Learned merge table (it, left_sym, right_sym, pair_count) —
     n_merges rows, the trained-tokenizer artifact. pair_count is
     non-increasing over iterations (a new pair's count is bounded by the
     count of the merge that created its symbol; old pairs only lose
     occurrences) — pinned by tests/test_bpe_contrastive.py."""
-    spark = spark or docs.sparkSession
     merges, _ = _learn(docs, n_merges)
-    return spark.createDataFrame(merges, MERGE_SCHEMA)
+    return docs.sparkSession.createDataFrame(merges, MERGE_SCHEMA)
 
 
 def bpe_vocab_segmentation(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:

@@ -32,20 +32,20 @@ from .text import hash60_col
 EVAL_MOD = 97
 
 
-def doc_grams(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """(doc_id, gram:int64) — distinct hashed word k-grams per document."""
+def doc_grams(docs: DataFrame) -> DataFrame:
+    """(doc_id, gram:int64) — distinct hashed word SHINGLE_K-grams per document."""
     return (
         docs.select(
             "doc_id",
             F.explode(
-                F.array_distinct(shingles_col(F.col("text"), k))
+                F.array_distinct(shingles_col(F.col("text"), SHINGLE_K))
             ).alias("_g"),
         )
         .select("doc_id", hash60_col(F.col("_g")).alias("gram"))
     )
 
 
-def contamination_report(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
+def contamination_report(docs: DataFrame) -> DataFrame:
     """Per TRAIN document: total distinct k-grams, how many collide with the
     eval split (doc_id % EVAL_MOD == 0), and the contaminated fraction
     (e6-quantized). Eval documents themselves are excluded from the report.
@@ -53,12 +53,12 @@ def contamination_report(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     base = docs.select("doc_id", "text")
     train = base.filter(F.col("doc_id") % EVAL_MOD != 0)
     eval_grams = (
-        doc_grams(base.filter(F.col("doc_id") % EVAL_MOD == 0), k)
+        doc_grams(base.filter(F.col("doc_id") % EVAL_MOD == 0))
         .select("gram")
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    tg = doc_grams(train, k)
+    tg = doc_grams(train)
     joined = tg.join(eval_grams, "gram", "left")
     per_doc = joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),

@@ -147,16 +147,17 @@ NGRAM_N = 2          # word bigrams for the n-gram Jaccard pass
 JACCARD_T = 0.6      # near-dup threshold
 
 
-def ngram_jaccard_pairs(docs: DataFrame, t: float = JACCARD_T) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
     """All-pairs n-gram Jaccard near-dup via prefix filtering (PPJoin-lite).
 
-    Candidate generation is EXACT for Jaccard >= t (no LSH recall loss):
-    each doc's distinct word-bigram set is ordered by ascending global
-    document frequency (rarest first); two sets with Jaccard >= t must share
-    a token within their first |x| - ceil(t*|x|) + 1 tokens, so the self-join
-    runs only on those prefixes — the rare tokens — which bounds fanout per
-    token and sidesteps the hot-key blowup a naive token self-join has at
-    scale. Verification recomputes exact Jaccard on the full sets.
+    Candidate generation is EXACT for Jaccard >= t = JACCARD_T (no LSH
+    recall loss): each doc's distinct word-bigram set is ordered by
+    ascending global document frequency (rarest first); two sets with
+    Jaccard >= t must share a token within their first |x| - ceil(t*|x|) + 1
+    tokens, so the self-join runs only on those prefixes — the rare tokens —
+    which bounds fanout per token and sidesteps the hot-key blowup a naive
+    token self-join has at scale. Verification recomputes exact Jaccard on
+    the full sets.
     Output: (doc_a, doc_b, jaccard_e6) for pairs with jaccard >= t.
     """
     prof = docs.select(
@@ -175,7 +176,7 @@ def ngram_jaccard_pairs(docs: DataFrame, t: float = JACCARD_T) -> DataFrame:
         )
     )
     n = F.size("toks")
-    plen = (n - F.ceil(F.lit(t) * n) + 1).cast("int")
+    plen = (n - F.ceil(F.lit(JACCARD_T) * n) + 1).cast("int")
     pref = ordered.select(
         "doc_id", F.explode(F.slice("toks", F.lit(1), plen)).alias("gram")
     )
@@ -196,7 +197,7 @@ def ngram_jaccard_pairs(docs: DataFrame, t: float = JACCARD_T) -> DataFrame:
     jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return (
         j.withColumn("_jac", jac)
-        .filter(F.col("_jac") >= t)
+        .filter(F.col("_jac") >= JACCARD_T)
         .select(
             "doc_a",
             "doc_b",
@@ -261,15 +262,14 @@ def incremental_minhash_dedup(
 
 
 WINDOW_K = 8  # tokens per duplicated-substring detection window
+WINDOW_MIN_DOCS = 2  # distinct documents a window must occur in
 
 
-def duplicate_window_spans(
-    docs: DataFrame, k: int = WINDOW_K, min_docs: int = 2
-) -> DataFrame:
+def duplicate_window_spans(docs: DataFrame, k: int = WINDOW_K) -> DataFrame:
     """Substring-LEVEL exact duplication detection (the Lee et al.
     "Deduplicating Training Data" primitive, window-hash form): hash every
     k-token window of every document and emit the windows whose hash occurs
-    in >= ``min_docs`` DISTINCT documents — the spans a substring-dedup
+    in >= WINDOW_MIN_DOCS DISTINCT documents — the spans a substring-dedup
     pass would cut, at token resolution, without any suffix array.
 
     Output: (doc_id, start_tok, gram60, n_docs) — one row per duplicated
@@ -302,7 +302,7 @@ def duplicate_window_spans(
     freq = (
         occ.groupBy("gram60")
         .agg(F.countDistinct("doc_id").cast("bigint").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= WINDOW_MIN_DOCS)
     )
     return occ.join(freq, "gram60").select(
         "doc_id", "start_tok", "gram60", "n_docs"

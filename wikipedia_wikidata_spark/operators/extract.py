@@ -37,6 +37,14 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{d}/documents.parquet")
 
 
+def load_place_type_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's (place_type, level) table, generating it on first use."""
+    from ..sources.synth import ensure_spans_data
+
+    d = ensure_spans_data(sf_dir)
+    return spark.read.parquet(f"{d}/place_type_levels.parquet")
+
+
 def spans_flat(docs: DataFrame) -> DataFrame:
     """One row per span: (doc_id, language, kind, text, media_ref, offset, f).
 
@@ -254,18 +262,11 @@ def polygons_view(sp: DataFrame) -> DataFrame:
 
 
 def extract_views(
-    docs: DataFrame, languages: list[str] | None = None, cache: bool = False
+    docs: DataFrame, languages: list[str] | None = None
 ) -> dict[str, DataFrame]:
-    """All relational views. cache=True persists the exploded span table so
-    the ~10 views share one scan+explode (the in-memory analog of the
-    pipeline's kind-partitioned spans_flat checkpoint; at 100 TB use
-    plans/pipeline.py instead)."""
-    sp = spans_flat(docs)
-    if cache:
-        from pyspark.storagelevel import StorageLevel
-
-        sp = sp.persist(StorageLevel.MEMORY_AND_DISK)
-    return views_from_flat(sp, languages)
+    """All relational views over one lazy span explode (for a shared
+    scan+explode use extract_views_shared or plans/pipeline.py)."""
+    return views_from_flat(spans_flat(docs), languages)
 
 
 def extract_views_shared(

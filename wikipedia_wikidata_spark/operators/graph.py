@@ -83,8 +83,6 @@ def link_edges(v: dict[str, DataFrame]) -> DataFrame:
 def pagerank(
     edges: DataFrame,
     iters: int = PR_ITERS,
-    damping: float = PR_DAMPING,
-    teleport: float = PR_TELEPORT,
     materialize: bool = True,
     checkpoint_every: int = 10,
 ) -> DataFrame:
@@ -97,10 +95,11 @@ def pagerank(
     All arithmetic is int64 fixed-point (`div` = exact integer division, not
     double `/` + cast — a double quotient can round across the floor
     boundary): rank0 = PR_SCALE div n; per-edge contribution =
-    rank_fp div outdeg; rank = (teleport*PR_SCALE) div n
+    rank_fp div outdeg; rank = (PR_TELEPORT*PR_SCALE) div n
     + (damping_num * sum) div damping_den. Integer sums are order-invariant,
     so the result is bit-identical across engines and partitionings —
-    damping/teleport must be expressible as hundredths for this (0.85 = 85/100).
+    PR_DAMPING/PR_TELEPORT must be expressible as hundredths for this
+    (0.85 = 85/100).
 
     checkpoint_every: at hundreds of iterations the unrolled rank lineage
     itself becomes the bottleneck (planning time + stack growth), so the
@@ -119,9 +118,9 @@ def pagerank(
     (durable, resumable) instead; localCheckpoint is the in-session analog —
     same role as the scored-table checkpoint in plans/importance.py.
     """
-    d_num, t_num = round(damping * 100), round(teleport * 100)
-    assert abs(d_num / 100.0 - damping) < 1e-12, "damping must be n/100"
-    assert abs(t_num / 100.0 - teleport) < 1e-12, "teleport must be n/100"
+    d_num, t_num = round(PR_DAMPING * 100), round(PR_TELEPORT * 100)
+    assert abs(d_num / 100.0 - PR_DAMPING) < 1e-12, "damping must be n/100"
+    assert abs(t_num / 100.0 - PR_TELEPORT) < 1e-12, "teleport must be n/100"
     t_fp = PR_SCALE * t_num // 100  # exact: 10^15 * 15 / 100 = 1.5e14
     if materialize:
         edges = edges.localCheckpoint()
@@ -188,6 +187,9 @@ def pagerank(
 # the star path (each probe round materializes a localCheckpoint, so the
 # probe budget is paid in real passes)
 AUTO_PROBE_ITERS = 8
+# connected_components_star safety backstop, far above the O(log^2 n) worst
+# case for any representable graph (2^40 nodes)
+STAR_MAX_ROUNDS = 40
 
 
 def connected_components(
@@ -317,7 +319,6 @@ def connected_components_star(
     pairs: DataFrame,
     a: str = "doc_a",
     b: str = "doc_b",
-    max_iters: int = 40,
     _rounds_out: list | None = None,
 ) -> DataFrame:
     """Connected components by alternating large-star/small-star
@@ -331,8 +332,7 @@ def connected_components_star(
 
     Convergence test is EXACT set equality of the canonically-oriented edge
     set between rounds (two driver-side scalar counts — a checksum could
-    collide and silently stop early). max_iters=40 is a safety backstop far
-    above the O(log^2 n) worst case for any representable graph (2^40 nodes).
+    collide and silently stop early); STAR_MAX_ROUNDS is the backstop.
 
     _rounds_out: test hook; when a list is passed, the round count is
     appended so tests can assert the O(log n) bound.
@@ -355,7 +355,7 @@ def connected_components_star(
     )
     converged = False
     rounds = 0
-    for _ in range(max_iters):
+    for _ in range(STAR_MAX_ROUNDS):
         rounds += 1
         nxt = _small_star(_large_star(cur)).localCheckpoint()
         # exact multiset equality of two distinct sets: equal counts AND
@@ -369,7 +369,7 @@ def connected_components_star(
         _rounds_out.append(rounds)
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} rounds"
+            f"connected_components_star did not converge in {STAR_MAX_ROUNDS} rounds"
         )
     labels = cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
     roots = nodes.join(
@@ -378,12 +378,12 @@ def connected_components_star(
     return labels.unionByName(roots)
 
 
-def pagerank_titles(v: dict[str, DataFrame], iters: int = PR_ITERS) -> DataFrame:
+def pagerank_titles(v: dict[str, DataFrame]) -> DataFrame:
     """PageRank joined back to page titles: (language, title, rank_e9).
     rank_e9 = rank_fp div 10^6 — an EXACT integer projection of the exact
     fixed-point rank, so the cross-engine value hash has no float-boundary
     tail risk at any scale (round-3 ADVICE)."""
-    pr = pagerank(link_edges(v), iters=iters)
+    pr = pagerank(link_edges(v))
     pg = v["page"].select(
         "language", F.col("page_id").alias("node"), F.col("page_title").alias("title")
     )
@@ -488,11 +488,11 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     )
 
 
-def hits_titles(v: dict[str, DataFrame], iters: int = HITS_ITERS) -> DataFrame:
+def hits_titles(v: dict[str, DataFrame]) -> DataFrame:
     """HITS joined back to page titles: (language, title, hub_e6, auth_e6)
     — exact integer projections (div 10^3) of the exact fixed-point
     values, zero float-boundary tail risk (the pagerank_titles contract)."""
-    h = hits(link_edges(v), iters=iters)
+    h = hits(link_edges(v))
     pg = v["page"].select(
         "language", F.col("page_id").alias("node"), F.col("page_title").alias("title")
     )

@@ -4,8 +4,7 @@ actual image decode is STUBBED — no imaging libs in this container).
 
 media spans (kind='media', media_ref='img://<hash>') become a media table with
 a deterministic fake binary payload; ``media_features`` runs a batched
-"decode + feature extract" over it. Set use_real_decoder=True to hit the
-NotImplementedError where a real decoder (PIL/ffmpeg) would plug in.
+"decode + feature extract" over it.
 """
 
 from __future__ import annotations
@@ -50,7 +49,7 @@ def media_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def media_features(media: DataFrame, use_real_decoder: bool = False) -> DataFrame:
+def media_features(media: DataFrame) -> DataFrame:
     """Arrow-batched decode + feature extraction over binary payloads.
 
     The stub derives (width, height, n_frames, 8-dim feature) from the payload
@@ -58,10 +57,6 @@ def media_features(media: DataFrame, use_real_decoder: bool = False) -> DataFram
 
     def _decode_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if use_real_decoder:
-                raise NotImplementedError(
-                    "real image decode needs PIL/ffmpeg; not in this container"
-                )
             payloads = pdf["payload"].to_numpy()
             b = np.frombuffer(b"".join(payloads), dtype=np.uint8).reshape(len(pdf), 16)
             out = pd.DataFrame(
@@ -95,7 +90,7 @@ RESIZE_SCHEMA = StructType([
 RESIZE_BOX = 128
 
 
-def media_resize(media: DataFrame, use_real_decoder: bool = False) -> DataFrame:
+def media_resize(media: DataFrame) -> DataFrame:
     """Arrow-batched 'resize': fit each media item into a RESIZE_BOX square
     preserving aspect ratio (integer arithmetic only, so the DuckDB oracle
     matches exactly). The pixel work is stubbed (md5 of ref+dims stands in
@@ -103,10 +98,6 @@ def media_resize(media: DataFrame, use_real_decoder: bool = False) -> DataFrame:
 
     def _resize_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if use_real_decoder:
-                raise NotImplementedError(
-                    "real image resize needs PIL; not in this container"
-                )
             payloads = pdf["payload"].to_numpy()
             b = np.frombuffer(b"".join(payloads), dtype=np.uint8).reshape(len(pdf), 16)
             w = 256 + b[:, 0].astype(np.int64) * 4
@@ -139,8 +130,11 @@ FRAME_SCHEMA = StructType([
 ])
 
 
-def media_frame_sample(media: DataFrame, step: int = 2) -> DataFrame:
-    """Row-expanding mapInPandas (UDTF shape): every step-th frame of each
+FRAME_STEP = 2
+
+
+def media_frame_sample(media: DataFrame) -> DataFrame:
+    """Row-expanding mapInPandas (UDTF shape): every FRAME_STEP-th frame of each
     media item becomes its own row. Frame count comes from the stub decode;
     frame bytes are stubbed as md5(ref:idx)."""
 
@@ -149,7 +143,7 @@ def media_frame_sample(media: DataFrame, step: int = 2) -> DataFrame:
             payloads = pdf["payload"].to_numpy()
             b = np.frombuffer(b"".join(payloads), dtype=np.uint8).reshape(len(pdf), 16)
             n_frames = 1 + (b[:, 2].astype(np.int64) % 8)
-            idxs = [np.arange(0, n, step) for n in n_frames]
+            idxs = [np.arange(0, n, FRAME_STEP) for n in n_frames]
             cnt = np.array([len(i) for i in idxs])
             rows = np.repeat(np.arange(len(pdf)), cnt)
             flat_idx = np.concatenate(idxs) if len(idxs) else np.array([], dtype=np.int64)

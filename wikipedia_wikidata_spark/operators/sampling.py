@@ -51,16 +51,12 @@ def hash_sample(
 
 
 def stratified_sample(
-    df: DataFrame,
-    strata_cols: list[str],
-    cap: int,
-    key_col: str,
-    seed: int = DEFAULT_SEED,
+    df: DataFrame, strata_cols: list[str], cap: int, key_col: str
 ) -> DataFrame:
     """At most ``cap`` rows per stratum, chosen by deterministic hash order
     (tie-broken by the key itself) — balanced class downsampling whose
     output is independent of partitioning and retries."""
-    h = _sample_hash(key_col, seed)
+    h = _sample_hash(key_col, DEFAULT_SEED)
     w = Window.partitionBy(*strata_cols).orderBy(
         h.asc(), F.col(key_col).asc()
     )
@@ -107,17 +103,13 @@ def shard_shuffle(
     )
 
 
-def rebalance_sources(
-    docs: DataFrame,
-    max_tokens_per_source: int,
-    seed: int = DEFAULT_SEED,
-) -> DataFrame:
+def rebalance_sources(docs: DataFrame, max_tokens_per_source: int) -> DataFrame:
     """Token-budgeted source rebalancing — the mix-weighting step after the
     source_mix report: downsample every source to at most ~max_tokens
     whitespace tokens by a deterministic per-source keep fraction, leaving
     under-budget sources intact.
 
-    keep iff hash60(seed:doc_id) mod 1e6 < frac_e6, where frac_e6 =
+    keep iff hash60(DEFAULT_SEED:doc_id) mod 1e6 < frac_e6, where frac_e6 =
     min(1e6, max_tokens*1e6 div source_tokens) in EXACT integer arithmetic
     (no float fraction can disagree with the oracle's threshold). Returns
     (doc_id, source, n_tokens, frac_e6) for kept docs.
@@ -145,18 +137,14 @@ def rebalance_sources(
     keep = (
         d.join(F.broadcast(stats), "source")
         .filter(
-            F.pmod(_sample_hash("doc_id", seed), F.lit(SAMPLE_MOD))
+            F.pmod(_sample_hash("doc_id", DEFAULT_SEED), F.lit(SAMPLE_MOD))
             < F.col("frac_e6")
         )
     )
     return keep.select("doc_id", "source", "n_tokens", "frac_e6")
 
 
-def leakage_safe_split(
-    docs: DataFrame,
-    eval_permille: int = 100,
-    seed: int = DEFAULT_SEED,
-) -> DataFrame:
+def leakage_safe_split(docs: DataFrame, eval_permille: int = 100) -> DataFrame:
     """Leakage-safe train/eval split: the split decision is keyed on the
     NORMALIZED-CONTENT fingerprint (the dedup family's hash60 of
     lower/punct-stripped text), not on doc_id — so every exact or
@@ -176,7 +164,7 @@ def leakage_safe_split(
     resumes, and repartitioning (same contract as hash_sample)."""
     norm = F.lower(F.regexp_replace("text", "[^A-Za-z0-9 ]", " "))
     fp = hash60_col(norm)
-    h = hash60_col(F.concat(F.lit(f"{seed}:split:"), fp.cast("string")))
+    h = hash60_col(F.concat(F.lit(f"{DEFAULT_SEED}:split:"), fp.cast("string")))
     return docs.select(
         "doc_id",
         fp.alias("fingerprint60"),

@@ -33,7 +33,9 @@ from pyspark.sql import Window
 
 DIM = 64
 N_PLANES = 8
-TOP_K = 5
+TOP_K = 5  # exact baseline (cosine_topk and its oracle)
+ANN_K = 3  # ANN paths (ann_lsh_topk / ann_ivf_topk* and their oracles)
+IVF_NPROBE = 4
 TARGET_BUCKET = 64
 N_TABLES = 4
 
@@ -54,12 +56,12 @@ def plane_weights(n_planes: int = N_PLANES, table: int = 0) -> np.ndarray:
     return rng.choice(np.array([-1.0, 1.0]), size=(n_planes, DIM))
 
 
-def n_planes_for(n_rows: int, target_bucket: int = TARGET_BUCKET) -> int:
-    """Plane count so that 2^planes ~ n_rows / target_bucket: bucket size
-    stays ~target_bucket at any corpus scale (10^9 rows -> 24 planes), which
+def n_planes_for(n_rows: int) -> int:
+    """Plane count so that 2^planes ~ n_rows / TARGET_BUCKET: bucket size
+    stays ~TARGET_BUCKET at any corpus scale (10^9 rows -> 24 planes), which
     keeps candidate generation linear in N. Deterministic from row count, so
     the DuckDB oracle derives the identical value from the parquet footer."""
-    return max(4, int(np.ceil(np.log2(max(n_rows / target_bucket, 2.0)))))
+    return max(4, int(np.ceil(np.log2(max(n_rows / TARGET_BUCKET, 2.0)))))
 
 
 def lsh_bucket_col(vec_col: str, n_planes: int = N_PLANES, table: int = 0) -> Column:
@@ -80,18 +82,18 @@ def lsh_bucket_col(vec_col: str, n_planes: int = N_PLANES, table: int = 0) -> Co
 MAX_EXACT_PAIRS = 10**8
 
 
-def query_mod_for(n_rows: int, max_pairs: int = MAX_EXACT_PAIRS) -> int:
+def query_mod_for(n_rows: int) -> int:
     """Smallest stride (>= the historical default 10) keeping the exact
-    brute-force pair count (n/mod)*n under ``max_pairs``. Deterministic from
+    brute-force pair count (n/mod)*n under MAX_EXACT_PAIRS. Deterministic from
     the row count, so the DuckDB oracle derives the identical stride from
     the parquet footer (same protocol as n_planes_for)."""
     import math
 
-    return max(10, math.ceil(n_rows * n_rows / max_pairs))
+    return max(10, math.ceil(n_rows * n_rows / MAX_EXACT_PAIRS))
 
 
-def cosine_topk(emb: DataFrame, k: int = TOP_K, query_mod: int = 10) -> DataFrame:
-    """Exact top-k cosine neighbors for every query_mod-th vector — the
+def cosine_topk(emb: DataFrame, query_mod: int = 10) -> DataFrame:
+    """Exact top-TOP_K cosine neighbors for every query_mod-th vector — the
     exact BASELINE for the ANN paths (BroadcastNestedLoopJoin by design;
     callers at scale pass query_mod_for(n) so the pair count stays bounded:
     at 10^9 vectors the stride is 10^10 and this degenerates to a spot-check
@@ -110,7 +112,7 @@ def cosine_topk(emb: DataFrame, k: int = TOP_K, query_mod: int = 10) -> DataFram
     w = Window.partitionBy("q_id").orderBy(F.desc("_cos"), F.asc("n_id"))
     return (
         j.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
+        .filter(F.col("_rk") <= TOP_K)
         .select(
             "q_id",
             "n_id",
@@ -160,25 +162,20 @@ def ivf_centroids(emb: DataFrame, n_centroids: int, n_rows: int | None = None) -
     return C
 
 
-def ann_ivf_topk(
-    emb: DataFrame,
-    k: int = 3,
-    n_centroids: int | None = None,
-    nprobe: int = 4,
-) -> DataFrame:
+def ann_ivf_topk(emb: DataFrame, k: int = ANN_K) -> DataFrame:
     """IVF approximate top-k: coarse-quantize every vector to its nearest
-    centroid (Arrow-batched numpy matmul — one pass, no shuffle), probe the
-    nprobe nearest centroid lists per query, re-rank exactly within the
-    probed lists. Equi-join on centroid_id — broadcast/AQE-replannable;
-    candidate work per query is nprobe/C of the corpus, so total work stays
-    ~linear when C tracks sqrt(N) (the classic IVF operating point)."""
+    of C=sqrt(N) centroids (Arrow-batched numpy matmul — one pass, no
+    shuffle), probe the IVF_NPROBE nearest centroid lists per query,
+    re-rank exactly within the probed lists. Equi-join on centroid_id —
+    broadcast/AQE-replannable; candidate work per query is IVF_NPROBE/C of
+    the corpus, so total work stays ~linear when C tracks sqrt(N) (the
+    classic IVF operating point)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, IntegerType
 
     base = emb.select("vec_id", "embedding")
     n_rows = base.count()
-    if n_centroids is None:
-        n_centroids = max(4, int(np.sqrt(n_rows)))
+    n_centroids = max(4, int(np.sqrt(n_rows)))
     C = ivf_centroids(base, n_centroids, n_rows=n_rows)
     Cn = (C / np.linalg.norm(C, axis=1, keepdims=True)).astype(np.float64)
 
@@ -192,7 +189,7 @@ def ann_ivf_topk(
     def probe_centroids(v):
         V = np.vstack(v.to_numpy()).astype(np.float64)
         V = V / np.linalg.norm(V, axis=1, keepdims=True)
-        top = np.argsort(-(V @ Cn.T), axis=1)[:, :nprobe].astype(np.int32)
+        top = np.argsort(-(V @ Cn.T), axis=1)[:, :IVF_NPROBE].astype(np.int32)
         return pd.Series(list(top))
 
     inv = base.withColumn("centroid_id", assign_centroid("embedding"))
@@ -222,18 +219,12 @@ def ann_ivf_topk(
     )
 
 
-def ann_ivf_topk_fold(
-    emb: DataFrame,
-    k: int = 3,
-    n_centroids: int | None = None,
-    nprobe: int = 4,
-    n_rows: int | None = None,
-) -> DataFrame:
+def ann_ivf_topk_fold(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
     """IVF top-k, DETERMINISTIC VERIFICATION VARIANT (the driver-oracle row).
 
     Same index structure as ann_ivf_topk — C=sqrt(N) coarse centroids,
-    nprobe probed lists, exact re-rank — but built so a DuckDB oracle can
-    reproduce it bit-for-bit:
+    IVF_NPROBE probed lists, exact top-ANN_K re-rank — but built so a
+    DuckDB oracle can reproduce it bit-for-bit:
       - centroids are the stride-sampled seed vectors THEMSELVES (no numpy
         Lloyd refinement, whose BLAS summation order SQL cannot mirror);
       - centroid assignment/probing run through the same JVM left-fold dot
@@ -245,8 +236,7 @@ def ann_ivf_topk_fold(
     throughput path; recall parity is pytest-verified there."""
     base = emb.select("vec_id", "embedding")
     n = n_rows if n_rows is not None else base.count()
-    if n_centroids is None:
-        n_centroids = max(4, int(np.sqrt(n)))
+    n_centroids = max(4, int(np.sqrt(n)))
     stride = max(1, n // n_centroids)
     wseed = Window.orderBy("vec_id")
     cent = (
@@ -271,7 +261,7 @@ def ann_ivf_topk_fold(
     inv = rk.filter(F.col("_crn") == 1).select(
         F.col("vec_id").alias("n_id"), "centroid_id"
     )
-    probe = rk.filter(F.col("_crn") <= nprobe).select(
+    probe = rk.filter(F.col("_crn") <= IVF_NPROBE).select(
         F.col("vec_id").alias("q_id"), "centroid_id"
     )
     # each n_id lives in exactly ONE inverted list, so (q_id, n_id) pairs
@@ -287,7 +277,7 @@ def ann_ivf_topk_fold(
     return (
         j.withColumn("_cos", cos)
         .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
+        .filter(F.col("_rk") <= ANN_K)
         .select(
             "q_id",
             "n_id",
@@ -298,6 +288,10 @@ def ann_ivf_topk_fold(
 
 
 NEAR_DUP_T = 0.9
+# contrastive_pairs labels, on the rounded integer cosine (shared with the oracle)
+POS_E6 = 900000
+NEG_E6 = 500000
+NEGS_PER_ANCHOR = 3
 
 
 def augment_emb(emb: DataFrame) -> DataFrame:
@@ -321,9 +315,7 @@ def augment_emb(emb: DataFrame) -> DataFrame:
     return base.unionByName(exact).unionByName(pert)
 
 
-def _lsh_candidate_cosines(
-    b: DataFrame, n_planes: int, n_tables: int
-) -> DataFrame:
+def _lsh_candidate_cosines(b: DataFrame, n_planes: int) -> DataFrame:
     """Shared candidate stage of emb_near_dup / contrastive_pairs:
     multi-table LSH bucketing of the (augmented) vector table, DISTINCT
     same-bucket pair union, exact cosine per candidate. Returns
@@ -335,7 +327,7 @@ def _lsh_candidate_cosines(
                 F.lit(tt).alias("lsh_table"),
                 lsh_bucket_col("emb_d", n_planes, tt).alias("lsh_bucket"),
             )
-            for tt in range(n_tables)
+            for tt in range(N_TABLES)
         ])
     ).alias("_tb")
     allb = b.select("vec_id", tb).select(
@@ -357,27 +349,22 @@ def _lsh_candidate_cosines(
     return j.withColumn("_cos", cos).select("vec_a", "vec_b", "_cos")
 
 
-def emb_near_dup(
-    emb: DataFrame,
-    t: float = NEAR_DUP_T,
-    n_planes: int | None = None,
-    n_tables: int = N_TABLES,
-) -> DataFrame:
+def emb_near_dup(emb: DataFrame, n_planes: int | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: multi-table data-dependent LSH
     blocking (same geometry rationale as ann_lsh_topk — bucket population
     tracks TARGET_BUCKET at any corpus size, and T independent tables keep
     recall high for true >=t pairs as n_planes grows with N, where the
     round-1 single fixed-8-plane table would lose them), then exact cosine
-    within the DISTINCT candidate union, thresholded at t.
+    within the DISTINCT candidate union, thresholded at NEAR_DUP_T.
     Output (vec_a, vec_b, cosine_e6)."""
     b = augment_emb(emb)
     if n_planes is None:
         # geometry derives from the BASE corpus size (mirrorable from the
         # parquet footer by the DuckDB oracle without counting aug rows)
         n_planes = n_planes_for(emb.count())
-    j = _lsh_candidate_cosines(b, n_planes, n_tables)
+    j = _lsh_candidate_cosines(b, n_planes)
     return (
-        j.filter(F.col("_cos") >= t)
+        j.filter(F.col("_cos") >= NEAR_DUP_T)
         .select(
             "vec_a",
             "vec_b",
@@ -386,19 +373,12 @@ def emb_near_dup(
     )
 
 
-def contrastive_pairs(
-    emb: DataFrame,
-    t_pos_e6: int = 900000,
-    t_neg_e6: int = 500000,
-    negs_per_anchor: int = 3,
-    n_planes: int | None = None,
-    n_tables: int = N_TABLES,
-) -> DataFrame:
+def contrastive_pairs(emb: DataFrame) -> DataFrame:
     """Hard-negative mining for contrastive embedding training (SimCSE /
     CLIP-style): from the SAME LSH candidate stage as emb_near_dup, emit
     (vec_a, vec_b, cosine_e6, label) where label='pos' for candidate pairs
-    with cosine >= t_pos (the alignment targets) and label='hard_neg' for
-    the top `negs_per_anchor` most-similar pairs at or below t_neg — pairs
+    with cosine_e6 >= POS_E6 (the alignment targets) and label='hard_neg' for
+    the top NEGS_PER_ANCHOR most-similar pairs at or below NEG_E6 — pairs
     that collide in hash space yet are dissimilar, exactly the negatives
     a contrastive loss learns most from. Mid-band pairs are dropped
     (ambiguous supervision).
@@ -406,39 +386,34 @@ def contrastive_pairs(
     100-TB shape: candidate generation is the bucketed equi-join
     (cartesian-free, plan-asserted in tests); the per-anchor ranking
     window runs over bucket-bounded candidate sets (~TARGET_BUCKET x
-    n_tables rows per anchor), never over the corpus. Thresholds and the
+    N_TABLES rows per anchor), never over the corpus. Thresholds and the
     ranking key use the ROUNDED integer cosine_e6, so the boundary and the
     (cosine_e6 DESC, vec_b ASC) tie-break are bit-identical cross-engine."""
     from pyspark.sql import Window
 
     b = augment_emb(emb)
-    if n_planes is None:
-        n_planes = n_planes_for(emb.count())
-    j = _lsh_candidate_cosines(b, n_planes, n_tables).select(
+    j = _lsh_candidate_cosines(b, n_planes_for(emb.count())).select(
         "vec_a",
         "vec_b",
         F.floor(F.col("_cos") * 1000000.0 + 0.5).cast("bigint").alias("cosine_e6"),
     )
-    pos = j.filter(F.col("cosine_e6") >= t_pos_e6).select(
+    pos = j.filter(F.col("cosine_e6") >= POS_E6).select(
         "vec_a", "vec_b", "cosine_e6", F.lit("pos").alias("label")
     )
     w = Window.partitionBy("vec_a").orderBy(
         F.col("cosine_e6").desc(), F.col("vec_b").asc()
     )
     neg = (
-        j.filter(F.col("cosine_e6") <= t_neg_e6)
+        j.filter(F.col("cosine_e6") <= NEG_E6)
         .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= negs_per_anchor)
+        .filter(F.col("_rn") <= NEGS_PER_ANCHOR)
         .select("vec_a", "vec_b", "cosine_e6", F.lit("hard_neg").alias("label"))
     )
     return pos.unionByName(neg)
 
 
 def ann_lsh_topk(
-    emb: DataFrame,
-    k: int = 3,
-    n_planes: int | None = None,
-    n_tables: int = N_TABLES,
+    emb: DataFrame, k: int = ANN_K, n_planes: int | None = None
 ) -> DataFrame:
     """Multi-table LSH approximate top-k with exact cosine re-rank.
 
@@ -456,7 +431,7 @@ def ann_lsh_topk(
                 F.lit(t).alias("lsh_table"),
                 lsh_bucket_col("embedding", n_planes, t).alias("lsh_bucket"),
             )
-            for t in range(n_tables)
+            for t in range(N_TABLES)
         ])
     ).alias("_tb")
     allb = base.select("vec_id", tb).select(

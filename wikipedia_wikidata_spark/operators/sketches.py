@@ -50,18 +50,17 @@ HASH_SPACE = 1 << 60
 WEIGHTED_SEED = 42
 
 
-def distinct_kmv(
-    df: DataFrame, group_col: str, value_col: str, k: int = KMV_K
-) -> DataFrame:
+def distinct_kmv(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Per-group KMV distinct-count estimate:
     (group, n_kept, kth_min_hash, est_distinct).
 
-    n_kept < k means the group's full distinct set fit in the sketch and
-    est_distinct is EXACT (= n_kept); otherwise est_distinct =
+    With k = KMV_K: n_kept < k means the group's full distinct set fit in
+    the sketch and est_distinct is EXACT (= n_kept); otherwise est_distinct =
     floor((k-1) * 2^60 / h_k) — integer arithmetic end to end
     ((k-1)*2^60 needs >64 bits for k > 8, hence the decimal(38,0)
     numerator; DuckDB mirrors it with HUGEINT).
     """
+    k = KMV_K
     h = hash60_col(F.col(value_col).cast("string"))
     d = df.select(F.col(group_col).alias("grp"), h.alias("h")).distinct()
     w = Window.partitionBy("grp").orderBy(F.col("h").asc())
@@ -92,13 +91,13 @@ def distinct_kmv(
     )
 
 
-def kmv_merge(sketches: DataFrame, group_col: str = "grp") -> DataFrame:
+def kmv_merge(sketches: DataFrame) -> DataFrame:
     """Merge partial KMV sketches (rows of (grp, h) min-k sets from
     different slices): union is the sketch lattice join — re-take the
     min-k of the combined hash sets. Proves the mergeability property the
     operator's scale story rests on (tested against a one-shot sketch of
     the concatenated input)."""
-    w = Window.partitionBy(group_col).orderBy(F.col("h").asc())
+    w = Window.partitionBy("grp").orderBy(F.col("h").asc())
     return (
         sketches.distinct()
         .withColumn("_rn", F.row_number().over(w))
@@ -107,23 +106,18 @@ def kmv_merge(sketches: DataFrame, group_col: str = "grp") -> DataFrame:
     )
 
 
-def sample_weighted(
-    df: DataFrame,
-    key_col: str,
-    weight_col,
-    k: int,
-    seed: int = WEIGHTED_SEED,
-) -> DataFrame:
+def sample_weighted(df: DataFrame, key_col: str, weight_col, k: int) -> DataFrame:
     """Deterministic weighted sample: k rows with the smallest
-    priority = hash60(seed:key) // max(weight, 1). Returns the input rows
-    plus the priority column (so callers and the oracle order identically);
-    ties (astronomically unlikely across 2^60) break on the key.
+    priority = hash60(WEIGHTED_SEED:key) // max(weight, 1). Returns the
+    input rows plus the priority column (so callers and the oracle order
+    identically); ties (astronomically unlikely across 2^60) break on the
+    key.
 
     weight_col: a column name or Column of integer weights >= 1.
     """
     wcol = F.col(weight_col) if isinstance(weight_col, str) else weight_col
     h = hash60_col(
-        F.concat(F.lit(f"{seed}:"), F.col(key_col).cast("string"))
+        F.concat(F.lit(f"{WEIGHTED_SEED}:"), F.col(key_col).cast("string"))
     )
     out = (
         df.withColumn("_h", h)

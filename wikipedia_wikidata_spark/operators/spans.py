@@ -14,8 +14,8 @@ extraction:
   sequence — boilerplate removal at span granularity that PRESERVES the
   surviving spans' relative order (the input_hint invariant).
 - drop_boilerplate_spans: CROSS-document boilerplate removal — drop spans
-  whose exact content appears in more than ``max_df`` distinct documents
-  (site chrome, licence footers, navigation text), preserving each
+  whose exact content appears in more than BOILERPLATE_MAX_DF distinct
+  documents (site chrome, licence footers, navigation text), preserving each
   document's surviving span order. The production complement of
   dedup_spans (round-4 verdict item 4).
 
@@ -85,13 +85,11 @@ def media_context(docs: DataFrame) -> DataFrame:
 BOILERPLATE_MAX_DF = 2  # spans in more than this many docs are chrome
 
 
-def drop_boilerplate_spans(
-    docs: DataFrame, max_df: int = BOILERPLATE_MAX_DF
-) -> DataFrame:
+def drop_boilerplate_spans(docs: DataFrame) -> DataFrame:
     """Cross-document boilerplate removal: (doc_id, n_spans, n_kept,
     kept_md5) after dropping every span whose exact (kind, text, media_ref)
-    content occurs in more than ``max_df`` DISTINCT documents. kept_md5
-    digests the kept spans' offset-ordered serialization (NULL when a
+    content occurs in more than BOILERPLATE_MAX_DF DISTINCT documents.
+    kept_md5 digests the kept spans' offset-ordered serialization (NULL when a
     document loses every span), proving the survivors' relative order is
     preserved — same digest construction as dedup_spans.
 
@@ -113,7 +111,7 @@ def drop_boilerplate_spans(
         .distinct()
         .groupBy("_h")
         .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") > max_df)
+        .filter(F.col("_df") > BOILERPLATE_MAX_DF)
         .select("_h", F.lit(True).alias("_drop"))
     )
     flagged = sp.join(hot, "_h", "left")

@@ -89,7 +89,7 @@ def duckdb_ray_cast_sql(verts: str, plat: str, plon: str) -> str:
 
 
 def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
-             salt: int | None = None) -> DataFrame:
+             salt: int = 1) -> DataFrame:
     """Cell-bucketed point-in-polygon join.
 
     points:   any DataFrame with lat/lon columns.
@@ -97,11 +97,12 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
     Returns points columns + matching polygon ``item`` (inner; one row per
     (point, containing polygon) pair).
 
-    salt: explicit mega-cell skew handling (north_rule). Cells holding more
-    than config.MEGA_CELL_THRESHOLD points get their point rows salted
-    into ``salt`` sub-keys and the polygon side replicated across the salts,
-    so one urban cell spreads over ``salt`` shuffle keys instead of pinning a
-    single task. (AQE skew-join splits oversized *partitions*; salting splits
+    salt: explicit mega-cell skew handling (north_rule). With salt > 1,
+    cells holding more than config.MEGA_CELL_THRESHOLD points get their
+    point rows salted into ``salt`` sub-keys and the polygon side
+    replicated across the salts, so one urban cell spreads over ``salt``
+    shuffle keys instead of pinning a single task; salt=1 is the plain
+    join. (AQE skew-join splits oversized *partitions*; salting splits
     oversized *keys* — both are on.) Results are identical with/without.
     """
     from ..config import CELL_RES_BITS, MEGA_CELL_THRESHOLD
@@ -133,7 +134,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
     # rows, never the expanded pairs.
     n_parts = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     cov = cov.repartition(n_parts)
-    if salt:
+    if salt > 1:
         hot = (
             pts.groupBy("_px", "_py")
             .agg(F.count(F.lit(1)).alias("_n"))
@@ -196,7 +197,7 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
         "_px", "_py", "_cx", "_cy", "edges",
         "min_lat", "max_lat", "min_lon", "max_lon",
     )
-    return out.drop("_salt") if salt else out
+    return out.drop("_salt") if salt > 1 else out
 
 
 def suggest_pip_salt(points: DataFrame, res: int = 5) -> tuple[int, dict]:

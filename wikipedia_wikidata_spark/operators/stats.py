@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_QS: tuple[tuple[int, int], ...] = ((1, 4), (2, 4), (3, 4))
+QUANTILES: tuple[tuple[int, int], ...] = ((1, 4), (2, 4), (3, 4))
 
 
 def _int_ceil_div(a: Column, den: int) -> Column:
@@ -30,14 +30,9 @@ def _int_ceil_div(a: Column, den: int) -> Column:
     return ((b - F.pmod(b, F.lit(den))) / F.lit(den)).cast("bigint")
 
 
-def group_quantiles(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    qs: tuple[tuple[int, int], ...] = DEFAULT_QS,
-) -> DataFrame:
+def group_quantiles(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:
     """(group_cols..., n_rows, q_<num>_<den>...): exact lower discrete
-    quantiles of value_col per group — the value whose 1-based rank is
+    QUANTILES of value_col per group — the value whose 1-based rank is
     max(ceil(num*n/den), 1) in ascending order. Rank ties among equal
     values are irrelevant: every rank in a tie run holds the same value."""
     w = Window.partitionBy(*group_cols).orderBy(F.col("_v").asc())
@@ -48,7 +43,7 @@ def group_quantiles(
         .withColumn("_n", F.count(F.lit(1)).over(wn).cast("bigint"))
     )
     aggs = [F.max("_n").alias("n_rows")]
-    for num, den in qs:
+    for num, den in QUANTILES:
         idx = F.greatest(_int_ceil_div(F.col("_n") * num, den), F.lit(1))
         aggs.append(
             F.max(F.when(F.col("_rn") == idx, F.col("_v"))).alias(

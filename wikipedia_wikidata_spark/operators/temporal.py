@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+RANGE_BUCKET_S = 3600  # range_join time-bucket width, seconds
+
 
 def asof_join(
     left: DataFrame,
@@ -60,12 +62,7 @@ def asof_join(
 
 
 def range_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    ts: str,
-    lo: str,
-    hi: str,
-    bucket_width_s: int = 3600,
+    points: DataFrame, intervals: DataFrame, ts: str, lo: str, hi: str
 ) -> DataFrame:
     """Point-in-interval join (points.ts in [intervals.lo, intervals.hi])
     WITHOUT the cartesian a naive theta-join plans.
@@ -75,10 +72,10 @@ def range_join(
     overlaps; each point hashes to its one bucket; the join is a plain
     equi-join on bucket id followed by the exact range filter. Candidate
     work per point = intervals overlapping its bucket — local, not global.
-    Buckets are epoch-second based; size bucket_width_s to the typical
+    Buckets are epoch-second based; RANGE_BUCKET_S should track the typical
     interval length (an interval spanning B buckets is replicated B times,
     exactly like a polygon covering B cells)."""
-    w = F.lit(int(bucket_width_s)).cast("long")
+    w = F.lit(RANGE_BUCKET_S).cast("long")
     p = points.withColumn(
         "_b", F.floor(F.unix_micros(F.col(ts).cast("timestamp")) / 1_000_000 / w)
     )

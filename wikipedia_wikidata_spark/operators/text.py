@@ -88,13 +88,11 @@ def wordpiece_count_col(word: Column) -> Column:
     return n + F.floor((rest + 3) / 4).cast("bigint")
 
 
-def wordpiece_token_counts(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def wordpiece_token_counts(docs: DataFrame) -> DataFrame:
     """docs + wp_tokens: per-document greedy-wordpiece token count (sum of
     wordpiece_count_col over the whitespace words)."""
     total = F.aggregate(
-        words_col(F.col(text_col)),
+        words_col(F.col("text")),
         F.lit(0).cast("bigint"),
         lambda acc, w: acc + wordpiece_count_col(w),
     )
@@ -308,12 +306,12 @@ PII_IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 PII_PHONE = r"\+\d{9,14}"
 
 
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """(doc_id, n_emails, n_ipv4, n_phones, redacted_md5): count and strip
     emails / IPv4s / international phone numbers. Pure narrow map — three
     JVM regexp passes per row, zero shuffle; at 100 TB this pipelines with
     the quality filters inside one codegen stage."""
-    t = F.col(text_col)
+    t = F.col("text")
     red = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(t, PII_EMAIL, "<EMAIL>"),
@@ -427,10 +425,10 @@ def _cls_features_col(text: Column) -> Column:
     return F.concat(words_col(text), shingles_col(text, 2))
 
 
-def classifier_weights(spark, n_buckets: int = N_CLS_BUCKETS) -> DataFrame:
+def classifier_weights(spark) -> DataFrame:
     """The stand-in model as a (bucket, w) table — the form a real learned
     weight vector would ship in (a few 10^5 rows: always broadcastable)."""
-    b = spark.range(n_buckets).select(F.col("id").cast("bigint").alias("bucket"))
+    b = spark.range(N_CLS_BUCKETS).select(F.col("id").cast("bigint").alias("bucket"))
     return b.select("bucket", _cls_weight_col(F.col("bucket")).alias("w"))
 
 

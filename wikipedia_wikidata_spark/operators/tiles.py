@@ -163,7 +163,7 @@ def tile_cell_cover(tiles: DataFrame, res: int) -> DataFrame:
     return c.select("zoom", "tile_x", "tile_y", cell.alias("cell_id"))
 
 
-def cell_vector(cells: DataFrame, res: int, cell_col: str = "cell_id") -> DataFrame:
+def cell_vector(cells: DataFrame, res: int) -> DataFrame:
     """Vectorize grid cells: packed cell_id -> geographic bbox + WKT polygon
     (the raster->vector half of the north_rule's 'raster<->vector')."""
     from ..config import CELL_RES_BITS
@@ -172,8 +172,8 @@ def cell_vector(cells: DataFrame, res: int, cell_col: str = "cell_id") -> DataFr
     n = float(1 << bits)
     # integer-exact decode (shift/mask, NOT float division: cell ids exceed
     # 2^53 so a double quotient would corrupt low bits)
-    x = F.shiftright(F.col(cell_col), 29).bitwiseAND(F.lit((1 << 29) - 1))
-    y = F.col(cell_col).bitwiseAND(F.lit((1 << 29) - 1))
+    x = F.shiftright(F.col("cell_id"), 29).bitwiseAND(F.lit((1 << 29) - 1))
+    y = F.col("cell_id").bitwiseAND(F.lit((1 << 29) - 1))
     d = cells.withColumn("_x", x.cast("double")).withColumn("_y", y.cast("double"))
     lon0 = F.col("_x") / F.lit(n) * F.lit(360.0) - F.lit(180.0)
     lon1 = (F.col("_x") + 1) / F.lit(n) * F.lit(360.0) - F.lit(180.0)
@@ -190,7 +190,7 @@ def cell_vector(cells: DataFrame, res: int, cell_col: str = "cell_id") -> DataFr
         F.lit("))"),
     )
     return d.select(
-        F.col(cell_col),
+        F.col("cell_id"),
         lat0.alias("min_lat"), lon0.alias("min_lon"),
         lat1.alias("max_lat"), lon1.alias("max_lon"),
         wkt.alias("wkt"),

@@ -11,10 +11,10 @@ Float-valued outputs are quantized with floor(x*1e6 + 0.5) *in both engines*
 
 from __future__ import annotations
 
-from .config import LANGUAGES
+from .config import LANGUAGES, spans_dir_for
 
-SPANS_SF001 = "/root/repo/data/spans_sf0.01/documents.parquet"
-LEVELS_SF001 = "/root/repo/data/spans_sf0.01/place_type_levels.parquet"
+SPANS_SF001 = f"{spans_dir_for('sf0.01')}/documents.parquet"
+LEVELS_SF001 = f"{spans_dir_for('sf0.01')}/place_type_levels.parquet"
 
 
 def _langs_sql(languages: list[str] | None = None) -> str:
@@ -273,7 +273,9 @@ FROM (SELECT doc_id, media_ref FROM spans WHERE kind = 'media')"""
     )
 
 
-def _media_frame_sample_oracle(step: int = 2) -> str:
+def _media_frame_sample_oracle() -> str:
+    from .operators.multimodal import FRAME_STEP
+
     b2 = _hexpair_sql("media_ref", 2)
     n = f"(1 + {b2} % 8)"
     return q(
@@ -281,7 +283,7 @@ def _media_frame_sample_oracle(step: int = 2) -> str:
        CAST(fi AS INTEGER) AS frame_idx,
        md5(concat(media_ref, ':', CAST(fi AS VARCHAR))) AS frame_md5
 FROM (
-  SELECT doc_id, media_ref, unnest(range(0, {n}, {step})) AS fi
+  SELECT doc_id, media_ref, unnest(range(0, {n}, {FRAME_STEP})) AS fi
   FROM (SELECT doc_id, media_ref FROM spans WHERE kind = 'media')
 )"""
     )

@@ -11,8 +11,29 @@ from __future__ import annotations
 
 import numpy as np
 
-from .operators.dedup import N_BANDS, N_HASH, ROWS_PER_BAND, SIMHASH_BITS
-from .operators.similarity import DIM, N_PLANES
+from .operators.dedup import (
+    JACCARD_T,
+    N_BANDS,
+    N_HASH,
+    ROWS_PER_BAND,
+    SIMHASH_BITS,
+    WINDOW_K,
+    WINDOW_MIN_DOCS,
+)
+from .operators.similarity import (
+    ANN_K,
+    DIM,
+    IVF_NPROBE,
+    N_TABLES,
+    NEAR_DUP_T,
+    NEG_E6,
+    NEGS_PER_ANCHOR,
+    POS_E6,
+    TOP_K,
+    n_planes_for,
+    plane_weights,
+    query_mod_for,
+)
 from .operators.text import STOPWORDS, TOKEN_RE
 
 
@@ -105,8 +126,6 @@ def dedup_clusters_sql() -> str:
     into connected components (min reachable doc_id as the component label)
     via a recursive CTE — mirrors operators/graph.connected_components over
     operators/dedup.minhash_candidates. Integer-only output: exact parity."""
-    from .operators.dedup import JACCARD_T
-
     t = int(JACCARD_T * 1000000)
     return f"""WITH RECURSIVE {minhash_ctes()},
 jp AS (
@@ -131,9 +150,10 @@ SELECT component, CAST(count(*) AS BIGINT) AS n_docs
 FROM comp GROUP BY 1"""
 
 
-def ngram_jaccard_sql(t: float = 0.6) -> str:
+def ngram_jaccard_sql() -> str:
     """Prefix-filtered all-pairs word-bigram Jaccard (mirrors
     operators/dedup.py ngram_jaccard_pairs expression-for-expression)."""
+    t = JACCARD_T
     return f"""WITH {AUG},
 prof AS (
   SELECT doc_id, list_distinct({shingles_sql(words_sql('text'), 2)}) AS g FROM aug
@@ -171,8 +191,6 @@ def _lsh_cosine_ctes(sf_dir: str = "/root/testdata/sf0.01") -> str:
     augmented vectors, multi-table LSH buckets, DISTINCT candidate pairs,
     exact float cosine per candidate (alias j(vec_a, vec_b, _cos)).
     Mirrors operators/similarity.py _lsh_candidate_cosines exactly."""
-    from .operators.similarity import N_TABLES, n_planes_for, plane_weights
-
     n_planes = n_planes_for(embeddings_rows(sf_dir))
     table_rows = []
     for tt in range(N_TABLES):
@@ -217,21 +235,16 @@ j AS (
 )"""
 
 
-def emb_near_dup_sql(t: float = 0.9, sf_dir: str = "/root/testdata/sf0.01") -> str:
+def emb_near_dup_sql(sf_dir: str = "/root/testdata/sf0.01") -> str:
     """Multi-table data-dependent LSH-blocked embedding-cosine near-dup
     pairs with planted dups (mirrors operators/similarity.py augment_emb +
     emb_near_dup; geometry derived from the base parquet footer)."""
     return f"""WITH {_lsh_cosine_ctes(sf_dir)}
 SELECT vec_a, vec_b, CAST(floor(_cos * 1000000.0 + 0.5) AS BIGINT) AS cosine_e6
-FROM j WHERE _cos >= {t}"""
+FROM j WHERE _cos >= {NEAR_DUP_T}"""
 
 
-def contrastive_pairs_sql(
-    t_pos_e6: int = 900000,
-    t_neg_e6: int = 500000,
-    negs_per_anchor: int = 3,
-    sf_dir: str = "/root/testdata/sf0.01",
-) -> str:
+def contrastive_pairs_sql(sf_dir: str = "/root/testdata/sf0.01") -> str:
     """DuckDB twin of operators/similarity.contrastive_pairs: same LSH
     candidate chain, thresholds and the per-anchor hard-negative ranking
     on the ROUNDED integer cosine (cosine_e6 DESC, vec_b ASC)."""
@@ -242,7 +255,7 @@ ce AS (
   FROM j
 )
 SELECT vec_a, vec_b, cosine_e6, 'pos' AS label
-FROM ce WHERE cosine_e6 >= {t_pos_e6}
+FROM ce WHERE cosine_e6 >= {POS_E6}
 UNION ALL
 SELECT vec_a, vec_b, cosine_e6, 'hard_neg' AS label
 FROM (
@@ -250,8 +263,8 @@ FROM (
          row_number() OVER (
            PARTITION BY vec_a ORDER BY cosine_e6 DESC, vec_b ASC
          ) AS _rn
-  FROM ce WHERE cosine_e6 <= {t_neg_e6}
-) WHERE _rn <= {negs_per_anchor}"""
+  FROM ce WHERE cosine_e6 <= {NEG_E6}
+) WHERE _rn <= {NEGS_PER_ANCHOR}"""
 
 
 def simhash_sql() -> str:
@@ -276,9 +289,9 @@ g AS (
 SELECT doc_id, {assemble} AS simhash32 FROM g"""
 
 
-def dot_sql(a: str, b: str, dim: int = DIM) -> str:
+def dot_sql(a: str, b: str) -> str:
     return (
-        f"list_reduce(list_transform(range({dim}), i -> {a}[i + 1] * {b}[i + 1]), "
+        f"list_reduce(list_transform(range({DIM}), i -> {a}[i + 1] * {b}[i + 1]), "
         "(x, y) -> x + y)"
     )
 
@@ -287,7 +300,7 @@ def _emb_d(col: str = "embedding") -> str:
     return f"list_transform({col}, x -> CAST(x AS DOUBLE))"
 
 
-def cosine_topk_sql(k: int = 5, query_mod: int = 10) -> str:
+def cosine_topk_sql(query_mod: int = 10) -> str:
     dot = dot_sql("q_emb", "n_emb")
     nq = f"sqrt({dot_sql('q_emb', 'q_emb')})"
     nn = f"sqrt({dot_sql('n_emb', 'n_emb')})"
@@ -306,7 +319,7 @@ r AS (
 )
 SELECT q_id, n_id, CAST(_rk AS BIGINT) AS rank,
        CAST(floor(_cos * 1000000.0 + 0.5) AS BIGINT) AS cosine_e6
-FROM r WHERE _rk <= {k}"""
+FROM r WHERE _rk <= {TOP_K}"""
 
 
 def embeddings_rows(sf_dir: str = "/root/testdata/sf0.01") -> int:
@@ -329,11 +342,9 @@ def embeddings_rows(sf_dir: str = "/root/testdata/sf0.01") -> int:
         raise
 
 
-def ann_lsh_sql(k: int = 3, sf_dir: str = "/root/testdata/sf0.01") -> str:
+def ann_lsh_sql(sf_dir: str = "/root/testdata/sf0.01") -> str:
     """Mirrors operators/similarity.ann_lsh_topk: multi-table data-dependent
     LSH, DISTINCT candidate union, exact re-rank."""
-    from .operators.similarity import N_TABLES, n_planes_for, plane_weights
-
     n_planes = n_planes_for(embeddings_rows(sf_dir))
     table_rows = []
     for t in range(N_TABLES):
@@ -376,10 +387,10 @@ r AS (
 )
 SELECT q_id, n_id, CAST(_rk AS BIGINT) AS rank,
        CAST(floor(_cos * 1000000.0 + 0.5) AS BIGINT) AS cosine_e6
-FROM r WHERE _rk <= {k}"""
+FROM r WHERE _rk <= {ANN_K}"""
 
 
-def ann_ivf_sql(k: int = 3, nprobe: int = 4, sf_dir: str = "/root/testdata/sf0.01") -> str:
+def ann_ivf_sql(sf_dir: str = "/root/testdata/sf0.01") -> str:
     """Mirrors operators/similarity.ann_ivf_topk_fold: stride-sampled seed
     centroids (C=sqrt(N)), fold-dot assignment/probing with (cos DESC,
     centroid_id) tie-breaks, exact re-rank within probed lists. N and the
@@ -412,7 +423,7 @@ rk AS (
   FROM cj
 ),
 inv AS (SELECT vec_id AS n_id, centroid_id FROM rk WHERE _crn = 1),
-probe AS (SELECT vec_id AS q_id, centroid_id FROM rk WHERE _crn <= {nprobe}),
+probe AS (SELECT vec_id AS q_id, centroid_id FROM rk WHERE _crn <= {IVF_NPROBE}),
 cand AS (
   SELECT q_id, n_id FROM probe JOIN inv USING (centroid_id) WHERE q_id != n_id
 ),
@@ -429,7 +440,7 @@ r AS (
 )
 SELECT q_id, n_id, CAST(_rk AS BIGINT) AS rank,
        CAST(floor(_cos * 1000000.0 + 0.5) AS BIGINT) AS cosine_e6
-FROM r WHERE _rk <= {k}"""
+FROM r WHERE _rk <= {ANN_K}"""
 
 
 def lang_id_sql() -> str:
@@ -635,8 +646,6 @@ TRAINING_ORACLES["emb_dedup_clusters"] = _emb_clusters_sql()
 def _cosine_topk_bounded_sql() -> str:
     """Stride from the parquet footer, identical to the Spark side
     (operators/similarity.query_mod_for) — 10 at sf0.01."""
-    from .operators.similarity import query_mod_for
-
     return cosine_topk_sql(query_mod=query_mod_for(embeddings_rows()))
 
 
@@ -975,8 +984,10 @@ FROM x GROUP BY 1, 2"""
 
 
 def _doc_length_quantiles_sql() -> str:
-    """DuckDB twin of group_quantiles over documents: same rank formula
-    max(ceil(num*n/den), 1) in integer math."""
+    """DuckDB twin of group_quantiles over documents: same QUANTILES and
+    rank formula max(ceil(num*n/den), 1) in integer math."""
+    from .operators.stats import QUANTILES
+
     def pick(num: int, den: int) -> str:
         return (
             f"MAX(CASE WHEN rn = greatest(({num} * n + {den - 1}) // {den}, 1) "
@@ -991,7 +1002,7 @@ WITH r AS (
   FROM documents
 )
 SELECT source, CAST(MAX(n) AS BIGINT) AS n_rows,
-       {pick(1, 4)}, {pick(2, 4)}, {pick(3, 4)}
+       {", ".join(pick(num, den) for num, den in QUANTILES)}
 FROM r GROUP BY source"""
 
 
@@ -1118,13 +1129,14 @@ FROM aug"""
 TRAINING_ORACLES["leakage_split"] = _leakage_split_sql()
 
 
-def _dup_window_sql(k: int = 8, min_docs: int = 2) -> str:
+def _dup_window_sql() -> str:
     """DuckDB twin of operators/dedup.duplicate_window_spans over the
     augmented corpus: same 0-based window starts, same hash60 of the
     space-joined k-token window, same distinct-doc df threshold."""
     # outer lambda var MUST NOT be `i`: hash60_sql's own hex-digit fold uses
     # `i -> ...`, and DuckDB resolves the innermost binding, so an outer `i`
     # would be shadowed and the window slice would go constant per document
+    k = WINDOW_K
     gram = hash60_sql(f"array_to_string(ws[wi+1:wi+{k}], ' ')")
     return f"""WITH {AUG},
 w AS (SELECT doc_id, {words_sql('text')} AS ws FROM aug),
@@ -1137,7 +1149,7 @@ g AS (
 e AS (SELECT doc_id, CAST(s.p AS BIGINT) AS start_tok, s.h AS gram60 FROM g),
 f AS (
   SELECT gram60, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-  FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= {min_docs}
+  FROM e GROUP BY 1 HAVING count(DISTINCT doc_id) >= {WINDOW_MIN_DOCS}
 )
 SELECT e.doc_id, e.start_tok, e.gram60, f.n_docs
 FROM e JOIN f USING (gram60)"""

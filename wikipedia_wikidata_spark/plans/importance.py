@@ -29,7 +29,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from ..config import IMPORTANCE_FLOOR, LANGUAGES, spans_dir_for
-from ..operators.extract import extract_views_shared
+from ..operators.extract import extract_views_shared, load_place_type_levels
 from ..sources.catalog import session_table
 
 
@@ -299,7 +299,7 @@ def build_scored_lazy(
     # at sf0.1 — because it materializes the wide array and defeats pushdown;
     # the parquet checkpoint keeps both.)
     v = extract_views_shared(spark, sf_dir, languages)
-    levels = spark.read.parquet(f"{spans_dir_for(sf_dir)}/place_type_levels.parquet")
+    levels = load_place_type_levels(spark, sf_dir)
     plc = pagelink_counts(v)
     oc = othercounts(v, plc)
     af = article_full(plc, oc)

@@ -99,7 +99,7 @@ def run_pipeline(
     # logic version, corpus generator version, corpus location, and the
     # language configuration — otherwise a resume against the same out_root
     # silently serves stages built under a different configuration
-    from ..sources.synth import GENERATOR_VERSION, ensure_spans_data
+    from ..sources.synth import GENERATOR_VERSION
 
     fp = (
         f"v{PIPELINE_VERSION}:g{GENERATOR_VERSION}:{spans_dir_for(sf_dir)}"
@@ -151,8 +151,7 @@ def run_pipeline(
     # scored, once for its own stage), and resume could pair a 'scored'
     # built from a different places computation than the committed one
     def build_places():
-        levels = spark.read.parquet(
-            f"{ensure_spans_data(sf_dir)}/place_type_levels.parquet")
+        levels = ex.load_place_type_levels(spark, sf_dir)
         return imp.wikidata_places(v, levels, imp.geo_earth_wikidata(v))
 
     stage("wikidata_places", build_places)
@@ -187,8 +186,7 @@ def run_pipeline(
                 F.pmod(F.xxhash64("wikidata_id"), F.lit(n_shards)) == k
             )
             return pip_join(
-                sub, v["polygons"].select("item", "verts"), res=5,
-                salt=salt if salt > 1 else None,
+                sub, v["polygons"].select("item", "verts"), res=5, salt=salt
             ).select(
                 "language", "title", "wikidata_id", F.col("item").alias("place_item")
             )

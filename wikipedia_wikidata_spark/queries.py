@@ -14,18 +14,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import oracle
-from .config import LANGUAGES, spans_dir_for
-from .operators.extract import extract_views_shared, load_documents
+from .config import LANGUAGES
+from .operators.extract import (
+    extract_views_shared,
+    load_documents,
+    load_place_type_levels,
+)
 from .plans import importance as imp
 from .sources.catalog import tmpdir
 
 
 def _views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return extract_views_shared(spark, sf_dir, LANGUAGES)
-
-
-def _levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{spans_dir_for(sf_dir)}/place_type_levels.parquet")
 
 
 # ---------------------------------------------------------------- extraction
@@ -81,12 +81,16 @@ def q_geo_earth_wikidata(spark, sf_dir):
 
 def q_wikidata_places(spark, sf_dir):
     v = _views(spark, sf_dir)
-    return imp.wikidata_places(v, _levels(spark, sf_dir), imp.geo_earth_wikidata(v))
+    return imp.wikidata_places(
+        v, load_place_type_levels(spark, sf_dir), imp.geo_earth_wikidata(v)
+    )
 
 
 def q_wikidata_pages(spark, sf_dir):
     v = _views(spark, sf_dir)
-    places = imp.wikidata_places(v, _levels(spark, sf_dir), imp.geo_earth_wikidata(v))
+    places = imp.wikidata_places(
+        v, load_place_type_levels(spark, sf_dir), imp.geo_earth_wikidata(v)
+    )
     return imp.wikidata_pages(places, v["sitelinks"], LANGUAGES)
 
 

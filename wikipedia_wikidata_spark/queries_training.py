@@ -258,7 +258,7 @@ def q_bpe_merges(spark, sf_dir):
     twin; ties break on the pure-ASCII pair string on both engines."""
     from .operators.bpe import bpe_merges
 
-    return bpe_merges(_docs(spark, sf_dir), spark=spark)
+    return bpe_merges(_docs(spark, sf_dir))
 
 
 def q_bpe_vocab_segment(spark, sf_dir):

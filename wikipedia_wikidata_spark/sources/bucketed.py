@@ -41,10 +41,10 @@ def save_bucketed(
 
 def colocated_join(
     spark: SparkSession, left_table: str, right_table: str,
-    left_key: str, right_key: str, how: str = "inner",
+    left_key: str, right_key: str,
 ) -> DataFrame:
-    """Join two tables bucketed on their join keys with the same bucket
+    """Inner-join two tables bucketed on their join keys with the same bucket
     count: Catalyst plans a SortMergeJoin with no Exchange on either side
     (asserted in tests/test_sources.py)."""
     lt, rt = spark.table(left_table), spark.table(right_table)
-    return lt.join(rt, lt[left_key] == rt[right_key], how)
+    return lt.join(rt, lt[left_key] == rt[right_key])

@@ -354,8 +354,6 @@ class Catalog:
         ``n_shards`` and ``resumed_shards`` alongside the per-file lineage.
         Stage-level is_complete()/read() semantics are unchanged.
         """
-        import hashlib
-
         t0 = time.time()
         root = self.path(name)
         os.makedirs(root, exist_ok=True)

@@ -1,4 +1,4 @@
-"""Declared-schema CSV/TSV ingest (S5 read side, SURVEY.md §2.1).
+"""Declared-schema CSV ingest (S5 read side, SURVEY.md §2.1).
 
 The reference loads every table from CSV with explicit DDL before COPY
 (steps/wikipedia_import.sh:30-39, steps/wikidata_import.sh:28-33) — schemas
@@ -32,21 +32,15 @@ REFERENCE_TABLE_DDL: dict[str, str] = {
 
 
 def read_table_csv(
-    spark: SparkSession,
-    path: str,
-    schema: str | StructType,
-    sep: str = ",",
-    header: bool = False,
+    spark: SparkSession, path: str, schema: str | StructType
 ) -> DataFrame:
-    """CSV scan with a DECLARED schema (no inference — a malformed row
-    becomes NULL columns under PERMISSIVE, never a silently-wrong inferred
-    type). Quotes/escapes follow the reference's csv.writer conventions
-    (double-quote quoting, doubled-quote escape); '' -> NULL; .gz paths
-    decode transparently."""
+    """Headerless comma-separated scan with a DECLARED schema (no inference
+    — a malformed row becomes NULL columns under PERMISSIVE, never a
+    silently-wrong inferred type). Quotes/escapes follow the reference's
+    csv.writer conventions (double-quote quoting, doubled-quote escape);
+    '' -> NULL; .gz paths decode transparently."""
     return (
         spark.read.schema(schema)
-        .option("sep", sep)
-        .option("header", header)
         .option("quote", '"')
         .option("escape", '"')
         .option("nullValue", "")

@@ -34,7 +34,6 @@ from ..config import (
     LANGUAGES,
     PLACE_TYPE_LEVELS,
     SEP,
-    UNLEVELED_PLACE_TYPES,
     excluded_languages_for,
 )
 
@@ -435,7 +434,7 @@ def spans_dir_path(sf_dir_or_sf, languages: list[str] | None = None) -> tuple[st
         sf = sf_of(sf_dir_or_sf)
     else:
         sf = float(sf_dir_or_sf)
-        out_dir = f"/root/repo/data/spans_sf{sf:g}"
+        out_dir = spans_dir_for(f"sf{sf:g}")
     if languages and list(languages) != LANGUAGES:
         # non-default language set -> its own corpus dir (e.g. the 39-language
         # production-configuration corpus of tests/test_importance.py), keyed

@@ -259,18 +259,15 @@ def run_sliding_available_now(
 
 
 ATTRIB_WINDOW_S = 6 * 3600
+ATTRIB_WATERMARK = "2 hours"
 
 
 def stream_stream_attribution(
-    spark: SparkSession,
-    input_dir: str,
-    window_s: int = ATTRIB_WINDOW_S,
-    watermark: str = "2 hours",
-    max_files_per_trigger: int = 4,
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int = 4
 ) -> DataFrame:
     """Stream-STREAM inner join with an event-time range condition — the
     attribution query (each 'view' joined to every same-user 'purchase'
-    within the following ``window_s`` seconds), the one streaming join
+    within the following ATTRIB_WINDOW_S seconds), the one streaming join
     shape the engine was missing (stream-static enrichment landed in r4).
 
     Both sides carry watermarks and the join predicate bounds purchase
@@ -297,7 +294,7 @@ def stream_stream_attribution(
             F.col("user_id").alias("v_user"),
             F.col("ts_ltz").alias("v_ts"),
         )
-        .withWatermark("v_ts", watermark)
+        .withWatermark("v_ts", ATTRIB_WATERMARK)
     )
     purchases = (
         base.filter(F.col("event_type") == "purchase")
@@ -306,7 +303,7 @@ def stream_stream_attribution(
             F.col("user_id").alias("p_user"),
             F.col("ts_ltz").alias("p_ts"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", ATTRIB_WATERMARK)
     )
     j = views.join(
         purchases,
@@ -314,7 +311,7 @@ def stream_stream_attribution(
         & (F.col("p_ts") > F.col("v_ts"))
         & (
             F.col("p_ts")
-            <= F.col("v_ts") + F.expr(f"INTERVAL {window_s} SECONDS")
+            <= F.col("v_ts") + F.expr(f"INTERVAL {ATTRIB_WINDOW_S} SECONDS")
         ),
         "inner",
     )
@@ -356,7 +353,6 @@ def run_stream_merge_to_catalog(
     catalog_root: str,
     name: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Streaming upsert into the versioned catalog: foreachBatch MERGEs each
     micro-batch's per-(day, event_type) deltas into a running-total table,
@@ -388,7 +384,7 @@ def run_stream_merge_to_catalog(
     apply_batch = make_catalog_merge_batch_fn(spark, cat, name)
     src = (
         spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
     )
     q = (

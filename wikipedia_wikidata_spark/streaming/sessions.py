@@ -170,7 +170,7 @@ def run_sessionize_available_now(
     return spark.read.schema(SESSION_OUT_SCHEMA).parquet(out_dir)
 
 
-def sessions_pandas_oracle(events: pd.DataFrame, gap_s: int = SESSION_GAP_S):
+def sessions_pandas_oracle(events: pd.DataFrame):
     """Independent pandas reimplementation: list of
     (user_id, start_us, end_us, n_events) for ALL sessions (open + closed)."""
     out = []
@@ -181,7 +181,7 @@ def sessions_pandas_oracle(events: pd.DataFrame, gap_s: int = SESSION_GAP_S):
         for x in ts:
             if last is None:
                 start, last, n = x, x, 1
-            elif x - last > gap_s * 1_000_000:
+            elif x - last > SESSION_GAP_S * 1_000_000:
                 out.append((uid, start, last, n))
                 start, last, n = x, x, 1
             else:
