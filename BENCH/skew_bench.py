@@ -148,13 +148,13 @@ def run_leg(salted: bool) -> dict:
         polys = spark.read.parquet(os.path.join(DATA_DIR, "polygons.parquet"))
         # measured diagnostics pick the salt (untimed: it is a pre-job
         # scalar diagnostic in the shipped pipeline too)
-        salt, stats = suggest_pip_salt(pts, res=5)
+        salt, stats = suggest_pip_salt(pts)
         app_id = spark.sparkContext.applicationId
         pre = {
             s["stageId"] for s in _rest(app_id, "/stages?status=complete")
         }
         t0 = time.time()
-        out = pip_join(pts, polys, res=5, salt=salt if salted else 1)
+        out = pip_join(pts, polys, salt=salt if salted else 1)
         n_pairs = out.count()
         wall = time.time() - t0
         # per-task duration quantiles of the TIMED job's stages only (the

@@ -60,7 +60,7 @@ def spatial_job(spark, sf_dir):
     sc, v = build_scored(spark, sf_dir)
     ep = geo_points(sc)
     ep.persist()  # materialized by the first consumer; no extra count() job
-    _noop(pip_join(ep, v["polygons"].select("item", "verts"), res=5))
+    _noop(pip_join(ep, v["polygons"].select("item", "verts")))
     places = geo_places(v["wikidata_places"])
     places.persist()
     # kNN runs the SHIPPED default level ladder (round-1 verdict: the timed

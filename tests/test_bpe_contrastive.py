@@ -4,7 +4,7 @@ pair mining (parity vs DuckDB is covered by test_oracle_parity.py)."""
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, spark_jobs
 
 
 def _mini_docs(spark, texts):
@@ -14,44 +14,48 @@ def _mini_docs(spark, texts):
 
 
 class TestBPE:
-    def test_hand_case_greedy_merges(self, spark):
+    def test_hand_case_greedy_merges(self, spark, monkeypatch):
         """Classic Sennrich-style corpus: 'low'x5 'lower'x2 'newest'x6
         'widest'x3. Hand-computed pair counts over char+EOW sequences:
         (e,s) 9 and (s,t) 9 and (t,_) 9 tie at the top — tie-break on
         pair string ascending picks 'e|s'. After merging, (es,t) 9 and
         (t,_) 9 tie -> 'es|t' wins ('est' symbol), then (est,_) 9."""
+        from wikipedia_wikidata_spark.operators import bpe
         from wikipedia_wikidata_spark.operators.bpe import bpe_merges
 
+        monkeypatch.setattr(bpe, "N_MERGES", 3)
         docs = _mini_docs(
             spark,
             ["low " * 5, "lower " * 2, "newest " * 6, "widest " * 3],
         )
-        rows = bpe_merges(docs, n_merges=3).orderBy("it").collect()
+        rows = bpe_merges(docs).orderBy("it").collect()
         assert [(r.left_sym, r.right_sym, r.pair_count) for r in rows] == [
             ("e", "s", 9),
             ("es", "t", 9),
             ("est", "_", 9),
         ]
 
-    def test_adjacent_repeat_merges_leftmost_nonoverlapping(self, spark):
+    def test_adjacent_repeat_merges_leftmost_nonoverlapping(self, spark, monkeypatch):
         """'aaaa' (freq 1): pair (a,a) counts 3 adjacent occurrences but a
         single left-to-right non-overlapping pass merges only positions
         (1,2) and (3,4) -> 'aa aa _'. At iteration 2, (aa,aa) and (aa,_)
         tie at 1 and the byte-order tie-break picks 'aa|_' ('_' 0x5F <
         'a' 0x61 — identical UTF8-binary collation on both engines)."""
+        from wikipedia_wikidata_spark.operators import bpe
         from wikipedia_wikidata_spark.operators.bpe import (
             bpe_merges,
             bpe_vocab_segmentation,
         )
 
+        monkeypatch.setattr(bpe, "N_MERGES", 2)
         docs = _mini_docs(spark, ["aaaa"])
-        m = bpe_merges(docs, n_merges=2).orderBy("it").collect()
+        m = bpe_merges(docs).orderBy("it").collect()
         assert (m[0].left_sym, m[0].right_sym, m[0].pair_count) == ("a", "a", 3)
         assert (m[1].left_sym, m[1].right_sym) == ("aa", "_")
-        seg = bpe_vocab_segmentation(docs, n_merges=2).collect()
+        seg = bpe_vocab_segmentation(docs).collect()
         assert seg[0].pieces == "aa|aa_"
 
-    def test_merge_exhaustion_single_symbol_word(self, spark):
+    def test_merge_exhaustion_single_symbol_word(self, spark, monkeypatch):
         """'ab' collapses to ONE symbol after 2 merges; iteration 3 must
         (a) not crash on the 1-symbol sequence (slice/zip_with bigrams —
         F.sequence(0, n-2) would generate DESCENDING [0,-1] and raise on
@@ -59,6 +63,7 @@ class TestBPE:
         intact — matching the oracle's LEFT-JOIN-ON-TRUE carry-through."""
         import duckdb
 
+        from wikipedia_wikidata_spark.operators import bpe
         from wikipedia_wikidata_spark.operators.bpe import (
             bpe_merges,
             bpe_vocab_segmentation,
@@ -68,17 +73,18 @@ class TestBPE:
             bpe_vocab_sql,
         )
 
+        monkeypatch.setattr(bpe, "N_MERGES", 3)
         docs = _mini_docs(spark, ["ab"])
-        m = [tuple(r) for r in bpe_merges(docs, n_merges=3).orderBy("it").collect()]
-        v = [tuple(r) for r in bpe_vocab_segmentation(docs, n_merges=3).collect()]
+        m = [tuple(r) for r in bpe_merges(docs).orderBy("it").collect()]
+        v = [tuple(r) for r in bpe_vocab_segmentation(docs).collect()]
         con = duckdb.connect()
         con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
         con.execute("INSERT INTO documents VALUES (0, 'ab')")
-        assert m == con.execute(bpe_merges_sql(3)).fetchall() == [
+        assert m == con.execute(bpe_merges_sql()).fetchall() == [
             (1, "a", "b", 1),
             (2, "ab", "_", 1),
         ]
-        assert v == con.execute(bpe_vocab_sql(3)).fetchall() == [
+        assert v == con.execute(bpe_vocab_sql()).fetchall() == [
             ("ab", 1, 1, "ab_")
         ]
         con.close()
@@ -110,10 +116,12 @@ class TestBPE:
 class TestContrastive:
     @pytest.fixture(scope="class")
     def pairs(self, spark):
-        from wikipedia_wikidata_spark.operators.similarity import contrastive_pairs
+        from wikipedia_wikidata_spark.operators.similarity import (
+            contrastive_pairs, n_planes_for,
+        )
 
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        return contrastive_pairs(emb).cache()
+        return contrastive_pairs(emb, n_planes_for(emb.count())).cache()
 
     def test_planted_positives_and_label_partition(self, pairs):
         # augment_emb plants exact duplicates (vec_id+1e6) -> cosine 1.0
@@ -145,6 +153,22 @@ class TestContrastive:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
+    def test_plan_build_submits_no_job(self, spark):
+        """Building the plan runs no Spark job: the plane count comes from
+        the caller (the parquet footer in q_contrastive_pairs), not from a
+        count of the input."""
+        from wikipedia_wikidata_spark.operators.similarity import (
+            DIM, contrastive_pairs, n_planes_for,
+        )
+
+        emb = spark.createDataFrame(
+            [(i, [float((i * 7 + d) % 5) - 2.0 for d in range(DIM)])
+             for i in range(40)],
+            "vec_id bigint, embedding array<double>",
+        )
+        _, jobs = spark_jobs(spark, lambda: contrastive_pairs(emb, n_planes_for(40)))
+        assert jobs == []
+
 
 class TestGridClusters:
     def test_invariants_and_hand_case(self, spark):
@@ -153,7 +177,7 @@ class TestGridClusters:
         singleton; noise points appear in no cluster."""
         from wikipedia_wikidata_spark.operators.spatial import grid_density_clusters
 
-        # res=6 -> bits=14, cell width = 360/2^14 deg ~ 0.02197
+        # CLUSTER_RES=6 -> bits=14, cell width = 360/2^14 deg ~ 0.02197
         w = 360.0 / (1 << 14)
         rows = []
         # dense cell A (3 pts) and its east neighbor B (2 pts): one cluster
@@ -167,7 +191,7 @@ class TestGridClusters:
         # noise: lone point far away
         rows.append((10.0, 10.0))
         pts = spark.createDataFrame(rows, "lat double, lon double")
-        out = grid_density_clusters(pts, res=6, min_pts=2).collect()
+        out = grid_density_clusters(pts).collect()
         by_cells = sorted((r.n_cells, r.n_points) for r in out)
         assert by_cells == [(1, 2), (2, 5)]
 
@@ -177,7 +201,7 @@ class TestGridClusters:
         from wikipedia_wikidata_spark.plans import importance as imp
 
         pts = imp.entity_points(spark, "/root/testdata/sf0.001").cache()
-        out = grid_density_clusters(pts, res=6, min_pts=2)
+        out = grid_density_clusters(pts)
         total_clustered = out.agg(F.sum("n_points")).collect()[0][0]
         x, y = xy_cols(F.col("lat"), F.col("lon"), CELL_RES_BITS[6])
         dense_pts = (

@@ -88,7 +88,8 @@ def test_ann_lsh_recall_on_near_neighbors(spark):
     both, q_ids, truth, n_total = _planted_corpus(spark)
     top1 = {
         r.q_id: r.n_id
-        for r in ann_lsh_topk(both, k=1, n_planes=n_planes_for(n_total)).collect()
+        for r in ann_lsh_topk(both, n_planes_for(n_total)).collect()
+        if r.rank == 1
     }
     recall = _recall_at_1(top1, q_ids, truth)
     assert recall >= 0.9, f"LSH ANN recall@1 {recall:.2f} < 0.9"
@@ -100,18 +101,22 @@ def test_ann_ivf_recall_on_near_neighbors(spark):
     from wikipedia_wikidata_spark.operators.similarity import ann_ivf_topk
 
     both, q_ids, truth, _ = _planted_corpus(spark)
-    top1 = {r.q_id: r.n_id for r in ann_ivf_topk(both, k=1).collect()}
+    top1 = {
+        r.q_id: r.n_id for r in ann_ivf_topk(both).collect() if r.rank == 1
+    }
     recall = _recall_at_1(top1, q_ids, truth)
     assert recall >= 0.9, f"IVF ANN recall@1 {recall:.2f} < 0.9"
 
 
 def test_emb_near_dup_recovers_planted_pairs(spark):
-    from wikipedia_wikidata_spark.operators.similarity import emb_near_dup
+    from wikipedia_wikidata_spark.operators.similarity import (
+        emb_near_dup, n_planes_for,
+    )
 
     emb = spark.read.parquet(f"{SF_DIR_SMALL}/embeddings.parquet")
-    pairs = emb_near_dup(emb).collect()
-    got = {(r.vec_a, r.vec_b): r.cosine_e6 for r in pairs}
     n = emb.count()
+    pairs = emb_near_dup(emb, n_planes_for(n)).collect()
+    got = {(r.vec_a, r.vec_b): r.cosine_e6 for r in pairs}
     exact_expected = [(i, i + 1000000) for i in range(0, n, 10)]
     assert all(got.get(p) == 1000000 for p in exact_expected), "exact dups missed"
     # perturbed vectors stay near-identical; LSH may lose a few at bucket edges
@@ -178,11 +183,14 @@ def test_boilerplate_all_dropped_digests_null(spark):
     assert all(r.n_kept == 0 and r.kept_md5 is None for r in out)
 
 
-def test_duplicate_window_spans_hand_case(spark):
+def test_duplicate_window_spans_hand_case(spark, monkeypatch):
     """k=3 windows: docs 0/1 share 'a b c' and 'b c d' at offset-shifted
     positions; the within-doc-only repeat in doc 2 must NOT appear
     (distinct-doc df threshold); doc 3 is too short for any window."""
+    from wikipedia_wikidata_spark.operators import dedup
     from wikipedia_wikidata_spark.operators.dedup import duplicate_window_spans
+
+    monkeypatch.setattr(dedup, "WINDOW_K", 3)
 
     df = spark.createDataFrame(
         [
@@ -195,7 +203,7 @@ def test_duplicate_window_spans_hand_case(spark):
     )
     got = {
         (r["doc_id"], r["start_tok"], r["n_docs"])
-        for r in duplicate_window_spans(df, k=3).collect()
+        for r in duplicate_window_spans(df).collect()
     }
     assert got == {(0, 0, 2), (0, 1, 2), (1, 1, 2), (1, 2, 2)}
 

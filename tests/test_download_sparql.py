@@ -51,13 +51,13 @@ def test_download_empty_body_is_deleted_and_raises(tmp_path):
     src.write_bytes(b"")
     out = tmp_path / "empty.landed"
     with pytest.raises(DownloadError):
-        download(_url(src), str(out), tries=2)
+        download(_url(src), str(out))
     assert not out.exists()  # never left to poison a skip-if-exists re-run
 
 
 def test_download_retries_then_fails_on_missing(tmp_path):
     with pytest.raises(DownloadError):
-        download(_url(tmp_path / "nope.bin"), str(tmp_path / "out"), tries=2)
+        download(_url(tmp_path / "nope.bin"), str(tmp_path / "out"))
 
 
 def test_download_resume_discards_stale_part_on_full_body(tmp_path):

@@ -10,6 +10,12 @@ belongs in a module constant instead. ``KEPT`` lists the deliberate
 exceptions; an entry that no longer names an unset option fails too, so
 the list stays exact.
 
+An option whose only setters are tests is the same constant with a test
+knob on it: production runs one value, and a path only a test selects is
+code no run needs. Such values are module constants that tests
+monkeypatch. ``TEST_ONLY`` lists the exceptions, each with its reason, and
+is held to the same exactness; its length is pinned so it can only shrink.
+
 The scan matches calls by name only and does not follow ``**kwargs``
 forwarding, which is why ``stream_stream_attribution(max_files_per_trigger)``
 (set by a test through ``run_attribution_available_now(**kwargs)``) is kept
@@ -23,9 +29,10 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "wikipedia_wikidata_spark"
+TESTS = ROOT / "tests"
 CALLER_FILES = [
     *PKG.rglob("*.py"),
-    *(ROOT / "tests").rglob("*.py"),
+    *TESTS.rglob("*.py"),
     *(ROOT / "perfbench").rglob("*.py"),
     *(ROOT / "BENCH").rglob("*.py"),
     ROOT / "bench.py",
@@ -52,6 +59,22 @@ KEPT = {
     # set through run_attribution_available_now(**kwargs)
     ("streaming/events.py", "stream_stream_attribution", "max_files_per_trigger"):
         "set through **kwargs",
+}
+
+# (module, function, parameter) set only by tests -> why it stays an option
+TEST_ONLY = {
+    # the query itself, not a tuning value
+    ("operators/index.py", "bm25_topk", "terms"): "query data",
+    ("operators/index.py", "bm25_topk", "k"): "query data",
+    # the input of a catalog maintenance operation
+    ("sources/catalog.py", "latest_complete", "predicate"): "operation input",
+    ("sources/catalog.py", "compact", "cluster_by"): "operation input",
+    ("sources/catalog.py", "expire_snapshots", "keep"): "operation input",
+    ("sources/download.py", "download_wikipedia_tables", "tables"):
+        "operation input",
+    # hands the round count out to the O(log n) test
+    ("operators/graph.py", "connected_components_star", "_rounds_out"):
+        "test hook",
 }
 
 
@@ -93,10 +116,10 @@ def package_options():
     return out
 
 
-def calls_by_name():
+def calls_by_name(files=CALLER_FILES):
     """function name -> [(n positional args, has *args, keyword names)]."""
     calls: dict[str, list] = {}
-    for path in CALLER_FILES:
+    for path in files:
         for node in ast.walk(ast.parse(path.read_text())):
             if not isinstance(node, ast.Call):
                 continue
@@ -112,8 +135,8 @@ def calls_by_name():
     return calls
 
 
-def unset_options():
-    calls = calls_by_name()
+def unset_options(files=CALLER_FILES):
+    calls = calls_by_name(files)
     unset = set()
     for mod, fn, i, p in package_options():
         if not any(
@@ -134,3 +157,15 @@ def test_every_optional_parameter_has_a_setter():
     stale = sorted(KEPT.keys() - unset)
     assert not stale, f"KEPT entries that are no longer unset options: {stale}"
 
+
+def test_options_only_tests_set_are_listed():
+    production = [f for f in CALLER_FILES if TESTS not in f.parents]
+    test_only = unset_options(production) - unset_options()
+    stray = sorted(test_only - TEST_ONLY.keys())
+    assert not stray, (
+        "optional parameters that only tests set; make each a module "
+        f"constant the test monkeypatches, or give it a real caller: {stray}"
+    )
+    stale = sorted(TEST_ONLY.keys() - test_only)
+    assert not stale, f"TEST_ONLY entries that are no longer test-only: {stale}"
+    assert len(TEST_ONLY) <= 7, "TEST_ONLY may only shrink"

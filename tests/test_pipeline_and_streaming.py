@@ -197,7 +197,7 @@ def test_pipeline_selects_salt_on_hot_cell_corpus(spark, tmp_path_factory, monke
         "lat double, lon double",
     )
     monkeypatch.setattr(cfg, "MEGA_CELL_THRESHOLD", 10)
-    salt, stats = suggest_pip_salt(pts, res=5)
+    salt, stats = suggest_pip_salt(pts)
     assert salt == 5 and stats["max_count"] == 50
 
 

@@ -130,7 +130,7 @@ def test_scale_paths_have_no_cartesian_plans(spark):
     docs = spark.read.parquet(f"{SF_DIR_SMALL}/documents.parquet")
     plans = {
         "ann": _plan(ann_lsh_topk(emb, n_planes=4)),
-        "pip": _plan(pip_join(pts, v["polygons"].select("item", "verts"), res=5)),
+        "pip": _plan(pip_join(pts, v["polygons"].select("item", "verts"))),
         "knn": _plan(
             knn_nearest(pts, pts.select(F.col("title").alias("item"), "lat", "lon"))
         ),
@@ -200,7 +200,7 @@ def test_tsv_sink_raises_on_tab_in_title(spark, tmp_path_factory):
     assert not os.path.exists(out)  # nothing promoted to the final path
 
 
-def test_jsonl_sink_roundtrip_and_determinism(spark, tmp_path_factory):
+def test_jsonl_sink_roundtrip_and_determinism(spark, tmp_path_factory, monkeypatch):
     """Sharded gzip JSONL export: schema-declared read-back returns the
     exact row set, and (shard, pos)-ordered writes are byte-deterministic
     under a different input partitioning (Java GZIPOutputStream writes
@@ -208,11 +208,14 @@ def test_jsonl_sink_roundtrip_and_determinism(spark, tmp_path_factory):
     import glob
     import hashlib
 
+    from wikipedia_wikidata_spark import sinks
     from wikipedia_wikidata_spark.operators.sampling import shard_shuffle
     from wikipedia_wikidata_spark.sinks import (
         read_training_jsonl,
         write_training_jsonl,
     )
+
+    monkeypatch.setattr(sinks, "JSONL_SHARDS", 4)
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     sharded = shard_shuffle(docs, "doc_id", 4)
@@ -220,9 +223,7 @@ def test_jsonl_sink_roundtrip_and_determinism(spark, tmp_path_factory):
               " n_chars long, shard long, pos long")
 
     def digests(path):
-        out = write_training_jsonl(
-            sharded_in, str(path), ["shard", "pos"], shards=4
-        )
+        out = write_training_jsonl(sharded_in, str(path))
         files = sorted(glob.glob(f"{out}/part-*.json.gz"))
         return sorted(
             hashlib.md5(open(f, "rb").read()).hexdigest() for f in files

@@ -51,19 +51,22 @@ def test_csv_decimal_schema_geo(spark, tmp_path_factory):
     assert got[900001] == "52.51666667"  # exact decimal, no float drift
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path_factory):
+def test_bucketed_join_is_shuffle_free(spark, tmp_path_factory, monkeypatch):
     """Co-located join: both sides bucketed+sorted on the join key with the
     same bucket count -> SortMergeJoin with ZERO Exchange (the pay-the-
     shuffle-once-at-write-time layout for repeated 100-TB fact joins)."""
+    from wikipedia_wikidata_spark.sources import bucketed
     from wikipedia_wikidata_spark.sources.bucketed import (
         colocated_join, save_bucketed,
     )
 
+    monkeypatch.setattr(bucketed, "N_BUCKETS", 8)
+
     d = tmp_path_factory.mktemp("bucketed")
     o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    save_bucketed(o, "t_orders_b", "o_orderkey", str(d / "orders"), 8)
-    save_bucketed(li, "t_lineitem_b", "l_orderkey", str(d / "lineitem"), 8)
+    save_bucketed(o, "t_orders_b", "o_orderkey", str(d / "orders"))
+    save_bucketed(li, "t_lineitem_b", "l_orderkey", str(d / "lineitem"))
     try:
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -202,6 +205,20 @@ def test_catalog_read_takes_schema_from_manifest(spark, tmp_path_factory):
     assert sorted(r.x for r in cat.read(spark, "tt", version=1).collect()) \
         == [0, 1, 2]
     assert cat.read(spark, "tt").schema.simpleString() == "struct<y:string>"
+
+
+def test_catalog_read_of_uncommitted_table_raises(tmp_path):
+    """A table with no committed version fails loudly by name, before any
+    Spark call, even when files sit at its root."""
+    import pytest
+
+    cat = Catalog(str(tmp_path))
+    with pytest.raises(FileNotFoundError, match="'ghost'"):
+        cat.read(None, "ghost")
+    os.makedirs(cat.path("rooted"))
+    Path(cat.path("rooted"), "part-0.parquet").write_bytes(b"PAR1")
+    with pytest.raises(FileNotFoundError, match="'rooted'"):
+        cat.read(None, "rooted")
 
 
 def test_json_props_declared_schema(spark, ddb):

@@ -32,7 +32,7 @@ def test_pip_matches_numpy_brute_force(spark):
     polys = extract_views(load_documents(spark, SF_DIR_SMALL))["polygons"]
     got = {
         (r.language, r.title, r.item)
-        for r in pip_join(ep, polys.select("item", "verts"), res=5)
+        for r in pip_join(ep, polys.select("item", "verts"))
         .select("language", "title", "item")
         .collect()
     }
@@ -56,13 +56,13 @@ def test_pip_salting_preserves_results(spark, monkeypatch):
     ep = entity_points(spark, SF_DIR_SMALL).select("language", "title", "lat", "lon")
     polys = extract_views(load_documents(spark, SF_DIR_SMALL))["polygons"]
     base = {
-        tuple(r) for r in pip_join(ep, polys.select("item", "verts"), res=5)
+        tuple(r) for r in pip_join(ep, polys.select("item", "verts"))
         .select("language", "title", "item").collect()
     }
     monkeypatch.setattr(cfg, "MEGA_CELL_THRESHOLD", 5)
     salted = {
         tuple(r) for r in pip_join(
-            ep, polys.select("item", "verts"), res=5, salt=4
+            ep, polys.select("item", "verts"), salt=4
         ).select("language", "title", "item").collect()
     }
     assert base == salted and len(base) > 0

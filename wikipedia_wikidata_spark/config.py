@@ -79,6 +79,10 @@ IMPORTANCE_FLOOR = 1e-10
 # 360deg / 2^bits ~= edge_km / 111km.
 CELL_RES_BITS: dict[int, int] = {5: 12, 6: 14, 7: 15, 8: 17, 9: 18}
 
+# The point-in-polygon join's cell resolution: pip_join buckets on it, and
+# suggest_pip_salt measures skew on the same key space.
+PIP_RES = 5
+
 # S2-analog (Morton / Z-order) fixed level.
 MORTON_BITS = 16
 

@@ -9,12 +9,12 @@ Distributed shape (the one that holds at 10^12 documents):
   map-side-combined ``groupBy(word)`` reduces 100 TB of text to a vocab
   table (10^7-10^8 rows at web scale) and every merge iteration after that
   touches only the vocab — the classic distributed-BPE decomposition.
-- Each of the ``n_merges`` iterations is ONE map-side-combined pair-count
+- Each of the N_MERGES iterations is ONE map-side-combined pair-count
   shuffle plus a 1-row argmax ``collect()`` (a bounded scalar, the same
   budget as the IVF centroid pull in operators/similarity.py) and one
   narrow per-row ``replace``. State is truncated per iteration with
   ``localCheckpoint`` exactly like operators/graph.py's PageRank loop, so
-  the lineage never grows with n_merges.
+  the lineage never grows with N_MERGES.
 - Everything is JVM expressions (split / transform / replace); no Python
   touches a row.
 
@@ -117,11 +117,11 @@ def _pair_counts(wf: DataFrame) -> DataFrame:
     )
 
 
-def _learn(docs: DataFrame, n_merges: int) -> tuple[list[tuple], DataFrame]:
+def _learn(docs: DataFrame) -> tuple[list[tuple], DataFrame]:
     """Run the merge loop; returns (merge rows, final word-freq-with-seq)."""
     wf = word_freq(docs).withColumn("seq", _init_seq()).localCheckpoint()
     merges: list[tuple] = []
-    for it in range(1, n_merges + 1):
+    for it in range(1, N_MERGES + 1):
         top = (
             _pair_counts(wf)
             .orderBy(F.col("pair_count").desc(), F.col("pair").asc())
@@ -143,24 +143,24 @@ def _learn(docs: DataFrame, n_merges: int) -> tuple[list[tuple], DataFrame]:
     return merges, wf
 
 
-def bpe_merges(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
+def bpe_merges(docs: DataFrame) -> DataFrame:
     """Learned merge table (it, left_sym, right_sym, pair_count) —
-    n_merges rows, the trained-tokenizer artifact. pair_count is
+    N_MERGES rows, the trained-tokenizer artifact. pair_count is
     non-increasing over iterations (a new pair's count is bounded by the
     count of the merge that created its symbol; old pairs only lose
     occurrences) — pinned by tests/test_bpe_contrastive.py."""
-    merges, _ = _learn(docs, n_merges)
+    merges, _ = _learn(docs)
     return docs.sparkSession.createDataFrame(merges, MERGE_SCHEMA)
 
 
-def bpe_vocab_segmentation(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
+def bpe_vocab_segmentation(docs: DataFrame) -> DataFrame:
     """Vocabulary segmentation under the learned merges: (word, freq,
     n_pieces, pieces) with pieces '|'-joined in order. Applying the merge
     table is the serving half of the tokenizer: at 10^12 docs this output
     is the broadcast word->pieces lookup the corpus tokenization join
     consumes (the wordpiece counter in operators/text.py is the
     static-vocab analog)."""
-    _, wf = _learn(docs, n_merges)
+    _, wf = _learn(docs)
     trimmed = F.trim(F.col("seq"))
     return wf.select(
         "word",

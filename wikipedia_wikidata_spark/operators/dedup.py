@@ -265,12 +265,13 @@ WINDOW_K = 8  # tokens per duplicated-substring detection window
 WINDOW_MIN_DOCS = 2  # distinct documents a window must occur in
 
 
-def duplicate_window_spans(docs: DataFrame, k: int = WINDOW_K) -> DataFrame:
+def duplicate_window_spans(docs: DataFrame) -> DataFrame:
     """Substring-LEVEL exact duplication detection (the Lee et al.
     "Deduplicating Training Data" primitive, window-hash form): hash every
-    k-token window of every document and emit the windows whose hash occurs
-    in >= WINDOW_MIN_DOCS DISTINCT documents — the spans a substring-dedup
-    pass would cut, at token resolution, without any suffix array.
+    WINDOW_K-token window of every document and emit the windows whose hash
+    occurs in >= WINDOW_MIN_DOCS DISTINCT documents — the spans a
+    substring-dedup pass would cut, at token resolution, without any suffix
+    array.
 
     Output: (doc_id, start_tok, gram60, n_docs) — one row per duplicated
     window occurrence, start_tok = 0-based token offset. A window repeated
@@ -289,6 +290,7 @@ def duplicate_window_spans(docs: DataFrame, k: int = WINDOW_K) -> DataFrame:
     of duplicated occurrences, not quadratic in docs sharing a gram."""
     from .text import hash60_col, words_col
 
+    k = WINDOW_K
     w = words_col(F.col("text"))
     idx = F.when(
         F.size(w) >= k, F.sequence(F.lit(0), F.size(w) - k)

@@ -19,11 +19,7 @@ Scale design (100 TB / 10^9-node graph):
   resolution joins from replaying O(iters) times (asserted by
   tests/test_graph.py::test_pagerank_plan_is_cartesian_free_and_truncated,
   which pins `Scan ExistingRDD` in the iterated plan).
-- Fixed iteration count (default 5) keeps the rank lineage shallow; longer
-  runs localCheckpoint the ranks every ``checkpoint_every`` (default 10)
-  iterations, and a production run would commit them through
-  sources/catalog.Catalog at the same cadence (the staged boundary
-  plans/pipeline.py already uses) to make the truncation durable/resumable.
+- A fixed iteration count (PR_ITERS) keeps the rank lineage shallow.
 - Dangling-node mass is NOT redistributed (the "lost mass" PageRank
   variant): rank = teleport/N + damping * sum(contribs). This keeps every
   iteration a pure local aggregate — redistributing would add a per-language
@@ -80,13 +76,8 @@ def link_edges(v: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = PR_ITERS,
-    materialize: bool = True,
-    checkpoint_every: int = 10,
-) -> DataFrame:
-    """Fixed-iteration PageRank per independent `language` subgraph.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """PR_ITERS-iteration PageRank per independent `language` subgraph.
 
     edges: (language, src, dst), parallel edges already deduplicated.
     Returns (language, node, rank:double, rank_fp:bigint) — rank_fp is the
@@ -101,15 +92,7 @@ def pagerank(
     PR_DAMPING/PR_TELEPORT must be expressible as hundredths for this
     (0.85 = 85/100).
 
-    checkpoint_every: at hundreds of iterations the unrolled rank lineage
-    itself becomes the bottleneck (planning time + stack growth), so the
-    rank DataFrame is localCheckpointed every ``checkpoint_every``
-    iterations (production: a catalog snapshot commit at the same cadence —
-    durable AND resumable — as plans/pipeline.py does between stages). The
-    default 10 never triggers at the shipped PR_ITERS=5, so the short-run
-    plan is unchanged.
-
-    materialize=True localCheckpoints the edge and node sets once up front:
+    The edge and node sets are localCheckpointed once up front:
     the unrolled plan references edges ~3x per iteration (ew + both arms of
     nodes) and Spark's exchange-reuse did not collapse them (measured: the
     executed sf0.01 plan carried 134 Exchanges and zero ReusedExchange), so
@@ -122,32 +105,28 @@ def pagerank(
     assert abs(d_num / 100.0 - PR_DAMPING) < 1e-12, "damping must be n/100"
     assert abs(t_num / 100.0 - PR_TELEPORT) < 1e-12, "teleport must be n/100"
     t_fp = PR_SCALE * t_num // 100  # exact: 10^15 * 15 / 100 = 1.5e14
-    if materialize:
-        edges = edges.localCheckpoint()
+    edges = edges.localCheckpoint()
     nodes = (
         edges.select("language", F.col("src").alias("node"))
         .unionByName(edges.select("language", F.col("dst").alias("node")))
         .distinct()
+        .localCheckpoint()
     )
-    if materialize:
-        nodes = nodes.localCheckpoint()
     n = nodes.groupBy("language").agg(
         F.count(F.lit(1)).alias("n_nodes")
     )
     outdeg = edges.groupBy("language", "src").agg(
         F.count(F.lit(1)).alias("outdeg")
     )
-    # edge-with-outdeg subtree consumed once per iteration; with
-    # materialize=True its scan side reads the checkpointed edge RDD (the
-    # measured alternative — relying on exchange reuse — never fired)
+    # edge-with-outdeg subtree consumed once per iteration; its scan side
+    # reads the checkpointed edge RDD (the measured alternative — relying on
+    # exchange reuse — never fired)
     ew = edges.join(outdeg, ["language", "src"])
     ranks = nodes.join(F.broadcast(n), "language").select(
         "language", "node",
         F.expr(f"{PR_SCALE} div n_nodes").alias("rank_fp"),
     )
-    for i in range(iters):
-        if materialize and checkpoint_every and i > 0 and i % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint()  # truncate long-run lineage
+    for _ in range(PR_ITERS):
         contribs = (
             ew.join(
                 ranks.select(
@@ -182,10 +161,10 @@ def pagerank(
     )
 
 
-# auto-mode label-propagation probe budget: dense dedup graphs converge in
-# 2-3 rounds; anything still moving after 8 is high-diameter and belongs on
-# the star path (each probe round materializes a localCheckpoint, so the
-# probe budget is paid in real passes)
+# connected_components' label-propagation probe budget: dense dedup graphs
+# converge in 2-3 rounds; anything still moving after 8 is high-diameter and
+# belongs on the star path (each probe round materializes a localCheckpoint,
+# so the probe budget is paid in real passes)
 AUTO_PROBE_ITERS = 8
 # connected_components_star safety backstop, far above the O(log^2 n) worst
 # case for any representable graph (2^40 nodes)
@@ -193,11 +172,7 @@ STAR_MAX_ROUNDS = 40
 
 
 def connected_components(
-    pairs: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
-    max_iters: int = 50,
-    algorithm: str = "auto",
+    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b"
 ) -> DataFrame:
     """Connected components: (node, component) with component = smallest
     node id in the component.
@@ -207,30 +182,19 @@ def connected_components(
     keep/drop decisions need per-CLUSTER groups (A~B, B~C => {A,B,C} keeps
     one document, not two independent pair-wise keeps).
 
-    algorithm:
-    - "label": min-label propagation — O(diameter) rounds of one equi-join +
-      one min-aggregate, both map-side combined; the fast path for dense
-      dedup clusters (diameter 2-3). RAISES on non-convergence rather than
-      returning partially-propagated (wrong) labels.
-    - "star": alternating large-star/small-star (Kiveris et al., "Connected
-      Components in MapReduce and Beyond") — O(log n) rounds on ANY graph
-      shape, including adversarial long chains; each round is two
-      groupBy-min + join passes over the shrinking edge set.
-    - "auto" (default): min-label first, PROBE-CAPPED at
-      AUTO_PROBE_ITERS rounds (dense dedup clusters converge in 2-3; a
-      graph still moving after 8 is chain-shaped) — then fall back to the
-      star algorithm instead of raising. Without the cap the auto path paid
-      the full max_iters (default 50) materialized label rounds before
-      discarding them and starting star from scratch.
+    Min-label propagation runs first — rounds of one equi-join + one
+    min-aggregate, both map-side combined; dense dedup clusters (diameter
+    2-3) converge in 2-3 of them. It is PROBE-CAPPED at AUTO_PROBE_ITERS
+    rounds: a graph still moving after that is chain-shaped, and the
+    partially-propagated labels are discarded for
+    connected_components_star (alternating large-star/small-star, Kiveris
+    et al., "Connected Components in MapReduce and Beyond" — O(log n)
+    rounds on ANY graph shape, including adversarial long chains).
 
     Labels/edges are localCheckpointed per round so lineage stays O(1)
     rather than O(rounds) (production: catalog snapshots, as in pagerank);
     convergence checks are driver-side SCALAR counts (no data collected).
     """
-    assert algorithm in ("label", "star", "auto"), algorithm
-    if algorithm == "star":
-        return connected_components_star(pairs, a, b)
-    probe_iters = min(max_iters, AUTO_PROBE_ITERS) if algorithm == "auto" else max_iters
     fwd = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
     edges = (
         fwd.unionByName(
@@ -245,8 +209,7 @@ def connected_components(
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    converged = False
-    for _ in range(probe_iters):
+    for _ in range(AUTO_PROBE_ITERS):
         prop = (
             edges.join(labels, edges.src == labels.node)
             .groupBy(F.col("dst").alias("node"))
@@ -261,20 +224,10 @@ def connected_components(
         changed = stepped.filter(F.col("label") != F.col("old_label")).count()
         labels = stepped.drop("old_label")
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        if algorithm == "auto":
-            # still moving after the probe: chain-shaped graph — restart on
-            # the O(log n) path rather than raise (round-3 verdict item 2),
-            # after only AUTO_PROBE_ITERS wasted rounds (round-4 ADVICE)
-            return connected_components_star(pairs, a, b)
-        # partially-propagated labels are WRONG components — fail loudly
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} iterations"
-            " (use algorithm='star' for high-diameter graphs)"
-        )
-    return labels.select("node", F.col("label").alias("component"))
+            return labels.select("node", F.col("label").alias("component"))
+    # still moving after the probe: chain-shaped graph — restart on the
+    # O(log n) path, after only AUTO_PROBE_ITERS wasted rounds
+    return connected_components_star(pairs, a, b)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -398,8 +351,8 @@ HITS_ITERS = 3
 HITS_SCALE = 10**9
 
 
-def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
-    """Fixed-iteration HITS (Kleinberg hubs & authorities) per independent
+def hits(edges: DataFrame) -> DataFrame:
+    """HITS_ITERS-iteration HITS (Kleinberg hubs & authorities) per independent
     `language` subgraph — the second member of the link-analysis family
     next to pagerank, sharing its edge resolution and its exactness
     contract.
@@ -422,8 +375,6 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     scalar-max pattern — no collect in the data path); nodes/edges are
     localCheckpointed once like pagerank (production: catalog snapshots).
     """
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
     edges = edges.localCheckpoint()
     nodes = (
         edges.select("language", F.col("src").alias("node"))
@@ -451,8 +402,7 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
         )
 
     auth = nodes.select("language", "node", F.lit(HITS_SCALE).alias("fp"))
-    hub = None
-    for _ in range(iters):
+    for _ in range(HITS_ITERS):
         h_raw = (
             edges.join(
                 auth.select("language", F.col("node").alias("dst"), "fp"),

@@ -8,16 +8,17 @@ is exactly a windowed cumulative sum, so the whole operator is one
 shuffle + one window — no sequential driver loop, no UDF.
 
 Scale design:
-- The corpus is split into ``n_buckets`` independent streams by content
+- The corpus is split into PACK_BUCKETS independent streams by content
   hash (the same hash60 primitive as the dedup/sampling family), so the
   cumsum window runs per bucket IN PARALLEL — the global-sort trap of a
-  single corpus-wide window is avoided, and bucket sizes are ~N/n_buckets
-  (raise n_buckets with the corpus; 2^20 buckets at 10^12 docs keeps
+  single corpus-wide window is avoided, and bucket sizes are ~N/PACK_BUCKETS
+  (raise PACK_BUCKETS with the corpus; 2^20 buckets at 10^12 docs keeps
   windows at ~10^6 rows).
 - Order within a bucket is (hash, doc_id) — deterministic under any
   partitioning, retry, or resume (task-RNG shuffles are not), and the hash
   makes the stream order an unbiased corpus shuffle.
-- pack_id is globally unique: bucket * 2^40 + (stream offset div budget).
+- pack_id is globally unique: bucket * 2^40 + (stream offset div
+  PACK_BUDGET).
   2^40 packs/bucket x 512 tokens ≈ 5.6e14 tokens per bucket stream before
   overlap — with buckets scaled to the corpus (2^20 at 10^12 docs) every
   stream stays orders of magnitude below that, and bucket < 2^23 keeps the
@@ -38,16 +39,13 @@ from pyspark.sql import functions as F
 
 from .text import TOKEN_RE, hash60_col
 
-PACK_BUDGET = 512  # tokens per training sequence (caller-tunable)
+PACK_BUDGET = 512  # tokens per training sequence
 PACK_BUCKETS = 64
+# bucket < 2^23 keeps pack_id = bucket * 2^40 + pack index inside int64
+assert PACK_BUCKETS <= 1 << 23, "pack_id would overflow int64"
 
 
-def pack_documents(
-    docs: DataFrame,
-    budget: int = PACK_BUDGET,
-    n_buckets: int = PACK_BUCKETS,
-    token_col: str | None = None,
-) -> DataFrame:
+def pack_documents(docs: DataFrame, token_col: str | None = None) -> DataFrame:
     """(doc_id, n_tokens, bucket, pack_id, pack_offset): position of each
     document in the concatenated fixed-length-sequence token stream of its
     hash bucket. Documents with zero tokens are dropped (they occupy no
@@ -58,15 +56,6 @@ def pack_documents(
     wp_tokens (broadcast-vocab greedy wordpiece in JVM expressions) or
     counts imported from the training stack's real tokenizer. Default None
     keeps the regex proxy. Packing math is identical either way."""
-    if n_buckets > (1 << 23):
-        # pack_id = bucket * 2^40 + pack index must stay inside int64:
-        # bucket < 2^23 and < 2^40 packs per bucket stream (the latter is a
-        # documented assumption — 2^40 packs x 512 tokens ≈ 5.6e14 tokens
-        # per stream, orders of magnitude above any per-bucket share when
-        # n_buckets scales with the corpus)
-        raise ValueError(
-            f"n_buckets={n_buckets} exceeds 2^23; pack_id would overflow int64"
-        )
     h = hash60_col(F.col("doc_id").cast("string"))
     toks = (
         F.col(token_col).cast("bigint")
@@ -76,7 +65,7 @@ def pack_documents(
     base = docs.select(
         "doc_id",
         toks.alias("n_tokens"),
-        F.pmod(h, F.lit(n_buckets)).alias("bucket"),
+        F.pmod(h, F.lit(PACK_BUCKETS)).alias("bucket"),
         h.alias("_h"),
     ).filter(F.col("n_tokens") > 0)
     w = (
@@ -98,7 +87,7 @@ def pack_documents(
         "bucket",
         (
             F.col("bucket") * F.lit(1 << 40).cast("bigint")
-            + F.expr(f"_cum_before div {int(budget)}")
+            + F.expr(f"_cum_before div {PACK_BUDGET}")
         ).alias("pack_id"),
-        F.pmod(F.col("_cum_before"), F.lit(budget)).cast("bigint").alias("pack_offset"),
+        F.pmod(F.col("_cum_before"), F.lit(PACK_BUDGET)).cast("bigint").alias("pack_offset"),
     )

@@ -27,25 +27,25 @@ from pyspark.sql import functions as F
 from .text import hash60_col
 
 SAMPLE_MOD = 1_000_000
-DEFAULT_SEED = 42
+SAMPLE_SEED = 42
+EVAL_PERMILLE = 100  # leakage_safe_split's eval share, per mille
 
 
-def _sample_hash(key_col: str, seed: int):
+def _sample_hash(key_col: str):
     return hash60_col(
-        F.concat(F.lit(f"{seed}:"), F.col(key_col).cast("string"))
+        F.concat(F.lit(f"{SAMPLE_SEED}:"), F.col(key_col).cast("string"))
     )
 
 
-def hash_sample(
-    df: DataFrame, key_col: str, fraction: float, seed: int = DEFAULT_SEED
-) -> DataFrame:
-    """Keep rows where hash60(seed:key) mod 1e6 < round(fraction*1e6) — a
-    deterministic, retry/resume-stable Bernoulli sample keyed on content.
+def hash_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
+    """Keep rows where hash60(SAMPLE_SEED:key) mod 1e6 < round(fraction*1e6)
+    — a deterministic, retry/resume-stable Bernoulli sample keyed on
+    content.
     round(), not int(): float truncation turns 0.3*1e6 into 299999 and the
     Spark predicate silently diverges from a hand-written oracle threshold
     (int(0.3 * 1e6) == 299999 on binary floats)."""
     return df.filter(
-        F.pmod(_sample_hash(key_col, seed), F.lit(SAMPLE_MOD))
+        F.pmod(_sample_hash(key_col), F.lit(SAMPLE_MOD))
         < int(round(fraction * SAMPLE_MOD))
     )
 
@@ -56,7 +56,7 @@ def stratified_sample(
     """At most ``cap`` rows per stratum, chosen by deterministic hash order
     (tie-broken by the key itself) — balanced class downsampling whose
     output is independent of partitioning and retries."""
-    h = _sample_hash(key_col, DEFAULT_SEED)
+    h = _sample_hash(key_col)
     w = Window.partitionBy(*strata_cols).orderBy(
         h.asc(), F.col(key_col).asc()
     )
@@ -67,22 +67,16 @@ def stratified_sample(
     )
 
 
-def shard_shuffle(
-    df: DataFrame,
-    key_col: str,
-    n_shards: int,
-    seed: int = DEFAULT_SEED,
-) -> DataFrame:
+def shard_shuffle(df: DataFrame, key_col: str, n_shards: int) -> DataFrame:
     """Deterministic global training-order shuffle + shard assignment:
-    (row..., shard, pos) where shard = hash60(seed:key) mod n_shards and
-    pos is the row's rank inside its shard ordered by (hash, key).
+    (row..., shard, pos) where shard = hash60(SAMPLE_SEED:key) mod n_shards
+    and pos is the row's rank inside its shard ordered by (hash, key).
 
     The (shard, pos) pair IS the epoch read order — a training job reads
     shard files in pos order and gets a reproducible pseudo-random
     permutation of the corpus that is independent of input partitioning,
     task retries, and resume points (same contract as hash_sample). A new
-    seed yields a fresh permutation for the next epoch without rewriting
-    the corpus.
+    SAMPLE_SEED yields a fresh permutation without rewriting the corpus.
 
     100-TB shape: ONE hash-partition shuffle on `shard` + a per-shard sort
     — exactly what `df.repartition(n_shards, shard).sortWithinPartitions`
@@ -91,7 +85,7 @@ def shard_shuffle(
     n_shards and per-task memory is corpus/n_shards. Pick n_shards the way
     you'd pick output file count (e.g. corpus_bytes / 512 MiB).
     """
-    h = _sample_hash(key_col, seed)
+    h = _sample_hash(key_col)
     d = df.withColumn("_h", h).withColumn(
         "shard", F.pmod(F.col("_h"), F.lit(n_shards)).cast("bigint")
     )
@@ -109,7 +103,7 @@ def rebalance_sources(docs: DataFrame, max_tokens_per_source: int) -> DataFrame:
     whitespace tokens by a deterministic per-source keep fraction, leaving
     under-budget sources intact.
 
-    keep iff hash60(DEFAULT_SEED:doc_id) mod 1e6 < frac_e6, where frac_e6 =
+    keep iff hash60(SAMPLE_SEED:doc_id) mod 1e6 < frac_e6, where frac_e6 =
     min(1e6, max_tokens*1e6 div source_tokens) in EXACT integer arithmetic
     (no float fraction can disagree with the oracle's threshold). Returns
     (doc_id, source, n_tokens, frac_e6) for kept docs.
@@ -137,14 +131,14 @@ def rebalance_sources(docs: DataFrame, max_tokens_per_source: int) -> DataFrame:
     keep = (
         d.join(F.broadcast(stats), "source")
         .filter(
-            F.pmod(_sample_hash("doc_id", DEFAULT_SEED), F.lit(SAMPLE_MOD))
+            F.pmod(_sample_hash("doc_id"), F.lit(SAMPLE_MOD))
             < F.col("frac_e6")
         )
     )
     return keep.select("doc_id", "source", "n_tokens", "frac_e6")
 
 
-def leakage_safe_split(docs: DataFrame, eval_permille: int = 100) -> DataFrame:
+def leakage_safe_split(docs: DataFrame) -> DataFrame:
     """Leakage-safe train/eval split: the split decision is keyed on the
     NORMALIZED-CONTENT fingerprint (the dedup family's hash60 of
     lower/punct-stripped text), not on doc_id — so every exact or
@@ -156,7 +150,7 @@ def leakage_safe_split(docs: DataFrame, eval_permille: int = 100) -> DataFrame:
     dedup keepers; this operator guarantees the exact-content class.
 
     Output: (doc_id, fingerprint60, split) for every input row, split in
-    {'train','eval'} with P(eval) = eval_permille/1000 over fingerprint
+    {'train','eval'} with P(eval) = EVAL_PERMILLE/1000 over fingerprint
     groups (not documents — a mega-duplicated page counts once).
 
     100-TB shape: two md5 expressions per row, zero shuffles, zero joins —
@@ -164,11 +158,11 @@ def leakage_safe_split(docs: DataFrame, eval_permille: int = 100) -> DataFrame:
     resumes, and repartitioning (same contract as hash_sample)."""
     norm = F.lower(F.regexp_replace("text", "[^A-Za-z0-9 ]", " "))
     fp = hash60_col(norm)
-    h = hash60_col(F.concat(F.lit(f"{DEFAULT_SEED}:split:"), fp.cast("string")))
+    h = hash60_col(F.concat(F.lit(f"{SAMPLE_SEED}:split:"), fp.cast("string")))
     return docs.select(
         "doc_id",
         fp.alias("fingerprint60"),
-        F.when(F.pmod(h, F.lit(1000)) < eval_permille, F.lit("eval"))
+        F.when(F.pmod(h, F.lit(1000)) < EVAL_PERMILLE, F.lit("eval"))
         .otherwise(F.lit("train"))
         .alias("split"),
     )

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..config import PIP_RES
 from ..functions.cells import xy_cols
 
 # Euclidean-on-degrees metric (planar; documented simplification — the
@@ -88,7 +89,7 @@ def duckdb_ray_cast_sql(verts: str, plat: str, plon: str) -> str:
 """
 
 
-def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
+def pip_join(points: DataFrame, polygons: DataFrame, res: int = PIP_RES,
              salt: int = 1) -> DataFrame:
     """Cell-bucketed point-in-polygon join.
 
@@ -200,20 +201,20 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = 5,
     return out.drop("_salt") if salt > 1 else out
 
 
-def suggest_pip_salt(points: DataFrame, res: int = 5) -> tuple[int, dict]:
+def suggest_pip_salt(points: DataFrame) -> tuple[int, dict]:
     """Measure-then-salt (north_rule 'skew handled explicitly'): per-cell
-    point histogram at the PIP join's resolution -> the salt factor that
-    spreads the hottest cell down to config.MEGA_CELL_THRESHOLD (the same
-    threshold pip_join salts at). Returns (salt, skew_stats dict); salt == 1
-    means no salting needed. One map-side-combined groupBy over the points
-    — a scalar diagnostic job the pipeline runs once before the spatial
-    stage, so the shipped salt comes from OBSERVED data, not a guess
+    point histogram at the PIP join's resolution (config.PIP_RES) -> the
+    salt factor that spreads the hottest cell down to
+    config.MEGA_CELL_THRESHOLD (the same threshold pip_join salts at).
+    Returns (salt, skew_stats dict); salt == 1 means no salting needed. One
+    map-side-combined groupBy over the points — a scalar diagnostic job the
+    pipeline runs once before the spatial stage, so the shipped salt comes from OBSERVED data, not a guess
     (operators/skew.py is the generic measurement; this binds it to
     pip_join's key space)."""
-    from ..config import CELL_RES_BITS, MEGA_CELL_THRESHOLD
+    from ..config import CELL_RES_BITS, MEGA_CELL_THRESHOLD, PIP_RES
     from .skew import skew_stats
 
-    bits = CELL_RES_BITS[res]
+    bits = CELL_RES_BITS[PIP_RES]
     px, py = xy_cols(F.col("lat"), F.col("lon"), bits)
     keyed = points.select(px.alias("_px"), py.alias("_py"))
     stats = skew_stats(
@@ -420,13 +421,16 @@ def knn_nearest(points: DataFrame, places: DataFrame,
     return out
 
 
-def grid_density_clusters(
-    points: DataFrame, res: int = 6, min_pts: int = 2
-) -> DataFrame:
+# grid_density_clusters: cell resolution and the points that make a cell dense
+CLUSTER_RES = 6
+CLUSTER_MIN_PTS = 2
+
+
+def grid_density_clusters(points: DataFrame) -> DataFrame:
     """Grid-based density clustering (distributed DBSCAN analog) over a
-    point set: cells at resolution `res` holding >= min_pts points are
-    "dense"; dense cells that touch (8-neighborhood) merge into one
-    cluster; points in sparse cells are noise (excluded). Output one row
+    point set: cells at resolution CLUSTER_RES holding >= CLUSTER_MIN_PTS
+    points are "dense"; dense cells that touch (8-neighborhood) merge into
+    one cluster; points in sparse cells are noise (excluded). Output one row
     per cluster: (cluster, n_cells, n_points) with cluster = the minimum
     dense-cell node id (cx * 2^29 + cy — the cell_id_col packing sans the
     res prefix).
@@ -451,13 +455,13 @@ def grid_density_clusters(
 
     from ..functions.cells import CELL_RES_BITS
 
-    bits = CELL_RES_BITS[res]
+    bits = CELL_RES_BITS[CLUSTER_RES]
     x, y = xy_cols(F.col("lat"), F.col("lon"), bits)
     dense = (
         points.select(x.alias("cx"), y.alias("cy"))
         .groupBy("cx", "cy")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pts"))
-        .filter(F.col("n_pts") >= min_pts)
+        .filter(F.col("n_pts") >= CLUSTER_MIN_PTS)
         .withColumn(
             "node",
             (F.col("cx") * F.lit(1 << 29) + F.col("cy")).cast("bigint"),

@@ -404,8 +404,8 @@ def unigram_surprisal(docs: DataFrame, vocab_k: int = 4096) -> DataFrame:
 # linear model over hashed unigram+bigram features scores each document and
 # a threshold keeps the "wiki-like" ones). No external model exists in this
 # sandbox, so the weight VECTOR is a deterministic hash-derived stand-in
-# (integer weights in [-1000, 1000]); the feature hashing, scoring algebra
-# and both physical shapes are the real production plumbing.
+# (integer weights in [-1000, 1000]); the feature hashing and scoring
+# algebra are the real production plumbing.
 N_CLS_BUCKETS = 4096
 _CLS_W_SPAN = 2001  # weights take values hash % 2001 - 1000 in [-1000, 1000]
 
@@ -425,64 +425,32 @@ def _cls_features_col(text: Column) -> Column:
     return F.concat(words_col(text), shingles_col(text, 2))
 
 
-def classifier_weights(spark) -> DataFrame:
-    """The stand-in model as a (bucket, w) table — the form a real learned
-    weight vector would ship in (a few 10^5 rows: always broadcastable)."""
-    b = spark.range(N_CLS_BUCKETS).select(F.col("id").cast("bigint").alias("bucket"))
-    return b.select("bucket", _cls_weight_col(F.col("bucket")).alias("w"))
-
-
-def classifier_score(docs: DataFrame, weights: DataFrame | None = None) -> DataFrame:
+def classifier_score(docs: DataFrame) -> DataFrame:
     """Per-document linear classifier score over hashed unigram + bigram
     features: (doc_id, n_feats, score_sum, keep) with keep = score_sum > 0.
 
-    Two physical shapes, identical results (pinned by a pytest parity test):
-
-    - ``weights=None`` (default, registered query): the weight of each
-      bucket is computed INLINE from the bucket id, so scoring is one
-      ``F.aggregate`` fold per row — a pure narrow map, ZERO shuffle
-      (plan-asserted), pipelining with the other quality filters inside
-      one codegen stage. This is the shape when the model is small enough
-      to inline/broadcast as expressions.
-    - ``weights=DataFrame(bucket, w)``: explode features -> bucket ->
-      BROADCAST hash join against the weight table -> one groupBy(doc_id).
-      This is the 100-TB shape for a real learned vector too wide to
-      inline: the weight side is model-sized (broadcast), the big side
-      shuffles once on doc_id.
+    The weight of each bucket is computed INLINE from the bucket id, so
+    scoring is one ``F.aggregate`` fold per row — a pure narrow map, ZERO
+    shuffle (plan-asserted), pipelining with the other quality filters
+    inside one codegen stage. A learned vector too wide to inline would
+    instead explode features -> bucket -> broadcast-join a (bucket, w)
+    table -> one groupBy(doc_id).
 
     Integer-exact on both engines: hash60 buckets, integer weights,
     int64 sum (|w| <= 1000, so overflow needs > 9e15 features per doc).
     DuckDB twin: oracle_training._classifier_score_sql.
     """
     feats = _cls_features_col(F.col("text"))
-    if weights is None:
-        score = F.aggregate(
-            feats,
-            F.lit(0).cast("bigint"),
-            lambda acc, t: acc + _cls_weight_col(_cls_bucket_col(t)),
-        )
-        d = docs.select(
-            "doc_id",
-            F.size(feats).cast("bigint").alias("n_feats"),
-            score.alias("score_sum"),
-        )
-    else:
-        ex = docs.select("doc_id", F.explode_outer(feats).alias("f"))
-        ex = ex.select(
-            "doc_id",
-            "f",
-            F.when(F.col("f").isNotNull(), _cls_bucket_col(F.col("f"))).alias(
-                "bucket"
-            ),
-        )
-        d = (
-            ex.join(F.broadcast(weights), "bucket", "left")
-            .groupBy("doc_id")
-            .agg(
-                F.count("f").cast("bigint").alias("n_feats"),
-                F.coalesce(F.sum("w"), F.lit(0)).cast("bigint").alias("score_sum"),
-            )
-        )
+    score = F.aggregate(
+        feats,
+        F.lit(0).cast("bigint"),
+        lambda acc, t: acc + _cls_weight_col(_cls_bucket_col(t)),
+    )
+    d = docs.select(
+        "doc_id",
+        F.size(feats).cast("bigint").alias("n_feats"),
+        score.alias("score_sum"),
+    )
     return d.select(
         "doc_id", "n_feats", "score_sum", (F.col("score_sum") > 0).alias("keep")
     )

@@ -624,16 +624,17 @@ JOIN page pg ON pg.language = r.language AND pg.page_id = r.node"""
 ORACLES["pagerank_links"] = _pagerank_oracle()
 
 
-def _spatial_cluster_oracle(res: int = 6, min_pts: int = 2) -> str:
+def _spatial_cluster_oracle() -> str:
     """DuckDB twin of operators/spatial.grid_density_clusters over
-    entity_points: dense res-`res` cells (>= min_pts points), 8-neighbor
-    adjacency, recursive-CTE connected components seeded from EVERY dense
-    cell (so singleton dense cells label themselves), min-node cluster
-    labels. Adjacency here is the direct abs-diff theta join — the oracle
+    entity_points: dense CLUSTER_RES cells (>= CLUSTER_MIN_PTS points),
+    8-neighbor adjacency, recursive-CTE connected components seeded from
+    EVERY dense cell (so singleton dense cells label themselves), min-node
+    cluster labels. Adjacency here is the direct abs-diff theta join — the oracle
     mirrors SEMANTICS, not the Spark plan's shifted-key equi-join."""
     from .functions.cells import CELL_RES_BITS, x_sql, y_sql
+    from .operators.spatial import CLUSTER_MIN_PTS, CLUSTER_RES
 
-    bits = CELL_RES_BITS[res]
+    bits = CELL_RES_BITS[CLUSTER_RES]
     return (
         "WITH RECURSIVE "
         + base_ctes()
@@ -641,7 +642,7 @@ def _spatial_cluster_oracle(res: int = 6, min_pts: int = 2) -> str:
 gcells AS (
   SELECT {x_sql('lon', bits)} AS cx, {y_sql('lat', bits)} AS cy,
          CAST(count(*) AS BIGINT) AS n_pts
-  FROM entity_points GROUP BY 1, 2 HAVING count(*) >= {min_pts}
+  FROM entity_points GROUP BY 1, 2 HAVING count(*) >= {CLUSTER_MIN_PTS}
 ),
 gdense AS (SELECT cx, cy, n_pts, cx * {1 << 29} + cy AS node FROM gcells),
 gund AS (

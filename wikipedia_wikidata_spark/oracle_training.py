@@ -9,8 +9,7 @@ bit-for-bit.
 
 from __future__ import annotations
 
-import numpy as np
-
+from .operators import bpe
 from .operators.dedup import (
     JACCARD_T,
     N_BANDS,
@@ -30,11 +29,13 @@ from .operators.similarity import (
     NEGS_PER_ANCHOR,
     POS_E6,
     TOP_K,
+    n_centroids_for,
     n_planes_for,
     plane_weights,
     query_mod_for,
 )
 from .operators.text import STOPWORDS, TOKEN_RE
+from .streaming.events import ATTRIB_WINDOW_H
 
 
 def hash60_sql(e: str) -> str:
@@ -396,7 +397,7 @@ def ann_ivf_sql(sf_dir: str = "/root/testdata/sf0.01") -> str:
     centroid_id) tie-breaks, exact re-rank within probed lists. N and the
     stride derive from the parquet footer on both sides."""
     n = embeddings_rows(sf_dir)
-    n_centroids = max(4, int(np.sqrt(n)))
+    n_centroids = n_centroids_for(n)
     stride = max(1, n // n_centroids)
     cdot = dot_sql("b.emb_d", "c.c_emb")
     cnb = f"sqrt({dot_sql('b.emb_d', 'b.emb_d')})"
@@ -1111,17 +1112,19 @@ ORDER BY score_milli DESC, doc_id ASC LIMIT {k}"""
 TRAINING_ORACLES["bm25_search"] = _bm25_sql()
 
 
-def _leakage_split_sql(eval_permille: int = 100, seed: int = 42) -> str:
+def _leakage_split_sql() -> str:
     """DuckDB twin of operators/sampling.leakage_safe_split over the
-    augmented corpus: split keyed on hash60(seed:split:fingerprint60) so
-    identical normalized content lands in one split on both engines."""
+    augmented corpus: split keyed on hash60(SAMPLE_SEED:split:fingerprint60)
+    so identical normalized content lands in one split on both engines."""
+    from .operators.sampling import EVAL_PERMILLE, SAMPLE_SEED
+
     fp = hash60_sql(
         "lower(regexp_replace(text, '[^A-Za-z0-9 ]', ' ', 'g'))"
     )
-    h = hash60_sql(f"concat('{seed}:split:', CAST({fp} AS VARCHAR))")
+    h = hash60_sql(f"concat('{SAMPLE_SEED}:split:', CAST({fp} AS VARCHAR))")
     return f"""WITH {AUG}
 SELECT doc_id, {fp} AS fingerprint60,
-       CASE WHEN {h} % 1000 < {eval_permille}
+       CASE WHEN {h} % 1000 < {EVAL_PERMILLE}
             THEN 'eval' ELSE 'train' END AS split
 FROM aug"""
 
@@ -1160,20 +1163,20 @@ TRAINING_ORACLES["dedup_window_spans"] = _dup_window_sql()
 
 # stream-stream attribution join: on a closed input the watermarked
 # streaming join equals this batch theta-join row-for-row
-TRAINING_ORACLES["events_attribution"] = """
+TRAINING_ORACLES["events_attribution"] = f"""
 SELECT v.event_id AS view_id, p.event_id AS purchase_id, v.user_id,
        CAST(epoch_us(p.ts) - epoch_us(v.ts) AS BIGINT) AS delay_us
 FROM events v JOIN events p
   ON v.user_id = p.user_id
  AND p.ts > v.ts
- AND p.ts <= v.ts + INTERVAL 6 HOUR
+ AND p.ts <= v.ts + INTERVAL {ATTRIB_WINDOW_H} HOUR
 WHERE v.event_type = 'view' AND p.event_type = 'purchase'"""
 
 
 def _classifier_score_sql() -> str:
-    """DuckDB twin of classifier_score (inline-weights shape): same
-    hash60 feature buckets, same hash-derived integer weights in
-    [-1000, 1000], same int64 sum; empty feature lists score 0."""
+    """DuckDB twin of classifier_score: same hash60 feature buckets, same
+    hash-derived integer weights in [-1000, 1000], same int64 sum; empty
+    feature lists score 0."""
     w = words_sql("text")
     bucket = f"{hash60_sql('t')} % 4096"
     weight = f"{hash60_sql(chr(39) + 'w:' + chr(39) + ' || CAST(bk AS VARCHAR)')} % 2001 - 1000"
@@ -1280,7 +1283,7 @@ WHERE v1.doc_id IS NULL OR v2.doc_id IS NULL
 
 # ----------------------------------------------------------------- BPE
 
-def _bpe_ctes(n_merges: int = 8) -> tuple[str, str]:
+def _bpe_ctes() -> tuple[str, str]:
     """Unrolled-iteration DuckDB twin of operators/bpe.py: returns
     (cte_chain, last_seq_alias). Each iteration i contributes pair counts
     p{i} over the 2-space-separated symbol strings, the argmax t{i}
@@ -1301,7 +1304,7 @@ s0 AS (
   GROUP BY word
 )"""
     ]
-    for i in range(1, n_merges + 1):
+    for i in range(1, bpe.N_MERGES + 1):
         prev = f"s{i - 1}"
         parts.append(f"""p{i} AS (
   SELECT pair, CAST(sum(freq) AS BIGINT) AS pair_count FROM (
@@ -1324,21 +1327,21 @@ s{i} AS (
                  ' ' || replace(pair, '|', '') || ' '), seq) AS seq
   FROM {prev} LEFT JOIN t{i} ON TRUE
 )""")
-    return ",\n".join(parts), f"s{n_merges}"
+    return ",\n".join(parts), f"s{bpe.N_MERGES}"
 
 
-def bpe_merges_sql(n_merges: int = 8) -> str:
-    ctes, _ = _bpe_ctes(n_merges)
+def bpe_merges_sql() -> str:
+    ctes, _ = _bpe_ctes()
     rows = "\nUNION ALL\n".join(
         f"SELECT CAST({i} AS INTEGER) AS it, split_part(pair, '|', 1) AS left_sym,"
         f" split_part(pair, '|', 2) AS right_sym, pair_count FROM t{i}"
-        for i in range(1, n_merges + 1)
+        for i in range(1, bpe.N_MERGES + 1)
     )
     return f"WITH {ctes}\n{rows}"
 
 
-def bpe_vocab_sql(n_merges: int = 8) -> str:
-    ctes, last = _bpe_ctes(n_merges)
+def bpe_vocab_sql() -> str:
+    ctes, last = _bpe_ctes()
     return f"""WITH {ctes}
 SELECT word, freq,
        CAST(len(string_split(trim(seq), '  ')) AS BIGINT) AS n_pieces,

@@ -178,7 +178,7 @@ def run_pipeline(
     def build_spatial(pts: DataFrame) -> dict:
         n_shards = spatial_shards_for(report["entity_points"]["rows"])
         t0 = time.time()
-        salt, skstats = suggest_pip_salt(pts, res=5)
+        salt, skstats = suggest_pip_salt(pts)
         derive_ms = int((time.time() - t0) * 1000)
 
         def spatial_shard(k: int) -> DataFrame:
@@ -186,7 +186,7 @@ def run_pipeline(
                 F.pmod(F.xxhash64("wikidata_id"), F.lit(n_shards)) == k
             )
             return pip_join(
-                sub, v["polygons"].select("item", "verts"), res=5, salt=salt
+                sub, v["polygons"].select("item", "verts"), salt=salt
             ).select(
                 "language", "title", "wikidata_id", F.col("item").alias("place_item")
             )

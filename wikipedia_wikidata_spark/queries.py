@@ -210,7 +210,7 @@ def q_spatial_join_pip(spark, sf_dir):
 
     ep = imp.entity_points(spark, sf_dir)
     polys = _views(spark, sf_dir)["polygons"]
-    j = pip_join(ep, polys.select("item", "verts"), res=5)
+    j = pip_join(ep, polys.select("item", "verts"))
     return j.select(
         "language", "title", "wikidata_id", F.col("item").alias("place_item")
     )

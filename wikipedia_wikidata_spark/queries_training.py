@@ -279,9 +279,12 @@ def q_contrastive_pairs(spark, sf_dir):
     cosine <= 0.5 — hash-collision negatives, the hard-negative set a
     contrastive loss learns most from. Thresholds and ranking on the
     rounded integer cosine so the boundary is bit-identical cross-engine."""
-    from .operators.similarity import contrastive_pairs
+    from .operators.similarity import contrastive_pairs, n_planes_for
+    from .oracle_training import embeddings_rows
 
-    return contrastive_pairs(_emb(spark, sf_dir))
+    return contrastive_pairs(
+        _emb(spark, sf_dir), n_planes_for(embeddings_rows(sf_dir))
+    )
 
 
 def q_spatial_cluster(spark, sf_dir):
@@ -766,8 +769,7 @@ TRAINING_QUERIES["dedup_window_spans"] = q_dedup_window_spans
 def q_classifier_score(spark, sf_dir):
     """fastText-style hashed-n-gram linear classifier inference
     (operators/text.py classifier_score, inline-weights zero-shuffle
-    shape; the broadcast weight-table shape is parity-pinned in
-    tests/test_text_curation.py)."""
+    shape)."""
     from .operators.text import classifier_score
 
     return classifier_score(_docs(spark, sf_dir))

@@ -83,31 +83,25 @@ def read_importance_tsv(path: str) -> list[list[str]]:
         return [line.rstrip("\n").split("\t") for line in f]
 
 
-def write_training_jsonl(
-    df: DataFrame,
-    out_dir: str,
-    order_cols: list[str] | None = None,
-    shards: int | None = None,
-) -> str:
-    """Sharded gzip JSONL export — the interchange format training loaders
-    consume. Every row becomes one JSON object (Spark's native JSON writer:
-    JVM Jackson, no Python in the row path); files are .json.gz shards.
+# write_training_jsonl's output files; at 100 TB pick it as
+# corpus_bytes / target_shard_bytes, exactly like any bulk write
+JSONL_SHARDS = 64
 
-    Determinism contract (same as the catalog): pass order_cols (e.g. the
-    shard_shuffle (shard, pos) pair) and each output shard is written
-    sortWithinPartitions by them, so a given (df, order_cols, shards)
-    produces byte-identical shard contents on any cluster layout. shards
-    defaults to the current partition count; at 100 TB pick it as
-    corpus_bytes / target_shard_bytes, exactly like any bulk write."""
-    if shards is not None:
-        if order_cols and "shard" in df.columns and shards > 0:
-            df = df.repartition(shards, "shard")
-        else:
-            df = df.repartition(shards)
-    if order_cols:
-        df = df.sortWithinPartitions(*order_cols)
+
+def write_training_jsonl(df: DataFrame, out_dir: str) -> str:
+    """Sharded gzip JSONL export of a shard_shuffle'd corpus — the
+    interchange format training loaders consume. Every row becomes one JSON
+    object (Spark's native JSON writer: JVM Jackson, no Python in the row
+    path); files are .json.gz shards.
+
+    Determinism contract (same as the catalog): rows are hash-partitioned
+    on `shard` into JSONL_SHARDS files and each file is written
+    sortWithinPartitions by the (shard, pos) epoch order, so a given df
+    produces byte-identical shard contents on any cluster layout."""
     (
-        df.write.mode("overwrite")
+        df.repartition(JSONL_SHARDS, "shard")
+        .sortWithinPartitions("shard", "pos")
+        .write.mode("overwrite")
         .option("compression", "gzip")
         .json(out_dir)
     )

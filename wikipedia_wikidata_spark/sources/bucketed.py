@@ -18,20 +18,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def save_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    path: str,
-    n_buckets: int = 32,
-) -> None:
-    """Write df as an external bucketed+sorted table on `key`.
+# a layout decision made ONCE per table: size it so one bucket of the
+# largest co-partitioned join fits an executor (e.g. 4096 buckets for a
+# 10-TB fact table -> ~2.5 GB/bucket)
+N_BUCKETS = 32
 
-    n_buckets is a layout decision made ONCE per table: size it so one
-    bucket of the largest co-partitioned join fits an executor (e.g. 4096
-    buckets for a 10-TB fact table -> ~2.5 GB/bucket)."""
+
+def save_bucketed(df: DataFrame, table: str, key: str, path: str) -> None:
+    """Write df as an external bucketed+sorted table on `key`, in
+    N_BUCKETS buckets."""
     (
-        df.write.bucketBy(n_buckets, key)
+        df.write.bucketBy(N_BUCKETS, key)
         .sortBy(key)
         .option("path", path)
         .mode("overwrite")

@@ -156,12 +156,14 @@ class Catalog:
 
     def read(self, spark: SparkSession, name: str, version: int | None = None) -> DataFrame:
         """Read a table snapshot; ``version`` = Iceberg VERSION AS OF (None
-        = current)."""
+        = current). A table with no committed version raises
+        FileNotFoundError."""
         if version is None:
-            cur = self._current(name)
-            if cur is None:  # pre-versioning layout: data at table root
-                return spark.read.parquet(self.path(name))
-            version = cur["version"]
+            version = self.current_version(name)
+            if version is None:
+                raise FileNotFoundError(
+                    f"catalog table {name!r} was never committed: {self.path(name)}"
+                )
         vdir = os.path.join(self.path(name), f"v{version:05d}")
         try:
             with open(os.path.join(vdir, "_manifest.json")) as f:

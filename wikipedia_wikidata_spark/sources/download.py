@@ -37,6 +37,9 @@ WIKIPEDIA_TABLES = (
 )
 
 
+TRIES = 3  # attempts per file (the reference's wget --tries=3)
+
+
 class DownloadError(RuntimeError):
     """Loud failure — empty body, md5 mismatch, or tries exhausted."""
 
@@ -53,7 +56,6 @@ def download(
     url: str,
     out_path: str,
     *,
-    tries: int = 3,
     skip_if_exists: bool = True,
     resume: bool = True,
     backoff_s: float = 0.0,
@@ -62,7 +64,7 @@ def download(
 
     - existing non-empty file -> skip (idempotent re-runs, the reference's
       ``if [ -e "$2" ]`` guard);
-    - up to ``tries`` attempts (wget ``--tries=3``);
+    - up to TRIES attempts;
     - an empty final body is DELETED and raised, never left to poison a
       later skip-if-exists run (wikipedia_download.sh:29-33);
     - a partial file from a failed attempt resumes via Range (the wget
@@ -73,7 +75,7 @@ def download(
     os.makedirs(os.path.dirname(os.path.abspath(out_path)), exist_ok=True)
     part = out_path + ".part"
     last_err: Exception | None = None
-    for attempt in range(tries):
+    for attempt in range(TRIES):
         try:
             offset = os.path.getsize(part) if resume and os.path.exists(part) else 0
             req = urllib.request.Request(url, headers={"User-Agent": USER_AGENT})
@@ -99,7 +101,7 @@ def download(
             last_err = e
             if backoff_s:
                 time.sleep(backoff_s * (attempt + 1))
-    raise DownloadError(f"download failed after {tries} tries: {url}") from last_err
+    raise DownloadError(f"download failed after {TRIES} tries: {url}") from last_err
 
 
 def download_verified(url: str, out_path: str, md5_url: str, **kw) -> str:

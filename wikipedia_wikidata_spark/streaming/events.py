@@ -258,7 +258,8 @@ def run_sliding_available_now(
     return spark.table(name)
 
 
-ATTRIB_WINDOW_S = 6 * 3600
+ATTRIB_WINDOW_H = 6  # the DuckDB oracle writes it as INTERVAL n HOUR
+ATTRIB_WINDOW_S = ATTRIB_WINDOW_H * 3600
 ATTRIB_WATERMARK = "2 hours"
 
 
