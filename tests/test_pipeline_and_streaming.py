@@ -40,7 +40,8 @@ def test_pipeline_resume(spark, tmp_path_factory):
     # the spatial stage consulted its own skew diagnostics and recorded them
     sa = r1["spatial_assign"]
     assert sa["pip_salt"] >= 1 and sa["pip_cell_skew"]["max_count"] >= 1
-    assert sa["n_shards"] >= 4
+    # one shard per SPATIAL_SHARD_ROWS points: the small corpus is one shard
+    assert sa["n_shards"] == 1
     # the tiles stage ships zoom partitioning + tile range clustering
     # (zoom leads the range keys: zoom-contiguous tasks -> ~1 file per task)
     assert r1["tiles"]["cluster_by"] == ["zoom", "tile_x", "tile_y"]
@@ -135,6 +136,122 @@ def test_pipeline_resume_runs_under_the_callers_job_group(
         "view_polygons", "view_langlinks", "view_sitelinks", "article_full",
         "wikidata_places", "scored", *AFTER_SCORED,
     ]
+
+
+def test_pipeline_resume_derives_nothing(
+    spark, full_pipeline, tmp_path_factory, monkeypatch
+):
+    """The PIP salt and the kNN ladder commit with the snapshots they are
+    derived from, so a resume after the 'scored' kill reads them from the
+    manifests: neither derivation runs, the consumers record the same
+    decisions as the full run, and they name their source snapshot."""
+    full = Catalog(full_pipeline[0]).manifest  # as committed, JSON keys
+    out = _killed_after_scored(full_pipeline, tmp_path_factory)
+
+    def derive(*args):
+        raise AssertionError("a resume re-derived a plan decision")
+
+    monkeypatch.setattr(pipeline, "suggest_pip_salt", derive)
+    monkeypatch.setattr(pipeline, "suggest_knn_ladder", derive)
+    report, jobs = spark_jobs(spark, lambda: run_pipeline(spark, SF_DIR_SMALL, out))
+    assert [k for k, m in report.items() if not m["skipped"]] == AFTER_SCORED
+    # the five rebuilt tables' writes, and no derivation or read job
+    assert len(jobs) <= 18, len(jobs)
+
+    sa, kn = Catalog(out).manifest("spatial_assign"), Catalog(out).manifest("knn")
+    for key in ("pip_salt", "pip_cell_skew"):
+        assert sa[key] == full("spatial_assign")[key] == full("scored")[key]
+    assert kn["knn_ladder"] == full("knn")["knn_ladder"] == (
+        full("wikidata_places")["knn_ladder"])
+    assert sa["pip_cell_skew"]["derive_ms"] >= 0
+    assert kn["knn_ladder"]["derive_ms"] >= 0
+    assert sa["derived_from"] == {
+        "table": "scored", "version": report["scored"]["version"]}
+    assert kn["derived_from"] == {
+        "table": "wikidata_places",
+        "version": report["wikidata_places"]["version"]}
+
+
+def test_spatial_shards_for():
+    """One shard per SPATIAL_SHARD_ROWS points, at least one (empty input),
+    at most SPATIAL_SHARDS_MAX."""
+    rows = pipeline.SPATIAL_SHARD_ROWS
+    assert pipeline.spatial_shards_for(0) == 1
+    assert pipeline.spatial_shards_for(rows) == 1
+    assert pipeline.spatial_shards_for(rows + 1) == 2
+    assert pipeline.SPATIAL_SHARDS_MAX == 256
+    assert pipeline.spatial_shards_for(rows * 10_000) == 256
+
+
+def test_pipeline_tables_open_once_under_concurrent_stages():
+    """Concurrent stages asking for one table share one open of it."""
+    import sys
+    import threading
+    import time
+
+    opened: list[str] = []
+
+    def open_table(name):
+        opened.append(name)
+        time.sleep(0.01)
+        return object()
+
+    tables = pipeline._Tables(open_table)
+    names = [f"t{i % 4}" for i in range(64)]
+    start = threading.Barrier(len(names), timeout=30)
+    got: list = []
+
+    def ask(name):
+        start.wait()
+        got.append((name, tables[name]))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=ask, args=(n,)) for n in names]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert sorted(opened) == ["t0", "t1", "t2", "t3"]
+    assert len(got) == 64 and all(df is tables[n] for n, df in got)
+
+
+def test_pipeline_spatial_shards_resume(
+    spark, full_pipeline, tmp_path_factory, monkeypatch
+):
+    """With small shards, a PIP build that fails on the second shard leaves
+    the first committed; the rerun rebuilds only the missing shards, to the
+    rows of the one-shard run."""
+    full = full_pipeline[1]
+    n_points = full["entity_points"]["rows"]
+    monkeypatch.setattr(pipeline, "SPATIAL_SHARD_ROWS", max(1, n_points // 3))
+    out = _killed_after_scored(full_pipeline, tmp_path_factory)
+    pip_join = pipeline.pip_join
+    calls: list[int] = []
+
+    def failing_pip_join(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("PIP failed on shard 1")
+        return pip_join(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "pip_join", failing_pip_join)
+    with pytest.raises(RuntimeError, match="PIP failed on shard 1"):
+        run_pipeline(spark, SF_DIR_SMALL, out)
+    monkeypatch.setattr(pipeline, "pip_join", pip_join)
+    report = run_pipeline(spark, SF_DIR_SMALL, out)
+    assert [k for k, m in report.items() if not m["skipped"]] == [
+        "spatial_assign"]
+    sa = report["spatial_assign"]
+    # shards build in order: shard 0 committed before shard 1 failed
+    assert sa["n_shards"] >= 3 and sa["resumed_shards"] == 1
+    assert sa["rows"] == full["spatial_assign"]["rows"]
+    assert sorted(Catalog(out).read(spark, "spatial_assign").collect()) == sorted(
+        Catalog(full_pipeline[0]).read(spark, "spatial_assign").collect())
 
 
 @pytest.mark.parametrize("module, builder, failed", [

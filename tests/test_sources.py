@@ -147,6 +147,31 @@ def test_catalog_lineage_keys_files_by_partition_path(spark, tmp_path_factory):
     assert sum(p["rows"] for p in m["partitions"]) == m["rows"] == 300
 
 
+def test_catalog_write_derives_from_the_written_files(spark, tmp_path_factory):
+    """``derive`` sees the files just written, partition columns included,
+    before the commit; its extras land in the manifest, and a failing
+    derivation commits nothing."""
+    import pytest
+
+    cat = Catalog(str(tmp_path_factory.mktemp("derivecat")))
+    df = spark.range(40).select("id", (F.col("id") % 3).alias("k"))
+
+    def derive(written):
+        return {"n": written.count(), "cols": sorted(written.columns),
+                "before_commit": cat.current_version("t") is None}
+
+    m = cat.write(spark, df, "t", "fp", "r", partition_by=["k"], derive=derive)
+    assert (m["n"], m["cols"], m["before_commit"]) == (40, ["id", "k"], True)
+    assert cat.manifest("t")["n"] == 40 and cat.current_version("t") == 1
+
+    def fail(written):
+        raise RuntimeError("derivation failed")
+
+    with pytest.raises(RuntimeError, match="derivation failed"):
+        cat.write(spark, df, "t", "fp2", "r2", derive=fail)
+    assert cat.current_version("t") == 1 and not cat.is_complete("t", "fp2")
+
+
 def test_catalog_read_takes_schema_from_manifest(spark, tmp_path_factory):
     """Every commit path records the footer data schema in its manifest, so
     a read types the table like parquet inference does, partition columns

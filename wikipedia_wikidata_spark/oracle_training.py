@@ -9,7 +9,7 @@ bit-for-bit.
 
 from __future__ import annotations
 
-from .operators import bpe
+from .operators import bpe, sampling, sketches
 from .operators.dedup import (
     JACCARD_T,
     N_BANDS,
@@ -43,6 +43,13 @@ def hash60_sql(e: str) -> str:
         "list_reduce(list_transform(range(15), i -> "
         f"CAST(strpos('0123456789abcdef', substr(md5({e}), i + 1, 1)) - 1 AS BIGINT)), "
         "(a, b) -> a * 16 + b)"
+    )
+
+
+def sample_hash_sql(key: str) -> str:
+    """hash60(SAMPLE_SEED:key), the keep/order hash of operators/sampling."""
+    return hash60_sql(
+        f"concat('{sampling.SAMPLE_SEED}:', CAST({key} AS VARCHAR))"
     )
 
 
@@ -585,13 +592,13 @@ GROUP BY 1, 2""",
     # engines, so the sampled row SETS match exactly, not just their sizes
     "sample_documents": f"""SELECT doc_id, CAST(length(text) AS BIGINT) AS text_len
 FROM documents
-WHERE {hash60_sql("concat('42:', CAST(doc_id AS VARCHAR))")} % 1000000 < 100000""",
+WHERE {sample_hash_sql("doc_id")} % 1000000 < 100000""",
     "sample_stratified": f"""SELECT o_orderstatus, o_orderkey
 FROM (
   SELECT o_orderstatus, o_orderkey,
          row_number() OVER (
            PARTITION BY o_orderstatus
-           ORDER BY {hash60_sql("concat('42:', CAST(o_orderkey AS VARCHAR))")} ASC,
+           ORDER BY {sample_hash_sql("o_orderkey")} ASC,
                     o_orderkey ASC
          ) AS rn
   FROM orders
@@ -661,7 +668,7 @@ JOIN (
   GROUP BY h
 ) k ON q.doc_id = k.doc_id
 WHERE q.quality_e6 >= 500000
-  AND {hash60_sql("concat('42:', CAST(q.doc_id AS VARCHAR))")} % 1000000 < 500000"""
+  AND {sample_hash_sql("q.doc_id")} % 1000000 < 500000"""
 
 def _events_enrich_sql() -> str:
     """Batch mirror of the stream-static broadcast enrichment: on a closed
@@ -907,7 +914,7 @@ TRAINING_ORACLES["text_repetition"] = _repetition_sql()
 
 def _shard_shuffle_sql(n_shards: int = 8) -> str:
     """DuckDB twin of operators.sampling.shard_shuffle over documents."""
-    h = hash60_sql("concat('42:', CAST(doc_id AS VARCHAR))")
+    h = sample_hash_sql("doc_id")
     return f"""
 WITH hashed AS (SELECT doc_id, {h} AS h FROM documents)
 SELECT doc_id,
@@ -1022,7 +1029,7 @@ GROUP BY n.doc_id"""
 def _rebalance_sources_sql(max_tokens: int = 500) -> str:
     """DuckDB twin of rebalance_sources: same integer frac_e6 and the same
     hash threshold as hash_sample's oracle."""
-    h = hash60_sql("concat('42:', CAST(doc_id AS VARCHAR))")
+    h = sample_hash_sql("doc_id")
     return f"""
 WITH d AS (
   SELECT doc_id, source,
@@ -1244,7 +1251,7 @@ TRAINING_ORACLES["distinct_tokens_kmv"] = _distinct_tokens_kmv_sql()
 
 
 def _sample_weighted_sql() -> str:
-    h = hash60_sql("'42:' || CAST(doc_id AS VARCHAR)")
+    h = hash60_sql(f"'{sketches.WEIGHTED_SEED}:' || CAST(doc_id AS VARCHAR)")
     return f"""
 SELECT doc_id, lang, source, n_chars,
        CAST({h} // greatest(n_chars, 1) AS BIGINT) AS priority

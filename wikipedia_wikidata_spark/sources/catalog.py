@@ -170,11 +170,7 @@ class Catalog:
                 schema = json.load(f).get("schema")
         except (OSError, json.JSONDecodeError):
             schema = None
-        if schema is None:  # older manifest, no data file, foreign files
-            return spark.read.parquet(vdir)
-        # the recorded data schema spares the footer-inference job; Spark
-        # still types the partition columns from the dir names
-        return spark.read.schema(StructType.fromJson(schema)).parquet(vdir)
+        return _read_dir(spark, vdir, schema)
 
     def write(
         self,
@@ -187,9 +183,18 @@ class Catalog:
         extra: dict | None = None,
         cluster_by: list[str] | None = None,
         cluster_partitions: int | None = None,
+        derive=None,
     ) -> dict:
         """Atomic snapshot commit with per-partition lineage; earlier
         snapshots remain readable (time travel).
+
+        derive: ``derive(written) -> dict`` of manifest extras computed from
+        the files just written (``written`` reads them by their footer
+        schema), before the atomic rename. A plan decision that is a pure
+        function of this snapshot thus commits with it, as Iceberg keeps
+        table statistics with the snapshot they describe, and its consumers
+        read it from the manifest instead of re-deriving it. The manifest's
+        ``wall_ms`` includes the derivation.
 
         cluster_by: Iceberg SORTED BY analog — range-partition + sort the
         rows on these columns before writing, so parquet row-group min/max
@@ -224,8 +229,13 @@ class Catalog:
         w.parquet(tmp)
         if cluster_by:
             extra = {**(extra or {}), "cluster_by": list(cluster_by)}
+
+        def derive_written(schema: dict | None) -> dict:
+            return derive(_read_dir(spark, tmp, schema))
+
         return self._commit_dir(
-            tmp, name, version, fingerprint, run_id, t0, extra=extra
+            tmp, name, version, fingerprint, run_id, t0, extra=extra,
+            derive=derive_written if derive else None,
         )
 
     def _gc_orphaned_tmp(self, root: str) -> None:
@@ -273,9 +283,11 @@ class Catalog:
         run_id: str,
         t0: float,
         extra: dict | None = None,
+        derive=None,
     ) -> dict:
         """Lineage + manifest + atomic rename + pointer swap over a fully
-        written tmp data dir (shared by write and write_sharded)."""
+        written tmp data dir (shared by write and write_sharded).
+        ``derive(schema) -> dict`` adds extras before the rename."""
         root = self.path(name)
         vdir = os.path.join(root, f"v{version:05d}")
         # lineage: per-written-file row counts (partition granularity) from
@@ -294,6 +306,15 @@ class Catalog:
                     "rows": meta.num_rows,
                 })
                 schemas.add((meta.metadata or {}).get(SPARK_SCHEMA_KEY))
+        # the data schema (partition columns excluded) Spark wrote into every
+        # footer, as a read types it, recorded only when all files agree on
+        # it, so read() needs no inference job
+        found = [_as_nullable(json.loads(r)) if r else None for r in schemas]
+        schema = None
+        if found and found[0] is not None and all(f == found[0] for f in found):
+            schema = found[0]
+        if derive:
+            extra = {**(extra or {}), **derive(schema)}
         rows = sum(p["rows"] for p in lineage)
         manifest = {
             "stage": name,
@@ -306,12 +327,8 @@ class Catalog:
             "wall_ms": int((time.time() - t0) * 1000),
             "partitions": sorted(lineage, key=lambda p: p["file"]),
         }
-        # the data schema (partition columns excluded) Spark wrote into every
-        # footer, as a read types it, recorded only when all files agree on
-        # it, so read() needs no inference job
-        found = [_as_nullable(json.loads(r)) if r else None for r in schemas]
-        if found and found[0] is not None and all(f == found[0] for f in found):
-            manifest["schema"] = found[0]
+        if schema is not None:
+            manifest["schema"] = schema
         if extra:
             manifest.update(extra)
         with open(os.path.join(tmp, "_manifest.json"), "w") as f:
@@ -650,6 +667,16 @@ class Catalog:
             .filter(F.col("change").isNotNull())
             .select("change", *key_cols, *out_vals)
         )
+
+
+def _read_dir(spark: SparkSession, d: str, schema: dict | None) -> DataFrame:
+    """The parquet files under ``d``, typed by ``schema`` when there is one.
+    The recorded data schema spares the footer-inference job; Spark still
+    types the partition columns from the dir names. Without one (older
+    manifest, no data file, foreign files) Spark infers it."""
+    if schema is None:
+        return spark.read.parquet(d)
+    return spark.read.schema(StructType.fromJson(schema)).parquet(d)
 
 
 def tmpdir(prefix: str) -> str:
