@@ -149,9 +149,8 @@ def test_registry_window_contents():
 def test_pagerank_plan_is_cartesian_free_and_truncated(spark):
     from tests.conftest import SF_DIR_SMALL
     from wikipedia_wikidata_spark.operators.extract import extract_views_shared
-    from wikipedia_wikidata_spark.config import LANGUAGES
 
-    v = extract_views_shared(spark, SF_DIR_SMALL, LANGUAGES)
+    v = extract_views_shared(spark, SF_DIR_SMALL)
     pr = pagerank(link_edges(v))
     p = pr._sc._jvm.PythonSQLUtils.explainString(
         pr._jdf.queryExecution(), "formatted"
@@ -313,7 +312,6 @@ def test_hits_l1_mass_conserved(spark):
     language (floor loss < n_nodes)."""
     from tests.conftest import SF_DIR
     from wikipedia_wikidata_spark.operators.extract import extract_views_shared
-    from wikipedia_wikidata_spark.config import LANGUAGES
     from wikipedia_wikidata_spark.operators.graph import (
         HITS_SCALE,
         hits,
@@ -321,7 +319,7 @@ def test_hits_l1_mass_conserved(spark):
     )
     from pyspark.sql import functions as F
 
-    v = extract_views_shared(spark, SF_DIR, LANGUAGES)
+    v = extract_views_shared(spark, SF_DIR)
     h = hits(link_edges(v))
     stats = (
         h.groupBy("language")

@@ -55,7 +55,6 @@ KEPT = {
     ("oracle_training.py", "ann_ivf_sql", "sf_dir"): "oracle corpus",
     # the language configuration of a build
     ("plans/pipeline.py", "run_pipeline", "languages"): "language configuration",
-    ("operators/extract.py", "extract_views", "languages"): "language configuration",
     # set through run_attribution_available_now(**kwargs)
     ("streaming/events.py", "stream_stream_attribution", "max_files_per_trigger"):
         "set through **kwargs",

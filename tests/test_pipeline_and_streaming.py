@@ -172,6 +172,40 @@ def test_pipeline_resume_derives_nothing(
         "version": report["wikidata_places"]["version"]}
 
 
+def test_pipeline_report_is_the_committed_manifest(full_pipeline):
+    """A fresh commit reports its manifest as written: the same dict, key
+    types included, that a skipped stage reads back from JSON."""
+    root, report = full_pipeline
+    for name in ("knn", "wikidata_places", "scored"):
+        fresh = {k: v for k, v in report[name].items() if k != "skipped"}
+        assert fresh == Catalog(root).manifest(name), name
+    assert all(isinstance(b, str) for b in report["knn"]["knn_ladder"]["levels"])
+
+
+def test_pipeline_and_session_build_one_dag(spark, full_pipeline):
+    """The committed article_full, wikidata_places and scored equal the
+    session's lazy article_full and wikidata_places and its scored
+    checkpoint, row for row: one DAG definition, two evaluations."""
+    import hashlib
+
+    from wikipedia_wikidata_spark.plans.importance import build_scored
+
+    def digest(df):
+        rows = sorted(map(tuple, df.collect()))
+        return len(rows), hashlib.sha1(repr(rows).encode()).hexdigest()
+
+    scored, v = build_scored(spark, SF_DIR_SMALL)
+    session = {"article_full": v["article_full"],
+               "wikidata_places": v["wikidata_places"], "scored": scored}
+    cat = Catalog(full_pipeline[0])
+    for name, df in session.items():
+        committed = cat.read(spark, name)
+        assert committed.columns == df.columns, name
+        n, d = digest(df)
+        assert digest(committed) == (n, d), name
+        assert n == full_pipeline[1][name]["rows"] > 0, name
+
+
 def test_spatial_shards_for():
     """One shard per SPATIAL_SHARD_ROWS points, at least one (empty input),
     at most SPATIAL_SHARDS_MAX."""
@@ -196,7 +230,7 @@ def test_pipeline_tables_open_once_under_concurrent_stages():
         time.sleep(0.01)
         return object()
 
-    tables = pipeline._Tables(open_table)
+    tables = pipeline.imp.Graph(None, None, None, open_table)
     names = [f"t{i % 4}" for i in range(64)]
     start = threading.Barrier(len(names), timeout=30)
     got: list = []
@@ -230,7 +264,7 @@ def test_pipeline_spatial_shards_resume(
     n_points = full["entity_points"]["rows"]
     monkeypatch.setattr(pipeline, "SPATIAL_SHARD_ROWS", max(1, n_points // 3))
     out = _killed_after_scored(full_pipeline, tmp_path_factory)
-    pip_join = pipeline.pip_join
+    pip_join = pipeline.imp.pip_join
     calls: list[int] = []
 
     def failing_pip_join(*args, **kwargs):
@@ -239,10 +273,10 @@ def test_pipeline_spatial_shards_resume(
             raise RuntimeError("PIP failed on shard 1")
         return pip_join(*args, **kwargs)
 
-    monkeypatch.setattr(pipeline, "pip_join", failing_pip_join)
+    monkeypatch.setattr(pipeline.imp, "pip_join", failing_pip_join)
     with pytest.raises(RuntimeError, match="PIP failed on shard 1"):
         run_pipeline(spark, SF_DIR_SMALL, out)
-    monkeypatch.setattr(pipeline, "pip_join", pip_join)
+    monkeypatch.setattr(pipeline.imp, "pip_join", pip_join)
     report = run_pipeline(spark, SF_DIR_SMALL, out)
     assert [k for k, m in report.items() if not m["skipped"]] == [
         "spatial_assign"]

@@ -36,17 +36,16 @@ def test_spans_checkpoint_partition_pruning(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("pruning"))
     run_pipeline(spark, SF_DIR_SMALL, out)
     sp = Catalog(out).read(spark, "spans_flat")
-    q = sp.filter(F.col("kind") == "page").select("doc_id", "text")
+    q = sp.filter(F.col("kind") == "page").select("language", "text")
     p = _plan(q)
     assert "PartitionFilters" in p and "kind" in p.split("PartitionFilters", 1)[1][:200], p
 
 
 def test_importance_uses_broadcast_joins(spark):
     """Small dims (levels, 1-row max) must broadcast, not shuffle."""
-    from wikipedia_wikidata_spark.plans.importance import build_scored_lazy
+    from wikipedia_wikidata_spark.plans.importance import session_graph
 
-    sc, _v = build_scored_lazy(spark, SF_DIR_SMALL)
-    p = _plan(sc)
+    p = _plan(session_graph(spark, SF_DIR_SMALL).build("scored"))
     assert "BroadcastHashJoin" in p, p
     # the scalar-max denominator must NOT be a driver collect: it appears as a
     # broadcast nested-loop (cross) join in-plan
@@ -95,9 +94,9 @@ def test_scored_session_checkpoint_is_one_catalog_table_per_key(spark):
 
 
 def test_whole_stage_codegen_in_extraction(spark):
-    from wikipedia_wikidata_spark.operators.extract import extract_views, load_documents
+    from wikipedia_wikidata_spark.operators.extract import extract_views_shared
 
-    v = extract_views(load_documents(spark, SF_DIR_SMALL))
+    v = extract_views_shared(spark, SF_DIR_SMALL)
     p = _plan(v["page"])
     assert "codegen id" in p, p  # '* Project [codegen id : 1]' spans the stage
 
@@ -110,13 +109,11 @@ def test_scale_paths_have_no_cartesian_plans(spark):
     from wikipedia_wikidata_spark.operators.dedup import (
         augment_docs, minhash_candidates,
     )
-    from wikipedia_wikidata_spark.operators.extract import (
-        extract_views, load_documents,
-    )
+    from wikipedia_wikidata_spark.operators.extract import extract_views_shared
     from wikipedia_wikidata_spark.operators.similarity import ann_lsh_topk
     from wikipedia_wikidata_spark.operators.spatial import knn_nearest, pip_join
 
-    v = extract_views(load_documents(spark, SF_DIR_SMALL))
+    v = extract_views_shared(spark, SF_DIR_SMALL)
     # lineage-free point set (geo view only): the importance lineage would
     # legitimately contribute its 1-row scalar-max broadcast cross join,
     # which is not what this test inspects

@@ -8,7 +8,9 @@ from pyspark.sql import functions as F
 
 from wikipedia_wikidata_spark.config import CELL_RES_BITS
 from wikipedia_wikidata_spark.functions.cells import cell_id, cell_xy, morton
-from wikipedia_wikidata_spark.operators.extract import load_documents, extract_views
+from wikipedia_wikidata_spark.operators.extract import (
+    extract_views_shared, load_documents,
+)
 from wikipedia_wikidata_spark.operators.spatial import knn_nearest, pip_join
 from wikipedia_wikidata_spark.plans.importance import build_scored, entity_points
 
@@ -29,7 +31,7 @@ def _ray_cast_np(vy, vx, py, px):
 
 def test_pip_matches_numpy_brute_force(spark):
     ep = entity_points(spark, SF_DIR_SMALL).select("language", "title", "lat", "lon")
-    polys = extract_views(load_documents(spark, SF_DIR_SMALL))["polygons"]
+    polys = extract_views_shared(spark, SF_DIR_SMALL)["polygons"]
     got = {
         (r.language, r.title, r.item)
         for r in pip_join(ep, polys.select("item", "verts"))
@@ -54,7 +56,7 @@ def test_pip_salting_preserves_results(spark, monkeypatch):
     import wikipedia_wikidata_spark.config as cfg
 
     ep = entity_points(spark, SF_DIR_SMALL).select("language", "title", "lat", "lon")
-    polys = extract_views(load_documents(spark, SF_DIR_SMALL))["polygons"]
+    polys = extract_views_shared(spark, SF_DIR_SMALL)["polygons"]
     base = {
         tuple(r) for r in pip_join(ep, polys.select("item", "verts"))
         .select("language", "title", "item").collect()
@@ -66,6 +68,57 @@ def test_pip_salting_preserves_results(spark, monkeypatch):
         ).select("language", "title", "item").collect()
     }
     assert base == salted and len(base) > 0
+
+
+def test_pip_degenerate_rings_contain_nothing(spark):
+    """Rings of 0, 1 and 2 vertices contain no point, in pip_join and in the
+    oracle's bbox join plus duckdb_ray_cast_sql alike, even for points on
+    the ring; a triangle over the same points is the control."""
+    import duckdb
+
+    from wikipedia_wikidata_spark.oracle import base_ctes
+    from wikipedia_wikidata_spark.operators.spatial import duckdb_ray_cast_sql
+
+    rings = {
+        "empty": [],
+        "one": [(10.0, 10.0)],
+        "two": [(9.0, 9.0), (11.0, 11.0)],
+        "tri": [(9.0, 9.0), (11.0, 9.0), (10.0, 11.0)],
+    }
+    pts = [("on_vertex", 10.0, 10.0), ("inside", 10.0, 9.5), ("off", 12.0, 12.0)]
+    tri_y, tri_x = zip(*rings["tri"])
+    want = {
+        (t, "tri") for t, lat, lon in pts if _ray_cast_np(tri_y, tri_x, lat, lon)
+    }
+    assert ("inside", "tri") in want
+
+    polys = spark.createDataFrame(
+        list(rings.items()), "item string, verts array<struct<lat:double,lon:double>>"
+    )
+    points = spark.createDataFrame(pts, "title string, lat double, lon double")
+    got = {tuple(r) for r in pip_join(points, polys).select("title", "item").collect()}
+    assert got == want
+
+    def ring_sql(verts):
+        items = ", ".join(f"{{'lat': {a}, 'lon': {b}}}" for a, b in verts)
+        return f"CAST([{items}] AS STRUCT(lat DOUBLE, lon DOUBLE)[])"
+
+    ctes = base_ctes()
+    start = ctes.index("polygons_bbox AS (")
+    bbox_cte = ctes[start:ctes.index("\n)", start) + 2]
+    ray = duckdb_ray_cast_sql("g.verts", "p.lat", "p.lon")
+    sql = f"""WITH polygons AS (
+  SELECT * FROM (VALUES {", ".join(f"('{k}', {ring_sql(v)})" for k, v in rings.items())})
+    t(item, verts)
+), {bbox_cte}, points AS (
+  SELECT * FROM (VALUES {", ".join(f"('{t}', {lat}, {lon})" for t, lat, lon in pts)})
+    t(title, lat, lon)
+)
+SELECT p.title, g.item FROM points p JOIN polygons_bbox g
+  ON p.lat BETWEEN g.min_lat AND g.max_lat
+ AND p.lon BETWEEN g.min_lon AND g.max_lon
+WHERE {ray}"""
+    assert set(duckdb.connect().execute(sql).fetchall()) == want
 
 
 def _knn_fixture(spark):

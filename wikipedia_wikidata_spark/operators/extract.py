@@ -12,13 +12,10 @@ Each extractor cites the reference filter it models.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import LANGUAGES, SEP
-from ..sources.catalog import session_table
+from ..config import SEP
 
 
 def round5_col(col: str) -> Column:
@@ -46,64 +43,40 @@ def load_place_type_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def spans_flat(docs: DataFrame) -> DataFrame:
-    """One row per span: (doc_id, language, kind, text, media_ref, offset, f).
+    """The span rows the relational views read: one row per non-prose span,
+    (language, kind, text).
 
-    ``language`` is the doc_id namespace prefix (per-language table families of
-    steps/wikipedia_import.sh:22-88 become one column); ``f`` is the
-    \\x1f-split payload field array.
+    ``language`` is the doc_id namespace prefix (per-language table families
+    of steps/wikipedia_import.sh:22-88 become one column). Prose spans (a
+    third of the span text) and the doc_id/media_ref/offset columns are never
+    read by an extractor (text analysis and multimodal ops run on their own
+    tables), so they are not carried. This is the table the importance DAG
+    checkpoints partitioned by kind (plans/importance.py): ten-plus views
+    each re-scanning and exploding the nested payload would dominate the
+    lineage, since kind predicates cannot be pushed into a parquet
+    array<struct>, while a kind-partitioned checkpoint turns every extractor
+    into a partition-pruned columnar scan (the reference's "any work done
+    here cuts down time/space" pushdown, steps/wikipedia_sql2csv.sh:36-40,
+    done once instead of per filter program).
     """
     s = docs.select("doc_id", F.explode("spans").alias("s"))
-    return s.select(
-        "doc_id",
-        F.split_part("doc_id", F.lit(":"), F.lit(1)).alias("language"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-        F.split("s.text", SEP, 3).alias("f"),
-    )
-
-
-# Session-scoped kind-partitioned materialization of spans_flat. Ten-plus
-# views each re-scanning + exploding the full nested spans payload is the
-# dominant cost of the lineage-only path (kind predicates cannot be pushed
-# into a parquet array<struct>); writing the exploded table ONCE partitioned
-# by kind turns every extractor into a partition-pruned columnar scan — the
-# in-session analog of the staged pipeline's spans_flat checkpoint
-# (plans/pipeline.py) and of the reference's "any work done here cuts down
-# time/space in the database" pushdown (steps/wikipedia_sql2csv.sh:36-40).
-# It is a session_table keyed by (applicationId, corpus dir), so a fresh
-# SparkContext never reads an earlier context's checkpoint: perfbench opens
-# one per timed pass, and each pass must pay the write inside its own timed
-# region.
-def shared_spans_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """spans_flat backed by a once-per-session kind-partitioned checkpoint."""
-    from ..sources.synth import ensure_spans_data
-
-    d = ensure_spans_data(sf_dir)
-
-    def build() -> DataFrame:
-        docs = spark.read.parquet(f"{d}/documents.parquet")
-        return (
-            spans_flat(docs)
-            # the relational views consume only (language, kind, text):
-            # prose spans (half the corpus bytes) and the doc_id/media_ref/
-            # offset columns are never read by an extractor — text analysis
-            # and multimodal ops run on their own tables. Writing just the
-            # three live columns roughly halves checkpoint IO again.
-            .filter(F.col("kind") != "prose")
-            .select("language", "kind", "text")
-            # cluster by (kind, small bucket) before the partitioned write:
-            # otherwise every scan task writes a file per kind (~100s of
-            # tiny files) and the serial commit dominates the checkpoint
-            .repartition(
-                24, F.col("kind"), F.pmod(F.xxhash64("text"), F.lit(8))
-            )
+    return (
+        s.select(
+            F.split_part("doc_id", F.lit(":"), F.lit(1)).alias("language"),
+            F.col("s.kind").alias("kind"),
+            F.col("s.text").alias("text"),
         )
-
-    sp = session_table(
-        spark, "spans_flat", os.path.abspath(d), build, partition_by=["kind"]
+        .filter(F.col("kind") != "prose")
+        # cluster by (kind, small bucket) before the partitioned write:
+        # otherwise every scan task writes a file per kind (~100s of tiny
+        # files) and the serial commit dominates the checkpoint
+        .repartition(24, F.col("kind"), F.pmod(F.xxhash64("text"), F.lit(8)))
     )
+
+
+def span_fields(sp: DataFrame) -> DataFrame:
+    """spans_flat plus ``f``, the \\x1f-split payload field array the
+    extractors read."""
     return sp.withColumn("f", F.split("text", SEP, 3))
 
 
@@ -165,10 +138,9 @@ def pagelink_view(sp: DataFrame) -> DataFrame:
     return v.filter(F.col("ns") == "0").drop("ns")
 
 
-def langlinks_view(sp: DataFrame, languages: list[str] | None = None) -> DataFrame:
+def langlinks_view(sp: DataFrame, languages: list[str]) -> DataFrame:
     """P5: bin/filter_langlinks.py:26-40 — language semi-filter, ' '->'_',
-    split-first-2-commas (F8) modeled by the limit-3 split in spans_flat."""
-    languages = languages or LANGUAGES
+    split-first-2-commas (F8) modeled by the limit-3 split in span_fields."""
     v = sp.filter(F.col("kind") == "langlink").select(
         "language",
         _f(1).try_cast("int").alias("ll_from"),
@@ -216,10 +188,9 @@ def geo_tags_view(sp: DataFrame) -> DataFrame:
     )
 
 
-def sitelinks_view(sp: DataFrame, languages: list[str] | None = None) -> DataFrame:
+def sitelinks_view(sp: DataFrame, languages: list[str]) -> DataFrame:
     """P6+F3: bin/filter_wikidata_wb_items_per_site.py:36-44 — strips ALL
     'wiki' substrings from site id (reference quirk), language semi-filter."""
-    languages = languages or LANGUAGES
     v = sp.filter(F.col("kind") == "sitelink").select(
         _f(1).try_cast("int").alias("ips_item_id"),
         _f(2).alias("ips_site_id"),
@@ -261,37 +232,14 @@ def polygons_view(sp: DataFrame) -> DataFrame:
     return v.select("item", "n_vertices", vert.alias("verts"))
 
 
-def extract_views(
-    docs: DataFrame, languages: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """All relational views over one lazy span explode (for a shared
-    scan+explode use extract_views_shared or plans/pipeline.py)."""
-    return views_from_flat(spans_flat(docs), languages)
-
-
-def extract_views_shared(
-    spark: SparkSession, sf_dir: str, languages: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """All relational views over the session-shared spans_flat checkpoint —
+def extract_views_shared(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """All relational views over the session's spans_flat checkpoint (the
+    importance DAG's session evaluation, plans/importance.session_graph):
     one corpus scan+explode per session instead of one per view subtree."""
-    return views_from_flat(shared_spans_flat(spark, sf_dir), languages)
+    from ..plans.importance import VIEWS, session_graph
 
-
-def views_from_flat(
-    sp: DataFrame, languages: list[str] | None = None
-) -> dict[str, DataFrame]:
-    return {
-        "page": page_view(sp),
-        "linktarget": linktarget_view(sp),
-        "redirect": redirect_view(sp),
-        "pagelink": pagelink_view(sp),
-        "langlinks": langlinks_view(sp, languages),
-        "wd_page": wd_page_view(sp),
-        "geo_tags": geo_tags_view(sp),
-        "sitelinks": sitelinks_view(sp, languages),
-        "places": places_view(sp),
-        "polygons": polygons_view(sp),
-    }
+    g = session_graph(spark, sf_dir)
+    return {name: g[name] for name in VIEWS}
 
 
 def reassemble_spans(docs: DataFrame) -> DataFrame:

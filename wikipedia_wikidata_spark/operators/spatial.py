@@ -105,6 +105,12 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int = PIP_RES,
     shuffle keys instead of pinning a single task; salt=1 is the plain
     join. (AQE skew-join splits oversized *partitions*; salting splits
     oversized *keys* — both are on.) Results are identical with/without.
+
+    Rings of fewer than three vertices contain no point, even one on the
+    ring: an empty ring's bbox is NULL, so it covers no cell; a one-vertex
+    ring's only edge and a two-vertex ring's two coincident edges give the
+    ray cast 0 or 2 crossings. The DuckDB oracle's bbox join and
+    duckdb_ray_cast_sql return the same nothing.
     """
     from ..config import CELL_RES_BITS, MEGA_CELL_THRESHOLD
 

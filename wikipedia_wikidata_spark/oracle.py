@@ -525,7 +525,7 @@ def _checkpoint_lineage_oracle() -> str:
     zooms = ", ".join(str(int(z)) for z in TILE_ZOOMS)
     tx, ty = tile_sql("z.zoom", "p.lat", "p.lon")
     counts = {
-        "spans_flat": "SELECT count(*) FROM spans",
+        "spans_flat": "SELECT count(*) FROM spans WHERE kind <> 'prose'",
         "view_page": "SELECT count(*) FROM page",
         "view_linktarget": "SELECT count(*) FROM linktarget",
         "view_redirect": "SELECT count(*) FROM redirect",

@@ -12,6 +12,10 @@ Stage DAG (``a | b`` = a and b run concurrently, on their own threads):
   -> ( importance
      | entity_points -> ( spatial_assign (PIP) | knn | tiles ) )
 
+The stages up to ``scored`` are the nodes of the importance DAG
+(plans/importance.NODES), committed in its order and built by the same
+definitions the in-session checkpoints and the queries use.
+
 Past ``scored`` the stages depend on each other only through committed
 snapshots, so independent ones run side by side: Spark runs jobs submitted
 from separate threads at the same time, and a resume's cold-JVM driver work
@@ -26,35 +30,28 @@ from the files just written (``Catalog.write(derive=...)``). Their consumers
 read the decision from the manifest, so a resume after a kill past those
 snapshots derives nothing. A run opens a committed table only when a stage
 it rebuilds reads it.
-
-spans_flat is written partitioned by span kind: every downstream extractor
-then prunes to its kind's partition at the parquet-scan level (the reference's
-"any work done here cuts down time/space" pushdown, steps/wikipedia_sql2csv.sh:36-40,
-done once instead of per filter program).
 """
 
 from __future__ import annotations
 
-import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from ..config import LANGUAGES, spans_dir_for
-from ..operators import extract as ex
-from ..operators.spatial import (
-    knn_nearest, pip_join, suggest_knn_ladder, suggest_pip_salt,
-)
+from ..operators.spatial import knn_nearest, suggest_knn_ladder, suggest_pip_salt
 from ..operators.tiles import tile_importance
 from ..sources.catalog import Catalog
 from . import importance as imp
 
-# v8: the PIP salt and kNN ladder commit with scored / wikidata_places
-PIPELINE_VERSION = 8
+# v9: spans_flat is the importance DAG's non-prose (language, kind, text)
+# checkpoint, the same table the session builds
+PIPELINE_VERSION = 9
 
 # Shard sizing for the shard-granular resumable spatial stage: resume
 # granularity vs K× replay of the (small) polygon build side. Derived from
@@ -94,22 +91,6 @@ def _knn_ladder_of(places: DataFrame) -> dict:
     t0 = time.time()
     _, stats = suggest_knn_ladder(imp.geo_places(places))
     return {"knn_ladder": stats | {"derive_ms": int((time.time() - t0) * 1000)}}
-
-
-class _Tables(dict):
-    """name -> DataFrame, each opened by ``open_table`` on first use, once
-    even when concurrent stages ask together."""
-
-    def __init__(self, open_table):
-        super().__init__()
-        self._open = open_table
-        self._lock = threading.Lock()
-
-    def __missing__(self, name: str) -> DataFrame:
-        with self._lock:
-            if name not in self:
-                self[name] = self._open(name)
-            return dict.__getitem__(self, name)
 
 
 def _fan_out(spark: SparkSession, *branches) -> None:
@@ -162,46 +143,18 @@ def run_pipeline(
     # the corpus, the place-type levels and every committed table are read
     # only by the stages built from them, so a resume past them submits no
     # read job and opens no table it does not rebuild from
-    t = _Tables(lambda name: cat.read(spark, name))
-    v = _Tables(lambda name: t[f"view_{name}"])
-    stage("spans_flat", lambda: ex.spans_flat(
-        ex.load_documents(spark, sf_dir)).drop("f"), ["kind"])
-
-    def sp() -> DataFrame:
-        return t["spans_flat"].withColumn("f", F.split("text", "\x1f", 3))
-
-    view_builders = {
-        "page": ex.page_view, "linktarget": ex.linktarget_view,
-        "redirect": ex.redirect_view, "pagelink": ex.pagelink_view,
-        "wd_page": ex.wd_page_view, "geo_tags": ex.geo_tags_view,
-        "places": ex.places_view, "polygons": ex.polygons_view,
-    }
-    for name, fn in view_builders.items():
-        stage(f"view_{name}", lambda fn=fn: fn(sp()))
-    stage("view_langlinks", lambda: ex.langlinks_view(sp(), languages))
-    stage("view_sitelinks", lambda: ex.sitelinks_view(sp(), languages))
-
-    def build_af():
-        plc = imp.pagelink_counts(v)
-        return imp.article_full(plc, imp.othercounts(v, plc))
-
-    stage("article_full", build_af)
-
-    # wikidata_places commits FIRST and 'scored' reads the snapshot: on a
-    # cold run the places subtree used to be evaluated twice (once inside
-    # scored, once for its own stage), and resume could pair a 'scored'
-    # built from a different places computation than the committed one
-    def build_places():
-        levels = ex.load_place_type_levels(spark, sf_dir)
-        return imp.wikidata_places(v, levels, imp.geo_earth_wikidata(v))
-
-    stage("wikidata_places", build_places, derive=_knn_ladder_of)
-
-    def build_scored():
-        wp = imp.wikidata_pages(t["wikidata_places"], v["sitelinks"], languages)
-        return imp.scored_articles(t["article_full"], wp)
-
-    stage("scored", build_scored, derive=_pip_salt_of)
+    stages = {n.name: n.stage for n in imp.NODES.values()}
+    g = imp.Graph(
+        spark, sf_dir, languages,
+        lambda name: cat.read(spark, stages.get(name, name)),
+    )
+    derive = {"wikidata_places": _knn_ladder_of, "scored": _pip_salt_of}
+    # wikidata_places commits before scored, which reads the snapshot: a
+    # resume never pairs a scored with a places computation other than the
+    # committed one
+    for node in imp.NODES.values():
+        stage(node.stage, partial(node.build, g), node.partition_by,
+              derive=derive.get(node.name))
 
     # shard-granular resumable stage (north_star: a killed job resumes
     # without recomputing completed cells): points are split by a stable
@@ -211,7 +164,7 @@ def run_pipeline(
     # derived when 'scored' committed, and the manifest names that snapshot
     # (the kNN ladder likewise, from 'wikidata_places').
     def build_spatial() -> dict:
-        pts = t["entity_points"]
+        pts = g["entity_points"]
         n_shards = spatial_shards_for(report["entity_points"]["rows"])
         src = report["scored"]
         salt = src["pip_salt"]
@@ -220,11 +173,7 @@ def run_pipeline(
             sub = pts.filter(
                 F.pmod(F.xxhash64("wikidata_id"), F.lit(n_shards)) == k
             )
-            return pip_join(
-                sub, v["polygons"].select("item", "verts"), salt=salt
-            ).select(
-                "language", "title", "wikidata_id", F.col("item").alias("place_item")
-            )
+            return imp.point_places(sub, g["polygons"], salt=salt)
 
         return cat.write_sharded(
             spark, spatial_shard, "spatial_assign", fp, run_id, n_shards,
@@ -240,7 +189,7 @@ def run_pipeline(
         stage(
             "knn",
             lambda: knn_nearest(
-                t["entity_points"], imp.geo_places(t["wikidata_places"]),
+                g["entity_points"], imp.geo_places(g["wikidata_places"]),
                 levels=src["knn_ladder"]["ladder"],
             ),
             extra={
@@ -251,7 +200,7 @@ def run_pipeline(
         )
 
     def spatial() -> None:
-        stage("entity_points", lambda: imp.geo_points(t["scored"]))
+        stage("entity_points", lambda: imp.geo_points(g["scored"]))
         # zoom dirs for partition pruning + tile range clustering inside each
         # dir: a viewport query (tile range at one zoom) prunes to one
         # partition dir AND skips files whose footer tile range misses the
@@ -264,7 +213,7 @@ def run_pipeline(
             lambda: ensure("spatial_assign", build_spatial),
             knn,
             lambda: stage(
-                "tiles", lambda: tile_importance(t["entity_points"]), ["zoom"],
+                "tiles", lambda: tile_importance(g["entity_points"]), ["zoom"],
                 cluster_by=["zoom", "tile_x", "tile_y"],
             ),
         )
@@ -272,7 +221,7 @@ def run_pipeline(
     _fan_out(
         spark,
         lambda: stage(
-            "importance", lambda: imp.wikimedia_importance(t["scored"], v),
+            "importance", lambda: imp.wikimedia_importance(g["scored"], g),
             ["language"],
         ),
         spatial,

@@ -15,17 +15,15 @@ from pyspark.sql import functions as F
 
 from . import oracle
 from .config import LANGUAGES
-from .operators.extract import (
-    extract_views_shared,
-    load_documents,
-    load_place_type_levels,
-)
+from .operators.extract import load_documents
 from .plans import importance as imp
 from .sources.catalog import tmpdir
 
 
-def _views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return extract_views_shared(spark, sf_dir, LANGUAGES)
+def _views(spark: SparkSession, sf_dir: str) -> imp.Graph:
+    """The session's importance DAG: the views, article_full and
+    wikidata_places by name."""
+    return imp.session_graph(spark, sf_dir)
 
 
 # ---------------------------------------------------------------- extraction
@@ -70,9 +68,7 @@ def q_othercounts(spark, sf_dir):
 
 
 def q_article_full(spark, sf_dir):
-    v = _views(spark, sf_dir)
-    plc = imp.pagelink_counts(v)
-    return imp.article_full(plc, imp.othercounts(v, plc))
+    return _views(spark, sf_dir)["article_full"]
 
 
 def q_geo_earth_wikidata(spark, sf_dir):
@@ -80,34 +76,16 @@ def q_geo_earth_wikidata(spark, sf_dir):
 
 
 def q_wikidata_places(spark, sf_dir):
-    v = _views(spark, sf_dir)
-    return imp.wikidata_places(
-        v, load_place_type_levels(spark, sf_dir), imp.geo_earth_wikidata(v)
-    )
+    return _views(spark, sf_dir)["wikidata_places"]
 
 
 def q_wikidata_pages(spark, sf_dir):
     v = _views(spark, sf_dir)
-    places = imp.wikidata_places(
-        v, load_place_type_levels(spark, sf_dir), imp.geo_earth_wikidata(v)
-    )
-    return imp.wikidata_pages(places, v["sitelinks"], LANGUAGES)
+    return imp.wikidata_pages(v["wikidata_places"], v["sitelinks"], LANGUAGES)
 
 
 def q_redirect_full(spark, sf_dir):
-    """J2/U1: per-language redirect x page join (steps/wikipedia_process.sh:19-35)."""
-    v = _views(spark, sf_dir)
-    rd = v["redirect"]
-    pg = v["page"].select(
-        F.col("language").alias("pg_language"), "page_id", "page_title"
-    )
-    return rd.join(
-        pg, (rd.language == pg.pg_language) & (rd.rd_from == pg.page_id)
-    ).select(
-        rd.language.alias("language"),
-        pg.page_title.alias("from_title"),
-        rd.rd_title.alias("to_title"),
-    )
+    return imp.redirect_full(_views(spark, sf_dir))
 
 
 def _e6(col, alias):
@@ -206,13 +184,8 @@ def q_cell_encode(spark, sf_dir):
 
 
 def q_spatial_join_pip(spark, sf_dir):
-    from .operators.spatial import pip_join
-
-    ep = imp.entity_points(spark, sf_dir)
-    polys = _views(spark, sf_dir)["polygons"]
-    j = pip_join(ep, polys.select("item", "verts"))
-    return j.select(
-        "language", "title", "wikidata_id", F.col("item").alias("place_item")
+    return imp.point_places(
+        imp.entity_points(spark, sf_dir), _views(spark, sf_dir)["polygons"]
     )
 
 

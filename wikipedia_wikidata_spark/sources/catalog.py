@@ -331,21 +331,24 @@ class Catalog:
             manifest["schema"] = schema
         if extra:
             manifest.update(extra)
+        text = json.dumps(manifest, indent=1)
         with open(os.path.join(tmp, "_manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=1)
+            f.write(text)
         if os.path.exists(vdir):
             shutil.rmtree(vdir)
         os.rename(tmp, vdir)
         # snapshot pointer + latest-manifest swap (os.replace = atomic)
         for fname, payload in (
-            ("_current.json", {"version": version}),
-            ("_manifest.json", manifest),
+            ("_current.json", json.dumps({"version": version}, indent=1)),
+            ("_manifest.json", text),
         ):
             ptmp = os.path.join(root, fname + ".tmp")
             with open(ptmp, "w") as f:
-                json.dump(payload, f, indent=1)
+                f.write(payload)
             os.replace(ptmp, os.path.join(root, fname))
-        return manifest
+        # the manifest as written, so a fresh commit and a skipped stage's
+        # manifest read back from JSON have one shape (string dict keys)
+        return json.loads(text)
 
     def write_sharded(
         self,
